@@ -52,6 +52,9 @@ class Hyperspace:
         # Epoch bumps on any lifecycle op so stale rewrites never serve.
         self._apply_cache: dict = {}
         self._cache_epoch = 0
+        # Index name -> (content fingerprint, frames built from that
+        # immutable index version): see indexes.base.version_slot.
+        self._version_cache: dict = {}
 
     # ------------------------------------------------------------------
     # plumbing
@@ -68,6 +71,7 @@ class Hyperspace:
     def _invalidate_cache(self) -> None:
         self._entry_cache = None
         self._apply_cache.clear()
+        self._version_cache.clear()
         self._cache_epoch += 1
 
     def _all_latest_entries(self, conf: HyperspaceConf) -> list[IndexLogEntry]:
@@ -407,7 +411,7 @@ class Hyperspace:
             }
             if not any(cands.values()):
                 return df, []
-            ctx = RuleContext(self.spark, conf, cands, reasons)
+            ctx = RuleContext(self.spark, conf, cands, reasons, version_cache=self._version_cache)
             # A rule can win planning but decline LATE — its replacement's
             # structural guard raises during replay (e.g. metadata-only
             # fold meets a shape the cheap planner check admitted).  That

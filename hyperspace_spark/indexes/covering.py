@@ -24,7 +24,7 @@ from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
 from hyperspace_spark.config import DATA_FILE_ID_COLUMN, NESTED_PREFIX, HyperspaceConf
-from hyperspace_spark.indexes.base import IndexConfig
+from hyperspace_spark.indexes.base import IndexConfig, memo_frame, version_slot
 from hyperspace_spark.metadata.entry import FileIdTracker, FileInfo
 
 if TYPE_CHECKING:
@@ -402,6 +402,7 @@ def index_scan_df(
     deleted: list[FileInfo] | None = None,
     bucketed: bool = False,
     files: list[str] | None = None,
+    cache: dict | None = None,
 ) -> "DataFrame":
     """Query-time DataFrame over the index data, with hybrid-scan
     compensation (reference: CoveringIndexRuleUtils.scala:146-288).
@@ -412,6 +413,9 @@ def index_scan_df(
       projected to the same slice (reference :280-284).
     - ``files``: bucket-pruned subset of index data files (plain read of
       just those paths; [] = provably-empty bucket -> empty relation).
+      With ``cache`` (see ``version_slot``) the resolved read is reused
+      per (index version, file subset), so a repeated point lookup does
+      not list its bucket file again.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
@@ -433,7 +437,11 @@ def index_scan_df(
             df = (
                 spark.createDataFrame([], schema)
                 if not files
-                else spark.read.schema(schema).parquet(*files)
+                else memo_frame(
+                    version_slot(cache, entry),
+                    tuple(files),
+                    lambda: spark.read.schema(schema).parquet(*files),
+                )
             )
         else:
             reader = spark.read.schema(schema) if schema is not None else spark.read

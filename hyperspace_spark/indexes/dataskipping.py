@@ -8,9 +8,18 @@ Spark-first realization: the build is a single
 ``groupBy(input_file_name())`` aggregation — map-side partial aggregation
 makes this one scan + a tiny shuffle keyed by file name; the index holds
 |source files| rows regardless of data size, so at 100 TB with ~400 MB
-files it is ~250k rows — trivially broadcastable, and the query-time
-pruning "join" is a driver-side collect of surviving file ids exactly
-like the reference's nested Spark job.
+files it is ~250k rows.
+
+Query-time pruning diverges from the reference, which runs a nested
+Spark job inside planning for every query (join the candidate files
+with the index data, collect the survivors).  An index version's data
+never changes once written, so the first lookup against a version
+collects its sketch rows into a driver-side ``LocalRelation``, held per
+index and keyed on the version's content (``base.version_slot``); every
+later lookup filters those rows in the driver with no Spark job.
+Versions larger on disk than ``SKETCH_CACHE_MAX_BYTES`` keep the
+reference's read-and-collect job per lookup, and Bloom probes remain a
+pandas-UDF filter that starts a job.
 """
 
 from __future__ import annotations
@@ -21,7 +30,7 @@ from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
 from hyperspace_spark.config import DATA_FILE_ID_COLUMN
-from hyperspace_spark.indexes.base import IndexConfig
+from hyperspace_spark.indexes.base import IndexConfig, version_slot
 from hyperspace_spark.indexes.sketches import BloomFilterSketch, Sketch, sketch_from_json
 from hyperspace_spark.metadata.entry import FileIdTracker, FileInfo
 from hyperspace_spark.metadata.signature import file_based_signature
@@ -242,25 +251,62 @@ def translate(cond: Expr, sketches: list[Sketch]) -> SkipPredicate:
     return SkipPredicate(None if sql == _TRUE else sql, probes)
 
 
+# On-disk bytes (sum of content-file sizes) up to which an index
+# version's sketch rows are held in the driver.  Min/max rows are tiny,
+# but Bloom blobs scale with file count times filter size; above the
+# bound every lookup reads the index data with a Spark job instead.
+SKETCH_CACHE_MAX_BYTES = 8 << 20
+
+
+def _sketch_frame(spark: "SparkSession", entry, slot: dict | None) -> "DataFrame":
+    """The per-file sketch rows of ``entry``'s version.  Small versions
+    are collected once into a driver-side ``LocalRelation`` held in
+    ``slot``, so later filters over it fold to local rows (Catalyst's
+    ``ConvertToLocalRelation``) and start no Spark job."""
+    from pyspark.sql import DataFrame
+    from pyspark.sql.types import StructType
+
+    def read():
+        return spark.read.schema(
+            StructType.fromJson(json.loads(entry.derived_properties["schemaJson"]))
+        ).parquet(*entry.index_data_dirs)
+
+    if slot is None or sum(f.size for f in entry.content_files) > SKETCH_CACHE_MAX_BYTES:
+        return read()
+    df = slot.get("sketch")
+    if df is None:
+        jdf = read()._jdf
+        df = slot["sketch"] = DataFrame(
+            spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema()), spark
+        )
+    return df
+
+
 def prune_file_ids(
     spark: "SparkSession",
     entry,
     pred: SkipPredicate,
+    cache: dict | None = None,
 ) -> set[int] | None:
     """Ids of indexed files that MIGHT contain matches; None = no pruning.
 
-    Mirrors the reference's query-time nested job
-    (DataSkippingFileIndex.scala:40-61): filter the per-file index,
-    collect surviving ids on the driver.
+    The reference runs a nested Spark job per query
+    (DataSkippingFileIndex.scala:40-61): join the candidate files with the
+    index data and collect the survivors.  Here the filter runs over the
+    version's sketch rows held in the driver (``cache``: index name ->
+    content fingerprint and frames, see ``version_slot``), loaded by one
+    job the first time a version is probed; later lookups filter local
+    rows and start no job.  Versions above ``SKETCH_CACHE_MAX_BYTES`` and
+    calls without a cache read the index data and filter it with a job,
+    as the reference does.  Bloom probes stay a pandas-UDF filter, so a
+    predicate with one still starts a job (over the cached rows).
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import BooleanType, StructType
+    from pyspark.sql.types import BooleanType
 
     if pred.trivial:
         return None
-    df = spark.read.schema(
-        StructType.fromJson(json.loads(entry.derived_properties["schemaJson"]))
-    ).parquet(*entry.index_data_dirs)
+    df = _sketch_frame(spark, entry, version_slot(cache, entry))
     if pred.sql:
         df = df.filter(pred.sql)
     for sk, vals in pred.bloom_probes:

@@ -37,10 +37,15 @@ class RuleContext:
     conf: HyperspaceConf
     candidates: dict[int, list[Candidate]]  # id(scan) -> candidates
     reasons: Reasons | None = None
-    # Memo for skipping-index pruning jobs: the optimizer visits the same
-    # Filter<-Scan pattern at several tree levels; run the driver-side
-    # pruning job once per (index, predicate).
+    # Memo for skipping-index pruning: the optimizer visits the same
+    # Filter<-Scan pattern at several tree levels; compute the kept file
+    # ids once per (index, predicate) within one apply().
     prune_memo: dict = field(default_factory=dict)
+    # Frames built from immutable index versions, kept ACROSS apply()
+    # calls (the owning Hyperspace's dict; see indexes.base.version_slot):
+    # data-skipping sketch rows held in the driver, bucket-pruned covering
+    # reads.  Keyed on index content, so a new version replaces its slot.
+    version_cache: dict | None = None
 
     def for_scan(self, scan: ir.Scan, kind: str) -> list[Candidate]:
         return [c for c in self.candidates.get(id(scan), []) if c.entry.derived_kind == kind]
@@ -270,10 +275,12 @@ class FilterIndexRule:
 
             pruned = stats_pruned_files(entry, filt.condition)
 
-        def replacement(spark, _e=entry, _cols=out_cols, _a=appended, _d=deleted, _f=pruned):
+        def replacement(
+            spark, _e=entry, _cols=out_cols, _a=appended, _d=deleted, _f=pruned, _c=ctx.version_cache
+        ):
             from hyperspace_spark.indexes.covering import index_scan_df
 
-            return index_scan_df(spark, _e, _cols, appended=_a, deleted=_d, files=_f)
+            return index_scan_df(spark, _e, _cols, appended=_a, deleted=_d, files=_f, cache=_c)
 
         new_node = _substitute_scan(node, scan, replacement, entry.name)
         return Applied(new_node, self.base_score * winner.coverage, [entry.name])
@@ -432,7 +439,7 @@ class FilterOrIndexRule:
             (d.sql, w.entry, list(pruned), w.deleted) for d, w, pruned in plan
         ]
 
-        def replacement(spark, _branches=branches, _cols=out_cols):
+        def replacement(spark, _branches=branches, _cols=out_cols, _c=ctx.version_cache):
             from hyperspace_spark.indexes.covering import index_scan_df
             from hyperspace_spark.telemetry import HyperspaceEvent, emit
 
@@ -452,7 +459,7 @@ class FilterOrIndexRule:
                         ),
                     )
                 )
-                f = index_scan_df(spark, entry, _cols, deleted=deleted, files=files)
+                f = index_scan_df(spark, entry, _cols, deleted=deleted, files=files, cache=_c)
                 guard = f"({dsql})"
                 for j in range(i):
                     guard += f" AND (NOT coalesce(({_branches[j][0]}), false))"
@@ -916,8 +923,10 @@ class DataSkippingIndexRule:
         # kept set is a sound superset of the matching files, so the
         # intersection is too.  Two single-sketch indexes (say MinMax on
         # ship date + Bloom on order key) now compose instead of the
-        # smaller one winning outright.  Cost: one driver-side
-        # sketch-frame probe per index (memoized per condition).
+        # smaller one winning outright.  Cost: one filter per index over
+        # its sketch rows (memoized per condition within apply(); the
+        # rows themselves are held per index version in
+        # ctx.version_cache, so a warm min/max probe starts no job).
         live_paths: list[str] | None = None
         pruned_out: set[str] = set()
         contributors: list[str] = []
@@ -933,7 +942,7 @@ class DataSkippingIndexRule:
             if memo_key in ctx.prune_memo:
                 kept_ids = ctx.prune_memo[memo_key]
             else:
-                kept_ids = prune_file_ids(ctx.spark, entry, pred)
+                kept_ids = prune_file_ids(ctx.spark, entry, pred, ctx.version_cache)
                 ctx.prune_memo[memo_key] = kept_ids
             if kept_ids is None:
                 continue

@@ -51,6 +51,9 @@ BNLJ_ALLOWED = {
 OPS = [
     "Exchange",
     "BatchEvalPython",
+    # A distinct operator: the \b in the pattern below keeps
+    # "BatchEvalPython" from matching it.
+    "BatchEvalPythonUDTF",
     "ArrowEvalPython",
     "MapInPandas",
     "FlatMapGroupsInPandas",
@@ -122,7 +125,8 @@ def main() -> None:
                 else:
                     violations.append(name)
                     note = "VIOLATION: nested-loop/cartesian outside allowlist"
-            if counts["BatchEvalPython"] and name not in BATCH_EVAL_ALLOWED:
+            row_at_a_time = counts["BatchEvalPython"] + counts["BatchEvalPythonUDTF"]
+            if row_at_a_time and name not in BATCH_EVAL_ALLOWED:
                 violations.append(name)
                 note += " VIOLATION: row-at-a-time Python"
             lines.append(f"{name}\t{counts}\t{note}")

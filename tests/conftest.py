@@ -66,3 +66,20 @@ def hyp_examples(n: int) -> int:
     if os.environ.get("HS_HYP_FULL") == "1":
         return n
     return max(5, n // 2)
+
+
+def count_jobs(spark, fn):
+    """Run ``fn()`` and return ``(its result, number of Spark jobs it
+    started)``.  The jobs are tagged with a fresh job group and counted
+    through ``statusTracker`` once the listener bus has caught up."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count_jobs")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -21,10 +21,13 @@ from tests.conftest import rows_equal, table
 
 @pytest.fixture(scope="module")
 def src_dir(spark, tmp_path_factory):
-    """Multi-file lineitem clustered by l_shipdate so MinMax pruning bites."""
+    """Multi-file lineitem clustered by l_shipdate so MinMax pruning bites.
+    ``l_shipdate`` reads as TIMESTAMP_NTZ; ``l_shipts`` is the same
+    instant as a session-zone TIMESTAMP."""
     d = str(tmp_path_factory.mktemp("li_src"))
     (
         table(spark, "lineitem")
+        .withColumn("l_shipts", F.col("l_shipdate").cast("timestamp"))
         .repartitionByRange(8, "l_shipdate")
         .write.mode("overwrite")
         .parquet(d)
@@ -42,6 +45,7 @@ def hs(spark, src_dir, tmp_path_factory):
             "li_skip",
             [
                 MinMaxSketch(["l_shipdate"]),
+                MinMaxSketch(["l_shipts"]),
                 MinMaxSketch(["l_orderkey"]),
                 ValueListSketch(["l_returnflag"]),
                 BloomFilterSketch(["l_partkey"], fpp=0.01, expected_items=2000),
@@ -57,11 +61,12 @@ def n_input_files(df):
 
 def test_minmax_date_range_prunes(spark, src_dir, hs):
     df = spark.read.parquet(src_dir)
-    q = df.filter(F.col("l_shipdate") < "1993-01-01").select("l_orderkey", "l_quantity")
-    fast, used = hs._apply_with_info(q)
-    assert used == ["li_skip"], hs.why_not(q)
-    assert n_input_files(fast) < n_input_files(q)
-    assert rows_equal(q, fast)
+    for col in ("l_shipdate", "l_shipts"):
+        q = df.filter(F.col(col) < "1993-01-01").select("l_orderkey", "l_quantity")
+        fast, used = hs._apply_with_info(q)
+        assert used == ["li_skip"], hs.why_not(q)
+        assert n_input_files(fast) < n_input_files(q)
+        assert rows_equal(q, fast)
 
 
 def test_minmax_point_lookup(spark, src_dir, hs):
