@@ -17,9 +17,9 @@ from typing import TYPE_CHECKING, Callable
 
 from hyperspace_spark.config import HyperspaceConf
 from hyperspace_spark.fs import filesystem_for
+from hyperspace_spark.indexes.base import FallBackToFull, carry_index_files
 from hyperspace_spark.metadata.entry import FileIdTracker, FileInfo, IndexLogEntry, Relation, States
 from hyperspace_spark.metadata.log_manager import IndexLogManager
-from hyperspace_spark.metadata.signature import file_based_signature
 from hyperspace_spark.planner import ir
 from hyperspace_spark.planner.candidates import Reasons, collect_candidates, live_source_files
 from hyperspace_spark.planner.optimizer import optimize
@@ -37,10 +37,6 @@ class HyperspaceException(Exception):
 
 class ConcurrentModificationError(HyperspaceException):
     pass
-
-
-class _FallBackToFull(Exception):
-    """Internal: incremental refresh decided a full rebuild is required."""
 
 
 class Hyperspace:
@@ -208,7 +204,7 @@ class Hyperspace:
 
         data_dir = mgr.data_dir(0)
         try:
-            props = self._build(config.kind)(
+            props = _kind_module(config.kind).create_index_data(
                 self.spark, df, config, conf, files, tracker, data_dir, config.name, 0
             )
         except BaseException:
@@ -227,30 +223,12 @@ class Hyperspace:
                 pass
             raise
         entry.derived_properties = props
-        entry.index_data_dirs = [data_dir]
-        entry.content_files = [
-            FileInfo(s.path, s.size, s.mtime) for s in fs.list_files_recursive(data_dir)
-        ]
+        _publish_version(entry, fs, data_dir, 0)
         done = entry.with_state(States.ACTIVE, begin_id + 1)
         if not mgr.write_log(done.id, done):
             raise ConcurrentModificationError(f"Concurrent createIndex on {config.name}.")
         mgr.update_latest_stable(done.id)
         self._invalidate_cache()
-
-    def _build(self, kind: str):
-        if kind == "CI":
-            from hyperspace_spark.indexes.covering import create_index_data as b
-        elif kind == "ZCI":
-            from hyperspace_spark.indexes.zorder import create_index_data as b
-        elif kind == "DS":
-            from hyperspace_spark.indexes.dataskipping import create_index_data as b
-        elif kind == "ANN":
-            from hyperspace_spark.indexes.ann import create_index_data as b
-        elif kind == "TXT":
-            from hyperspace_spark.indexes.inverted import create_index_data as b
-        else:
-            raise HyperspaceException(f"Unknown index kind {kind}")
-        return b
 
     def _source_scan(self, df: "DataFrame") -> ir.Scan:
         plan = parse_df(df)
@@ -513,7 +491,7 @@ class Hyperspace:
             from hyperspace_spark.sources.iceberg import read_iceberg
 
             return read_iceberg(self.spark, scan.iceberg_root)
-        return _relation_reader(self.spark, rel).load(rel.root_paths)
+        return rel.read(self.spark)
 
     def _config_of(self, entry: IndexLogEntry):
         p = entry.derived_properties
@@ -571,28 +549,20 @@ class Hyperspace:
 
         def op(entry: IndexLogEntry, mgr: IndexLogManager, version: int) -> IndexLogEntry:
             df = self._source_df(entry)
-            scan = self._source_scan(df)
-            files = [
-                FileInfo(f.path, f.size, f.mtime)
-                for f in live_source_files(scan, fs)
-            ]
-            tracker = entry.file_id_tracker
-            files = [FileInfo(f.path, f.size, f.mtime, tracker.add_or_get(f)) for f in files]
-            entry.relations[0].files = files
-            entry.signature = _signature_of(scan, files)
+            _record_snapshot(entry, live_source_files(self._source_scan(df), fs))
             data_dir = mgr.data_dir(version)
-            config = self._config_of(entry)
-            entry.derived_properties = self._build(entry.derived_kind)(
-                self.spark, df, config, conf, files, tracker, data_dir, name, version
+            entry.derived_properties = _kind_module(entry.derived_kind).create_index_data(
+                self.spark,
+                df,
+                self._config_of(entry),
+                conf,
+                entry.relations[0].files,
+                entry.file_id_tracker,
+                data_dir,
+                name,
+                version,
             )
-            entry.index_data_dirs = [data_dir]
-            entry.data_version = version
-            entry.content_files = [
-                FileInfo(s.path, s.size, s.mtime) for s in fs.list_files_recursive(data_dir)
-            ]
-            entry.appended_files = []
-            entry.deleted_files = []
-            return entry
+            return _publish_version(entry, fs, data_dir, version)
 
         self._transact(name, conf, States.REFRESHING, States.ACTIVE, op)
 
@@ -600,7 +570,7 @@ class Hyperspace:
     def _source_delta(entry, fs):
         """(live, appended, deleted) of the entry's source files vs its
         indexed snapshot — the ONE copy of the key()-based diff shared by
-        incremental refresh and the hybrid-aware search APIs."""
+        incremental and quick refresh and the hybrid-aware search APIs."""
         rel = entry.relations[0]
         live = live_source_files(_scan_of(rel), fs)
         indexed = entry.source_files_by_key()
@@ -609,521 +579,34 @@ class Hyperspace:
         deleted = [f for k, f in indexed.items() if k not in live_by_key]
         return live, appended, deleted
 
-    @staticmethod
-    def _carry_index_files(fs, entry, data_dir: str, skip_subdirs=(), skip_files=()) -> None:
-        """Hardlink every current index content file into a new version
-        dir, preserving subpaths (cluster=N partitions and flat bucketed
-        layouts alike) — the O(1)-per-file carry both the ANN and TXT
-        incremental refreshes rely on.  ``skip_subdirs`` drops files under
-        the named first-level subpaths (e.g. re-clustered ``cluster=3``
-        partitions whose rows were rewritten elsewhere); ``skip_files``
-        drops individual files by absolute old path (e.g. the files a
-        delete-refresh rewrote elsewhere)."""
-        old_base = entry.index_data_dirs[-1].rstrip("/")
-        skip = tuple(s.rstrip("/") + "/" for s in skip_subdirs)
-        skip_f = {os.path.normpath(p) for p in skip_files}
-        for f in entry.content_files:
-            rel_path = (
-                f.path[len(old_base) + 1 :]
-                if f.path.startswith(old_base + "/")
-                else f.path.rsplit("/", 1)[-1]
-            )
-            if skip and rel_path.startswith(skip):
-                continue
-            if skip_f and os.path.normpath(f.path) in skip_f:
-                continue
-            fs.link_or_copy(f.path, os.path.join(data_dir, rel_path))
-
     def _refresh_incremental(self, name: str) -> None:
-        """Scan only appended files; drop rows of deleted files via the
-        lineage anti-filter (reference: RefreshIncrementalAction.scala:45-133,
-        delete via left-anti semantics J5).  At 100 TB this is the money
-        path: cost scales with the delta, not the table."""
+        """Index only the source delta: the kind's ``refresh_incremental``
+        writes the next version from the appended files and drops the
+        deleted files' rows via lineage (reference:
+        RefreshIncrementalAction.scala:45-133, delete via left-anti
+        semantics J5); the version and the new source snapshot are
+        recorded here, the same way for every kind.  At 100 TB this is
+        the money path: cost scales with the delta, not the table."""
         conf = self.conf()
         fs = self._fs(conf)
 
         def op(entry: IndexLogEntry, mgr: IndexLogManager, version: int) -> IndexLogEntry:
-            from hyperspace_spark.indexes import covering as cov
-            from pyspark.sql import functions as F
-            from hyperspace_spark.config import DATA_FILE_ID_COLUMN
-
-            rel = entry.relations[0]
             live, appended, deleted = self._source_delta(entry, fs)
-            live_by_key = {f.key(): f for f in live}
             if not appended and not deleted:
                 return entry  # no-op refresh
-
             tracker = entry.file_id_tracker
-            if entry.derived_kind == "DS":
-                from hyperspace_spark.indexes.dataskipping import refresh_incremental as ds_ri
-
-                return ds_ri(self.spark, entry, conf, appended, deleted, mgr, version, fs)
-
-            if entry.derived_kind == "ZCI":
-                # r9: bounded appends z-cluster LOCALLY into their own
-                # files (frozen build-time scaling, like the ANN
-                # quantizer); retained files hardlink through and their
-                # per-file min/max pruning stays exact — the locally-
-                # clustered-delta-over-clustered-base layout production
-                # table formats ship between OPTIMIZE runs.  r10: DELETES
-                # rewrite only the z-files holding deleted rows via the
-                # lineage anti-filter (surviving rows keep their z-sort;
-                # the production DELETE shape) — only lineage-free
-                # legacy entries or drift beyond
-                # zorder.maxIncrementalRatio still re-cluster fully; a
-                # later FULL refresh restores one global interleave.
-                app_bytes = sum(f.size for f in appended)
-                indexed_bytes = max(1, sum(f.size for f in live) - app_bytes)
-                if deleted and not entry.derived_properties.get("lineage"):
-                    raise _FallBackToFull()
-                if app_bytes / indexed_bytes > conf.zorder_max_incremental_ratio:
-                    raise _FallBackToFull()
-                from hyperspace_spark.indexes import zorder as zo
-
-                props = entry.derived_properties
-                appended = [
-                    FileInfo(f.path, f.size, f.mtime, tracker.add_or_get(f))
-                    for f in appended
-                ]
-                data_dir = mgr.data_dir(version)
-                new_stats, n_new_parts = {}, 0
-                if appended:
-                    new_df = _relation_reader(
-                        self.spark, rel, with_base_path=True
-                    ).load([f.path for f in appended])
-                    if props.get("filterPredicate"):
-                        # Partial z-order index: appended files
-                        # contribute only predicate rows (create-path
-                        # parity).
-                        new_df = new_df.filter(props["filterPredicate"])
-                    new_stats, n_new_parts = zo.append_index_data(
-                        self.spark, new_df, entry, conf, appended, tracker, data_dir
-                    )
-                skip_files: list[str] = []
-                if deleted:
-                    del_ids = [tracker.get(f) for f in deleted]
-                    skip_files, survivor_stats = zo.drop_deleted_rows(
-                        self.spark,
-                        entry,
-                        [i for i in del_ids if i is not None],
-                        data_dir,
-                    )
-                    new_stats = {**new_stats, **survivor_stats}
-                self._carry_index_files(fs, entry, data_dir, skip_files=skip_files)
-                if props.get("fileStats"):
-                    merged = dict(props["fileStats"])
-                    for p in skip_files:
-                        merged.pop(p.rsplit("/", 1)[-1], None)
-                    merged.update(new_stats)
-                    # Same log-size guard collect_file_stats enforces at
-                    # build: past the cap, drop the stats (pruning
-                    # disables, correctness unaffected) rather than bloat
-                    # every future log entry.
-                    props["fileStats"] = (
-                        merged if len(merged) <= zo._FILESTATS_MAX_FILES else {}
-                    )
-                # OPTIMIZE sizes its per-layout compaction from
-                # numBuckets: account for the appended partitions or the
-                # grown index compacts back into the build-time count
-                # (files ~2x target after repeated appends).
-                props["numBuckets"] = int(props.get("numBuckets", 0)) + int(
-                    n_new_parts
-                )
-                new_files = {f.key(): f for f in live}
-                entry.relations[0].files = [
-                    FileInfo(f.path, f.size, f.mtime, tracker.add_or_get(f))
-                    for f in new_files.values()
-                ]
-                entry.signature = _signature_of(
-                    _scan_of(entry.relations[0]), entry.relations[0].files
-                )
-                entry.index_data_dirs = [data_dir]
-                entry.data_version = version
-                entry.content_files = [
-                    FileInfo(s.path, s.size, s.mtime)
-                    for s in fs.list_files_recursive(data_dir)
-                ]
-                entry.appended_files = []
-                entry.deleted_files = []
-                return entry
-
-            if entry.derived_kind == "ANN":
-                # Assign-only IVF increment (standard FAISS/Milvus append
-                # path): new vectors join the FROZEN quantizer's clusters,
-                # only their rows are written, existing cluster files
-                # hardlink through.  Drift escalation: appends beyond
-                # maxAssignOnlyRatio of the corpus PARTIALLY re-cluster —
-                # only clusters grown past reclusterOversizeFactor x the
-                # average are re-KMeans'd (split), the rest still
-                # hardlink (bounded rewrite bytes, OptimizeAction.scala's
-                # per-bucket discipline).  Appends beyond maxReclusterRatio
-                # force a full refit — a badly drifted quantizer degrades
-                # recall silently, which is worse than the rebuild.
-                # DELETES never touch the quantizer: lineage-built indexes
-                # drop the deleted files' rows from exactly the index
-                # files holding them (ann.drop_deleted_rows — centroids
-                # and codebooks frozen, recall untouched by construction);
-                # only lineage-free (legacy) indexes, or a delete landing
-                # together with recluster-scale appends, pay the refit.
-                # Ratio = appended bytes vs the PREVIOUSLY INDEXED corpus
-                # (live minus appended): "how much did the corpus the
-                # quantizer was fit on grow".  Dividing by live-total
-                # would asymptote below 1.0 no matter how much lands, so
-                # maxReclusterRatio could never trigger the full refit.
-                app_bytes = sum(f.size for f in appended)
-                indexed_bytes = max(1, sum(f.size for f in live) - app_bytes)
-                app_ratio = app_bytes / indexed_bytes
-                if deleted and not entry.derived_properties.get("lineage"):
-                    raise _FallBackToFull()
-                if app_ratio > conf.ann_max_recluster_ratio:
-                    raise _FallBackToFull()
-                if deleted and app_ratio > conf.ann_max_assign_only_ratio:
-                    # Delete + recluster-scale appends in one refresh:
-                    # splitting clusters while also dropping rows makes
-                    # the rewrite-bytes bound meaningless — full refit.
-                    raise _FallBackToFull()
-                if entry.derived_properties.get("pqM") and (
-                    app_ratio > conf.ann_max_assign_only_ratio
-                ):
-                    # PQ rows carry codes, not vectors: partial
-                    # re-clustering would need the originals back from
-                    # the source (a corpus-scale read) — the full refit
-                    # is the honest cost at that drift level.
-                    raise _FallBackToFull()
-                from hyperspace_spark.indexes.ann import (
-                    assign_to_centroids,
-                    drop_deleted_rows,
-                    partial_recluster,
-                )
-
-                props = entry.derived_properties
-                appended = [
-                    FileInfo(f.path, f.size, f.mtime, tracker.add_or_get(f))
-                    for f in appended
-                ]
-                new_df = None
-                if appended:
-                    new_df = _relation_reader(
-                        self.spark, rel, with_base_path=True
-                    ).load([f.path for f in appended])
-                    if props.get("lineage"):
-                        from hyperspace_spark.indexes.covering import with_lineage
-
-                        new_df = with_lineage(
-                            new_df, self.spark, appended, tracker
-                        )
-                data_dir = mgr.data_dir(version)
-                skip_files: list[str] = []
-                if deleted:
-                    del_ids = [tracker.get(f) for f in deleted]
-                    skip_files = drop_deleted_rows(
-                        self.spark,
-                        entry,
-                        [i for i in del_ids if i is not None],
-                        data_dir,
-                    )
-                if not appended:
-                    self._carry_index_files(
-                        fs, entry, data_dir, skip_files=skip_files
-                    )
-                elif app_ratio > conf.ann_max_assign_only_ratio:
-                    new_centroids, split_ids = partial_recluster(
-                        self.spark,
-                        entry,
-                        new_df,
-                        data_dir,
-                        oversize_factor=conf.ann_recluster_oversize_factor,
-                    )
-                    # nClusters stays the CONFIGURED target (actual k =
-                    # len(centroids)): a later full refresh re-balances
-                    # the grown quantizer back to the configured k.
-                    props["centroids"] = new_centroids
-                    # Hardlink only the UNTOUCHED clusters' old files in;
-                    # split clusters were rewritten by partial_recluster.
-                    self._carry_index_files(
-                        fs,
-                        entry,
-                        data_dir,
-                        skip_subdirs=[f"cluster={c}" for c in split_ids],
-                    )
-                else:
-                    assigned = assign_to_centroids(
-                        new_df, props["centroids"], props["idCol"], props["vecCol"]
-                    )
-                    if props.get("pqM"):
-                        # Frozen-codebook encode: the appended vectors get
-                        # the same m-byte codes the build would assign, so
-                        # old and new rows score identically at query time.
-                        from hyperspace_spark.config import DATA_FILE_ID_COLUMN
-                        from hyperspace_spark.indexes.ann import _encode_udf
-                        from pyspark.sql import functions as F
-
-                        _lin = (
-                            [DATA_FILE_ID_COLUMN]
-                            if DATA_FILE_ID_COLUMN in assigned.columns
-                            else []
-                        )
-                        assigned = assigned.select(
-                            "vec_id",
-                            _encode_udf(props["codebooks"])(
-                                F.col("unit_vec")
-                            ).alias("codes"),
-                            *_lin,
-                            "cluster",
-                        )
-                    # append: a delete-rewrite may already have written
-                    # surviving rows under this version dir.
-                    assigned.write.partitionBy("cluster").mode("append").parquet(
-                        data_dir
-                    )
-                    # Hardlink the old cluster files into the new version,
-                    # PRESERVING the cluster=N partition subpath (minus
-                    # any files the delete-rewrite replaced).
-                    self._carry_index_files(
-                        fs, entry, data_dir, skip_files=skip_files
-                    )
-                new_files = {f.key(): f for f in live}
-                entry.relations[0].files = [
-                    FileInfo(f.path, f.size, f.mtime, tracker.add_or_get(f))
-                    for f in new_files.values()
-                ]
-                entry.signature = _signature_of(
-                    _scan_of(entry.relations[0]), entry.relations[0].files
-                )
-                entry.index_data_dirs = [data_dir]
-                entry.data_version = version
-                entry.content_files = [
-                    FileInfo(s.path, s.size, s.mtime)
-                    for s in fs.list_files_recursive(data_dir)
-                ]
-                entry.appended_files = []
-                entry.deleted_files = []
-                return entry
-            if entry.derived_kind == "TXT":
-                # Posting increment: retained bucket files hardlink into
-                # the new version (flat bucketed layout), the NEW docs'
-                # postings append as extra per-bucket files under the
-                # same bucket spec.  r10: DELETES rewrite only the
-                # posting files holding the deleted docs' rows (lineage
-                # anti-filter — postings carry the source file id), so a
-                # delete costs index-bytes of the affected files, never a
-                # corpus re-tokenize; the rewritten survivors re-enter
-                # through the same bucketed write, so bucket pruning is
-                # untouched.  A STALE index still answers exactly either
-                # way (query-time anti-filter).
-                import json as _json
-
-                from pyspark.sql import functions as _F
-                from pyspark.sql.types import StructType as _ST
-
-                from hyperspace_spark.config import DATA_FILE_ID_COLUMN as _FID
-                from hyperspace_spark.indexes.covering import table_name
-                from hyperspace_spark.indexes.inverted import (
-                    InvertedTextIndexConfig,
-                    postings_df,
-                )
-
-                props = entry.derived_properties
-                appended = [
-                    FileInfo(f.path, f.size, f.mtime, tracker.add_or_get(f))
-                    for f in appended
-                ]
-                cfg = InvertedTextIndexConfig(
-                    entry.name, props["textCol"], props["idCol"]
-                )
-                new_postings = None
-                if appended:
-                    new_df = _relation_reader(
-                        self.spark, rel, with_base_path=True
-                    ).load([f.path for f in appended])
-                    new_postings = postings_df(
-                        self.spark, new_df, cfg, appended, tracker
-                    ).persist()
-                skip_files: list[str] = []
-                survivors = None
-                dead_ids: list[int] = []
-                if deleted:
-                    from hyperspace_spark.indexes.covering import (
-                        lineage_affected_files,
-                    )
-
-                    dead_ids = [
-                        i
-                        for i in (tracker.get(f) for f in deleted)
-                        if i is not None
-                    ]
-                    _schema = _ST.fromJson(_json.loads(props["schemaJson"]))
-                    old_postings = self.spark.read.schema(_schema).parquet(
-                        *entry.index_data_dirs
-                    )
-                    skip_files = lineage_affected_files(old_postings, dead_ids)
-                    if skip_files:
-                        survivors = (
-                            self.spark.read.schema(_schema)
-                            .parquet(*skip_files)
-                            .filter(~_F.col(_FID).isin(dead_ids))
-                        )
-                data_dir = mgr.data_dir(version)
-                os.makedirs(data_dir, exist_ok=True)
-                self._carry_index_files(fs, entry, data_dir, skip_files=skip_files)
-                nb = props["numBuckets"]
-                tbl = table_name(entry.name, version)
-                # Register the new version's external bucketed table over
-                # the hardlinked files FIRST: saveAsTable(mode=append) on
-                # a NON-existent table is CTAS and CLEARS the target
-                # directory, silently dropping the retained postings.
-                # Appending to the pre-registered table keeps them.
-                self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-                schema = _ST.fromJson(_json.loads(props["schemaJson"]))
-                cols_ddl = ", ".join(
-                    f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-                )
-                self.spark.sql(
-                    f"CREATE TABLE {tbl} ({cols_ddl}) USING parquet "
-                    f"CLUSTERED BY (`token`) SORTED BY (`token`) "
-                    f"INTO {nb} BUCKETS LOCATION '{data_dir}'"
-                )
-                delta = new_postings
-                if survivors is not None:
-                    delta = (
-                        survivors
-                        if delta is None
-                        else delta.unionByName(survivors)
-                    )
-                if delta is not None:
-                    (
-                        delta.repartition(nb, _F.col("token"))
-                        .write.format("parquet")
-                        .mode("append")
-                        .bucketBy(nb, "token")
-                        .sortBy("token")
-                        .option("path", data_dir)
-                        .saveAsTable(tbl)
-                    )
-                props["tableName"] = tbl
-                # Merge the appended files' BM25 corpus stats (docs with
-                # >= 1 token, total tokens) into the per-file stats map —
-                # one tiny aggregate over the (persisted) posting delta,
-                # so ranked retrieval stays exact after refresh; deleted
-                # files' stats rows drop (their postings just left).
-                merged = dict(props.get("fileDocStats") or {})
-                for i in dead_ids:
-                    merged.pop(str(i), None)
-                if new_postings is not None:
-                    stat_rows = (
-                        new_postings.groupBy(_FID)
-                        .agg(
-                            _F.count_distinct("_doc").alias("_nd"),
-                            _F.sum("tf").cast("long").alias("_nt"),
-                        )
-                        .collect()
-                    )
-                    merged.update(
-                        {str(r[0]): [int(r["_nd"]), int(r["_nt"])] for r in stat_rows}
-                    )
-                    new_postings.unpersist()
-                props["fileDocStats"] = merged
-                new_files = {f.key(): f for f in live}
-                entry.relations[0].files = [
-                    FileInfo(f.path, f.size, f.mtime, tracker.add_or_get(f))
-                    for f in new_files.values()
-                ]
-                entry.signature = _signature_of(
-                    _scan_of(entry.relations[0]), entry.relations[0].files
-                )
-                entry.index_data_dirs = [data_dir]
-                entry.data_version = version
-                entry.content_files = [
-                    FileInfo(s.path, s.size, s.mtime)
-                    for s in fs.list_files_recursive(data_dir)
-                ]
-                entry.appended_files = []
-                entry.deleted_files = []
-                return entry
-            if entry.derived_kind != "CI":
-                raise HyperspaceException(
-                    f"incremental refresh not supported for kind {entry.derived_kind}; use full"
-                )
-            props = entry.derived_properties
-            if deleted and not props.get("lineage", False):
-                raise HyperspaceException("cannot handle deleted files without lineage")
-
-            # Append-only delta (the common 100 TB shape: new files land,
-            # nothing deleted): write ONLY the appended rows as additional
-            # bucket files and hardlink the existing index files into the
-            # new version dir — zero read or write amplification on the
-            # already-indexed data.  Multiple files per bucket are fine
-            # for Spark's bucketed scan (it groups by the bucket id in the
-            # file name); quick optimize later compacts the accumulation.
-            append_only = bool(appended) and not deleted
-            parts = []
-            if not append_only:
-                old = self.spark.read.parquet(*entry.index_data_dirs)
-                if deleted:
-                    ids = [tracker.get(f) for f in deleted]
-                    old = old.filter(
-                        ~F.col(DATA_FILE_ID_COLUMN).isin([i for i in ids if i is not None])
-                    )
-                parts = [old]
-            if appended:
-                appended = [FileInfo(f.path, f.size, f.mtime, tracker.add_or_get(f)) for f in appended]
-                new_df = _relation_reader(self.spark, rel, with_base_path=True).load(
-                    [f.path for f in appended]
-                )
-                if props.get("filterPredicate"):
-                    # Partial index: appended files contribute only the
-                    # rows satisfying the build predicate, exactly like
-                    # the create path.
-                    new_df = new_df.filter(props["filterPredicate"])
-                if props.get("lineage", False):
-                    new_df = cov.with_lineage(new_df, self.spark, appended, tracker)
-                # Flatten dotted (nested) columns exactly like the build
-                # path — the existing index data stores __hs_nested.* names.
-                from hyperspace_spark.config import NESTED_PREFIX
-
-                select_exprs = [
-                    F.col(c).alias(NESTED_PREFIX + c) if "." in c else F.col(c)
-                    for c in props["indexedColumns"] + props["includedColumns"]
-                ]
-                if props.get("lineage", False):
-                    select_exprs.append(F.col(DATA_FILE_ID_COLUMN))
-                parts.append(new_df.select(*select_exprs))
-            merged = parts[0]
-            for p in parts[1:]:
-                merged = merged.unionByName(p)
+            appended = [FileInfo(f.path, f.size, f.mtime, tracker.add_or_get(f)) for f in appended]
+            deleted_ids = [i for i in (tracker.get(f) for f in deleted) if i is not None]
             data_dir = mgr.data_dir(version)
-            tbl = cov.table_name(name, version)
-            cov.write_bucketed(
-                self.spark,
-                merged,
-                [cov.flattened_name(c) for c in props["indexedColumns"]],
-                props["numBuckets"],
-                data_dir,
-                tbl,
+            entry.derived_properties = _kind_module(entry.derived_kind).refresh_incremental(
+                self.spark, entry, conf, live, appended, deleted_ids, data_dir, version, fs
             )
-            props["tableName"] = tbl
-            if append_only:
-                for f in entry.content_files:
-                    fs.link_or_copy(
-                        f.path, os.path.join(data_dir, f.path.rsplit("/", 1)[-1])
-                    )
-            new_files = {f.key(): f for f in live}
-            entry.relations[0].files = [
-                FileInfo(f.path, f.size, f.mtime, tracker.add_or_get(f)) for f in new_files.values()
-            ]
-            entry.signature = _signature_of(_scan_of(entry.relations[0]), entry.relations[0].files)
-            entry.index_data_dirs = [data_dir]
-            entry.data_version = version
-            entry.content_files = [
-                FileInfo(s.path, s.size, s.mtime) for s in fs.list_files_recursive(data_dir)
-            ]
-            entry.appended_files = []
-            entry.deleted_files = []
-            return entry
+            _record_snapshot(entry, live)
+            return _publish_version(entry, fs, data_dir, version)
 
         try:
             self._transact(name, conf, States.REFRESHING, States.ACTIVE, op)
-        except _FallBackToFull:
+        except FallBackToFull:
             self.cancel(name)
             self._refresh_full(name)
 
@@ -1134,12 +617,7 @@ class Hyperspace:
         fs = self._fs(conf)
 
         def op(entry: IndexLogEntry, mgr: IndexLogManager, version: int) -> IndexLogEntry:
-            rel = entry.relations[0]
-            live = live_source_files(_scan_of(rel), fs)
-            indexed = entry.source_files_by_key()
-            live_by_key = {f.key(): f for f in live}
-            entry.appended_files = [f for k, f in live_by_key.items() if k not in indexed]
-            entry.deleted_files = [f for k, f in indexed.items() if k not in live_by_key]
+            _live, entry.appended_files, entry.deleted_files = self._source_delta(entry, fs)
             return entry
 
         self._transact(name, conf, States.REFRESHING, States.ACTIVE, op)
@@ -1167,167 +645,66 @@ class Hyperspace:
             small = [f for f in entry.content_files if f.size < conf.optimize_file_size_threshold]
             if mode == "quick" and len(small) <= 1:
                 return entry
+            import json as _json
+
+            from pyspark.sql.types import StructType
+
             from hyperspace_spark.indexes import covering as cov
 
             props = entry.derived_properties
+            kind = entry.derived_kind
             data_dir = mgr.data_dir(version)
+            old_base = entry.index_data_dirs[-1].rstrip("/")
+            # Quick compaction keeps the layout: rows of a CI/TXT bucket
+            # file re-hash to the same bucket (same murmur3, same
+            # numBuckets) and ANN rows never change cluster, so only the
+            # layout units holding >1 sub-threshold file are rewritten and
+            # every other file — the large ones that dominate a 100 TB
+            # index — is carried by an O(1) hardlink (reference
+            # OptimizeAction.scala:96-114).  A file name outside the
+            # layout means a full rewrite: never guess.
+            compact = None
+            if mode == "quick" and kind in _LAYOUT_UNIT:
+                groups = _group_by(small, lambda f: _LAYOUT_UNIT[kind](f, old_base))
+                if groups is not None:
+                    compact = sorted(f.path for g in groups.values() if len(g) > 1 for f in g)
+                    if not compact:
+                        return entry  # every unit already has <=1 small file
+            paths = compact or entry.index_data_dirs
 
-            if entry.derived_kind == "ANN":
-                # Per-CLUSTER compaction — the ANN analog of per-bucket:
-                # assign-only incremental refreshes accumulate one small
-                # file per touched cluster per refresh; quick rewrites
-                # only clusters holding >1 sub-threshold file (the rest
-                # hardlink through with their cluster=N subpath), full
-                # rewrites everything to one file per cluster.  Rows never
-                # change cluster, so ann_search's partition pruning is
-                # preserved by construction.
-                import json as _json
-
-                from pyspark.sql.types import StructType
-
-                old_base = entry.index_data_dirs[-1].rstrip("/")
+            if kind == "ANN":
                 schema = StructType.fromJson(_json.loads(props["schemaJson"]))
-                by_cluster: dict[str, list[FileInfo]] | None = {}
-                for f in small:
-                    rel_path = (
-                        f.path[len(old_base) + 1 :]
-                        if f.path.startswith(old_base + "/")
-                        else ""
-                    )
-                    if "/" not in rel_path:
-                        by_cluster = None  # unexpected layout: never guess
-                        break
-                    by_cluster.setdefault(rel_path.split("/", 1)[0], []).append(f)
-                if mode == "quick" and by_cluster is not None:
-                    to_compact = [
-                        f for fl in by_cluster.values() if len(fl) > 1 for f in fl
-                    ]
-                    if not to_compact:
-                        return entry  # every cluster already has <=1 small file
-                    compact_set = {f.path for f in to_compact}
-                    retained = [
-                        f for f in entry.content_files if f.path not in compact_set
-                    ]
-                    df = (
-                        self.spark.read.schema(schema)
-                        .option("basePath", old_base)
-                        .parquet(*sorted(compact_set))
-                    )
-                    # sub-threshold files by definition: one task suffices
-                    df.coalesce(1).write.partitionBy("cluster").mode(
-                        "overwrite"
-                    ).parquet(data_dir)
-                    for f in retained:
-                        rel_path = (
-                            f.path[len(old_base) + 1 :]
-                            if f.path.startswith(old_base + "/")
-                            else f.path.rsplit("/", 1)[-1]
-                        )
-                        fs.link_or_copy(f.path, os.path.join(data_dir, rel_path))
-                else:
-                    df = (
-                        self.spark.read.schema(schema)
-                        .option("basePath", old_base)
-                        .parquet(*entry.index_data_dirs)
-                    )
-                    df.repartition("cluster").write.partitionBy("cluster").mode(
-                        "overwrite"
-                    ).parquet(data_dir)
-                entry.index_data_dirs = [data_dir]
-                entry.data_version = version
-                entry.content_files = [
-                    FileInfo(s.path, s.size, s.mtime)
-                    for s in fs.list_files_recursive(data_dir)
-                ]
-                return entry
-
-            if mode == "quick" and entry.derived_kind in ("CI", "TXT"):
-                # Per-bucket compaction (reference OptimizeAction.scala:
-                # 96-114; TXT postings share the CI's flat bucketed
-                # layout, so the same path compacts the small per-refresh
-                # posting files): rewrite ONLY buckets holding >1 sub-threshold
-                # file; every other file — the large ones that dominate a
-                # 100 TB index — is carried into the new version dir by an
-                # O(1) hardlink (fs.link_or_copy), never re-read or
-                # re-written.  Rows from bucket b re-hash to bucket b
-                # (same murmur3, same numBuckets), so a bucketBy write of
-                # just the small files' rows produces correctly-named
-                # replacement files for exactly the affected buckets.
-                by_bucket: dict[int, list[FileInfo]] = {}
-                parseable = True
-                for f in small:
-                    m = cov._BUCKET_FILE_RE.search(f.path.rsplit("/", 1)[-1])
-                    if m is None:
-                        parseable = False  # unexpected layout: never guess
-                        break
-                    by_bucket.setdefault(int(m.group(1)), []).append(f)
-                if parseable:
-                    to_compact = [
-                        f for fl in by_bucket.values() if len(fl) > 1 for f in fl
-                    ]
-                    if not to_compact:
-                        return entry  # every bucket already has ≤1 small file
-                    compact_set = {f.path for f in to_compact}
-                    retained = [
-                        f for f in entry.content_files if f.path not in compact_set
-                    ]
-                    from pyspark.sql.types import StructType
-                    import json as _json
-
-                    schema = StructType.fromJson(_json.loads(props["schemaJson"]))
-                    df = self.spark.read.schema(schema).parquet(
-                        *sorted(compact_set)
-                    )
-                    tbl = cov.table_name(name, version)
-                    cov.write_bucketed(
-                        self.spark,
-                        df,
-                        [cov.flattened_name(c) for c in props["indexedColumns"]],
-                        props["numBuckets"],
-                        data_dir,
-                        tbl,
-                    )
-                    props["tableName"] = tbl
-                    for f in retained:
-                        fs.link_or_copy(
-                            f.path,
-                            os.path.join(data_dir, f.path.rsplit("/", 1)[-1]),
-                        )
-                    entry.index_data_dirs = [data_dir]
-                    entry.data_version = version
-                    entry.content_files = [
-                        FileInfo(s.path, s.size, s.mtime)
-                        for s in fs.list_files_recursive(data_dir)
-                    ]
-                    return entry
-                # fall through: unparseable file names -> full rewrite
-
-            df = self.spark.read.parquet(*entry.index_data_dirs)
-            if entry.derived_kind == "DS":
-                # Skipping index data is tiny (one row per source file):
-                # compact to a single file.
-                df.coalesce(1).write.mode("overwrite").parquet(data_dir)
-            elif entry.derived_kind in ("CI", "TXT"):
+                df = self.spark.read.schema(schema).option("basePath", old_base).parquet(*paths)
+                # sub-threshold files by definition: one task suffices
+                df = df.coalesce(1) if compact else df.repartition("cluster")
+                df.write.partitionBy("cluster").mode("overwrite").parquet(data_dir)
+            elif kind in ("CI", "TXT"):
+                reader = self.spark.read
+                if compact:
+                    reader = reader.schema(StructType.fromJson(_json.loads(props["schemaJson"])))
                 tbl = cov.table_name(name, version)
                 cov.write_bucketed(
                     self.spark,
-                    df,
+                    reader.parquet(*paths),
                     [cov.flattened_name(c) for c in props["indexedColumns"]],
                     props["numBuckets"],
                     data_dir,
                     tbl,
                 )
                 props["tableName"] = tbl
+            elif kind == "DS":
+                # Skipping index data is tiny (one row per source file):
+                # compact to a single file.
+                self.spark.read.parquet(*paths).coalesce(1).write.mode("overwrite").parquet(
+                    data_dir
+                )
             else:
                 from hyperspace_spark.indexes.zorder import rewrite_zorder_data
 
-                rewrite_zorder_data(self.spark, df, props, data_dir)
-            entry.index_data_dirs = [data_dir]
-            entry.data_version = version
-            entry.content_files = [
-                FileInfo(s.path, s.size, s.mtime) for s in fs.list_files_recursive(data_dir)
-            ]
-            return entry
+                rewrite_zorder_data(self.spark, self.spark.read.parquet(*paths), props, data_dir)
+            if compact:
+                carry_index_files(fs, entry, data_dir, skip_files=compact)
+            return _publish_version(entry, fs, data_dir, version)
 
         self._transact(name, conf, States.OPTIMIZING, States.ACTIVE, op)
 
@@ -1751,9 +1128,7 @@ class Hyperspace:
                     # ids that landed since the last refresh live only in
                     # the appended source files — same normalization as
                     # the index build (unit_expr applies in ann_search).
-                    raw = _relation_reader(
-                        self.spark, entry.relations[0], with_base_path=True
-                    ).load([f.path for f in appended])
+                    raw = entry.relations[0].read(self.spark, appended)
                     rows += (
                         raw.filter(F.col(props["idCol"]).isin(still))
                         .select(
@@ -2530,26 +1905,81 @@ def _signature_of(scan: ir.Scan, files: list[FileInfo]) -> str:
     return provider_for(scan).signature(scan, files)
 
 
-def _relation_reader(spark, rel: Relation, with_base_path: bool = False):
-    """DataFrameReader configured exactly like the relation's build scan:
-    stored schema + reader options (minus path).  Shared by the build
-    source and BOTH incremental-refresh appended-file readers — without
-    the options, an appended CSV with header=true would be parsed with
-    defaults, header rows becoming index data.  ``with_base_path`` adds
-    basePath for partitioned sources when loading an explicit file
-    subset (keeps partition columns resolvable)."""
-    import json as _json
+def _record_snapshot(entry: IndexLogEntry, live: list[FileInfo]) -> None:
+    """Record ``live`` as the source snapshot the entry's data now
+    indexes: tracker-id'd files, the provider's signature (Delta:
+    path+version; default: per-file metadata md5) and no pending
+    quick-refresh delta.  Shared by full and incremental refresh, so
+    every refreshed entry fingerprints its source the way create and
+    query-time candidate selection do."""
+    tracker = entry.file_id_tracker
+    rel = entry.relations[0]
+    rel.files = [FileInfo(f.path, f.size, f.mtime, tracker.add_or_get(f)) for f in live]
+    entry.signature = _signature_of(_scan_of(rel), rel.files)
+    entry.appended_files = []
+    entry.deleted_files = []
 
-    from pyspark.sql.types import StructType
 
-    reader = spark.read.format(rel.file_format)
-    if rel.data_schema_json:
-        reader = reader.schema(StructType.fromJson(_json.loads(rel.data_schema_json)))
-    if rel.options:
-        reader = reader.options(**{k: v for k, v in rel.options.items() if k != "path"})
-    if with_base_path and rel.partition_columns:
-        reader = reader.option("basePath", rel.root_paths[0])
-    return reader
+def _publish_version(entry: IndexLogEntry, fs, data_dir: str, version: int) -> IndexLogEntry:
+    """Make ``data_dir`` the entry's one current index version and list
+    its content files — the fingerprint the version cache
+    (indexes.base.version_slot) keys on.  Every write path (create, full
+    and incremental refresh, optimize) publishes through here."""
+    entry.index_data_dirs = [data_dir]
+    entry.data_version = version
+    entry.content_files = [
+        FileInfo(st.path, st.size, st.mtime) for st in fs.list_files_recursive(data_dir)
+    ]
+    return entry
+
+
+_KIND_MODULES = {
+    "CI": "covering",
+    "ZCI": "zorder",
+    "DS": "dataskipping",
+    "ANN": "ann",
+    "TXT": "inverted",
+}
+
+
+def _kind_module(kind: str):
+    """The module holding an index kind's data writers:
+    ``create_index_data`` (create and full refresh) and
+    ``refresh_incremental``."""
+    import importlib
+
+    if kind not in _KIND_MODULES:
+        raise HyperspaceException(f"Unknown index kind {kind}")
+    return importlib.import_module(f"hyperspace_spark.indexes.{_KIND_MODULES[kind]}")
+
+
+def _group_by(files: list[FileInfo], key) -> dict | None:
+    """``files`` grouped by ``key``; None when some file has no key."""
+    groups: dict = {}
+    for f in files:
+        k = key(f)
+        if k is None:
+            return None
+        groups.setdefault(k, []).append(f)
+    return groups
+
+
+def _cluster_of(f: FileInfo, base: str) -> str | None:
+    """The ``cluster=N`` partition dir of an ANN data file."""
+    rel_path = f.path[len(base) + 1 :] if f.path.startswith(base + "/") else ""
+    return rel_path.split("/", 1)[0] if "/" in rel_path else None
+
+
+def _bucket_of(f: FileInfo, base: str) -> int | None:
+    """The bucket id in a bucketed (CI/TXT) data file's name."""
+    from hyperspace_spark.indexes.covering import _BUCKET_FILE_RE
+
+    m = _BUCKET_FILE_RE.search(f.path.rsplit("/", 1)[-1])
+    return int(m.group(1)) if m else None
+
+
+# The layout unit quick optimize compacts within, by kind.
+_LAYOUT_UNIT = {"ANN": _cluster_of, "CI": _bucket_of, "TXT": _bucket_of}
 
 
 def _column_exists(scan: ir.Scan, col: str) -> bool:

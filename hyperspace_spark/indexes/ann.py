@@ -412,6 +412,102 @@ def drop_deleted_rows(
     return paths
 
 
+def encoded_rows(df: "DataFrame", props: dict) -> "DataFrame":
+    """New vectors as the index stores them: assigned to the FROZEN
+    centroids and, for PQ, encoded with the frozen codebooks, so old and
+    new rows score identically at query time.  A lineage column on
+    ``df`` rides along."""
+    from pyspark.sql import functions as F
+
+    from hyperspace_spark.config import DATA_FILE_ID_COLUMN
+
+    rows = assign_to_centroids(df, props["centroids"], props["idCol"], props["vecCol"])
+    if not props.get("pqM"):
+        return rows
+    lineage = [DATA_FILE_ID_COLUMN] if DATA_FILE_ID_COLUMN in rows.columns else []
+    return rows.select(
+        "vec_id",
+        _encode_udf(props["codebooks"])(F.col("unit_vec")).alias("codes"),
+        *lineage,
+        "cluster",
+    )
+
+
+def refresh_incremental(
+    spark: "SparkSession",
+    entry,
+    conf,
+    live,
+    appended,
+    deleted_ids: list[int],
+    data_dir: str,
+    version: int,
+    fs,
+) -> dict:
+    """Write the next IVF index version under ``data_dir``; returns the
+    new derived properties.
+
+    Assign-only increment (standard FAISS/Milvus append path): new
+    vectors join the FROZEN quantizer's clusters, only their rows are
+    written, existing cluster files hardlink through.  Drift escalation:
+    appends beyond maxAssignOnlyRatio of the corpus PARTIALLY re-cluster
+    — only clusters grown past reclusterOversizeFactor x the average are
+    re-KMeans'd (split), the rest still hardlink (bounded rewrite bytes,
+    OptimizeAction.scala's per-bucket discipline).  Appends beyond
+    maxReclusterRatio force a full refit — a badly drifted quantizer
+    degrades recall silently, which is worse than the rebuild.  Deletes
+    never touch the quantizer: lineage-built indexes drop the deleted
+    files' rows from exactly the index files holding them
+    (drop_deleted_rows); only lineage-free (legacy) indexes, or a delete
+    landing together with recluster-scale appends, pay the refit."""
+    from hyperspace_spark.indexes.base import FallBackToFull, carry_index_files, growth_ratio
+
+    props = entry.derived_properties
+    app_ratio = growth_ratio(live, appended)
+    if deleted_ids and not props.get("lineage"):
+        raise FallBackToFull()
+    if app_ratio > conf.ann_max_recluster_ratio:
+        raise FallBackToFull()
+    if deleted_ids and app_ratio > conf.ann_max_assign_only_ratio:
+        # Splitting clusters while also dropping rows makes the
+        # rewrite-bytes bound meaningless — full refit.
+        raise FallBackToFull()
+    if props.get("pqM") and app_ratio > conf.ann_max_assign_only_ratio:
+        # PQ rows carry codes, not vectors: partial re-clustering would
+        # need the originals back from the source (a corpus-scale read)
+        # — the full refit is the honest cost at that drift level.
+        raise FallBackToFull()
+    skip_files: list[str] = []
+    if deleted_ids:
+        skip_files = drop_deleted_rows(spark, entry, deleted_ids, data_dir)
+    if not appended:
+        carry_index_files(fs, entry, data_dir, skip_files=skip_files)
+        return props
+    new_df = entry.relations[0].read(spark, appended)
+    if props.get("lineage"):
+        from hyperspace_spark.indexes.covering import with_lineage
+
+        new_df = with_lineage(new_df, spark, appended, entry.file_id_tracker)
+    if app_ratio > conf.ann_max_assign_only_ratio:
+        new_centroids, split_ids = partial_recluster(
+            spark, entry, new_df, data_dir, oversize_factor=conf.ann_recluster_oversize_factor
+        )
+        # nClusters stays the CONFIGURED target (actual k =
+        # len(centroids)): a later full refresh re-balances the grown
+        # quantizer back to the configured k.
+        props["centroids"] = new_centroids
+        # Split clusters were rewritten by partial_recluster.
+        carry_index_files(
+            fs, entry, data_dir, skip_subdirs=[f"cluster={c}" for c in split_ids]
+        )
+        return props
+    # append: a delete-rewrite may already have written surviving rows
+    # under this version dir.
+    encoded_rows(new_df, props).write.partitionBy("cluster").mode("append").parquet(data_dir)
+    carry_index_files(fs, entry, data_dir, skip_files=skip_files)
+    return props
+
+
 def _adc_udf(codebooks):
     """(query_vec, codes) -> approximate dot product via asymmetric
     distance computation: score = sum_j q_sub_j . codebook_j[code_j].
@@ -531,22 +627,9 @@ def ann_search(
     payload = "codes" if props.get("pqM") else "unit_vec"
     idx = idx.select("vec_id", payload, "cluster")
     if appended:
-        from hyperspace_spark.hyperspace import _relation_reader
-
-        new_df = _relation_reader(spark, entry.relations[0], with_base_path=True).load(
-            [f.path for f in appended]
+        ap = encoded_rows(entry.relations[0].read(spark, appended), props).select(
+            "vec_id", payload, "cluster"
         )
-        ap = assign_to_centroids(
-            new_df, props["centroids"], props["idCol"], props["vecCol"]
-        )
-        if props.get("pqM"):
-            ap = ap.select(
-                "vec_id",
-                _encode_udf(props["codebooks"])(F.col("unit_vec")).alias("codes"),
-                "cluster",
-            )
-        else:
-            ap = ap.select("vec_id", "unit_vec", "cluster")
         # Checkpoint the on-the-fly assignment: the probe join references
         # `cluster` inside its condition, where a pandas-UDF-derived
         # column cannot be evaluated (Spark collapses the projection into
@@ -787,22 +870,9 @@ def ann_join(
         # assign to the FROZEN centroids on the fly (what incremental
         # refresh would persist) and join the same probe path (encoding
         # with the frozen codebooks for PQ).
-        from hyperspace_spark.hyperspace import _relation_reader
-
-        new_df = _relation_reader(spark, entry.relations[0], with_base_path=True).load(
-            [f.path for f in appended]
+        ap = encoded_rows(entry.relations[0].read(spark, appended), props).select(
+            "vec_id", payload, "cluster"
         )
-        ap = assign_to_centroids(
-            new_df, props["centroids"], props["idCol"], props["vecCol"]
-        )
-        if pq_m:
-            ap = ap.select(
-                "vec_id",
-                _encode_udf(props["codebooks"])(F.col("unit_vec")).alias("codes"),
-                "cluster",
-            )
-        else:
-            ap = ap.select("vec_id", "unit_vec", "cluster")
         ap = ap.localCheckpoint(eager=False)
         idx = idx.unionByName(ap)
     if allowed_df is not None:

@@ -1,5 +1,10 @@
-"""Index config interfaces (reference: index/Index.scala:22-168,
-IndexConfigTrait.scala:46-59)."""
+"""Index config interfaces and the helpers shared by every kind's data
+writers (reference: index/Index.scala:22-168, IndexConfigTrait.scala:46-59).
+
+Each ``indexes/<kind>.py`` writes index data only: ``create_index_data``
+for create and full refresh, ``refresh_incremental`` for the source
+delta.  Both return the new derived properties; the lifecycle in
+``hyperspace.py`` records the version and the source snapshot."""
 
 from __future__ import annotations
 
@@ -53,3 +58,43 @@ def memo_frame(slot: dict | None, key, build):
         if len(slot) < _MAX_VERSION_FRAMES:
             slot[key] = df
     return df
+
+
+class FallBackToFull(Exception):
+    """Raised by a kind's incremental refresh when only a full rebuild
+    gives a correct (or acceptably clustered) index."""
+
+
+def growth_ratio(live, appended) -> float:
+    """Appended bytes over the previously indexed corpus (live minus
+    appended).  Dividing by the live total would asymptote below 1.0 no
+    matter how much lands, so a ratio bound could never trigger."""
+    app_bytes = sum(f.size for f in appended)
+    return app_bytes / max(1, sum(f.size for f in live) - app_bytes)
+
+
+def carry_index_files(fs, entry, data_dir: str, skip_subdirs=(), skip_files=()) -> None:
+    """Hardlink every current index content file into a new version
+    dir, preserving subpaths (cluster=N partitions and flat bucketed
+    layouts alike) — the O(1)-per-file carry behind append-only
+    incremental refresh and quick optimize.  ``skip_subdirs`` drops
+    files under the named first-level subpaths (e.g. re-clustered
+    ``cluster=3`` partitions whose rows were rewritten elsewhere);
+    ``skip_files`` drops individual files by absolute old path (e.g. the
+    files a delete-refresh or a compaction rewrote elsewhere)."""
+    import os
+
+    old_base = entry.index_data_dirs[-1].rstrip("/")
+    skip = tuple(s.rstrip("/") + "/" for s in skip_subdirs)
+    skip_f = {os.path.normpath(p) for p in skip_files}
+    for f in entry.content_files:
+        rel_path = (
+            f.path[len(old_base) + 1 :]
+            if f.path.startswith(old_base + "/")
+            else f.path.rsplit("/", 1)[-1]
+        )
+        if skip and rel_path.startswith(skip):
+            continue
+        if skip_f and os.path.normpath(f.path) in skip_f:
+            continue
+        fs.link_or_copy(f.path, os.path.join(data_dir, rel_path))

@@ -24,7 +24,12 @@ from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
 from hyperspace_spark.config import DATA_FILE_ID_COLUMN, NESTED_PREFIX, HyperspaceConf
-from hyperspace_spark.indexes.base import IndexConfig, memo_frame, version_slot
+from hyperspace_spark.indexes.base import (
+    IndexConfig,
+    carry_index_files,
+    memo_frame,
+    version_slot,
+)
 from hyperspace_spark.metadata.entry import FileIdTracker, FileInfo
 
 if TYPE_CHECKING:
@@ -87,6 +92,28 @@ def with_lineage(
         df.withColumn("_hs_path", F.input_file_name())
         .join(F.broadcast(idmap), "_hs_path", "left")
         .drop("_hs_path")
+    )
+
+
+def index_projection(
+    spark: "SparkSession",
+    df: "DataFrame",
+    cols: list[str],
+    lineage: bool,
+    files: list[FileInfo],
+    tracker: FileIdTracker,
+) -> "DataFrame":
+    """The index slice of ``df``: ``cols``, nested paths flattened to
+    top-level ``__hs_nested.a.b.c`` columns (reference: ResolverUtils
+    nested prefix, util/ResolverUtils.scala:86), plus the lineage column
+    of ``files`` when ``lineage``."""
+    from pyspark.sql import functions as F
+
+    if lineage:
+        df = with_lineage(df, spark, files, tracker)
+    return df.select(
+        *[F.col(c).alias(flattened_name(c)) if "." in c else F.col(c) for c in cols],
+        *([F.col(DATA_FILE_ID_COLUMN)] if lineage else []),
     )
 
 
@@ -156,25 +183,14 @@ def create_index_data(
 ) -> dict:
     """Build and write one version of covering-index data; returns derived
     properties for the log entry."""
-    from pyspark.sql import functions as F
-
     tbl = table_name(index_name, version)
-    cols = config.referenced_columns()
     pred_props = {}
     where = getattr(config, "where", None)
     if where:
         df, pred_props = _apply_partial_predicate(df, where)
-    projected = df
-    if conf.lineage_enabled:
-        projected = with_lineage(df, spark, files, tracker)
-    # Nested fields flatten to top-level "__hs_nested.a.b.c" columns
-    # (reference: ResolverUtils nested prefix, util/ResolverUtils.scala:86).
-    select_exprs = [
-        F.col(c).alias(NESTED_PREFIX + c) if "." in c else F.col(c) for c in cols
-    ]
-    if conf.lineage_enabled:
-        select_exprs.append(F.col(DATA_FILE_ID_COLUMN))
-    projected = projected.select(*select_exprs)
+    projected = index_projection(
+        spark, df, config.referenced_columns(), conf.lineage_enabled, files, tracker
+    )
 
     bucket_cols = [flattened_name(c) for c in config.indexed_columns]
     num_buckets = getattr(config, "num_buckets", None) or conf.resolve_num_buckets(
@@ -190,6 +206,64 @@ def create_index_data(
         "tableName": tbl,
         **pred_props,
     }
+
+
+def refresh_incremental(
+    spark: "SparkSession",
+    entry,
+    conf: HyperspaceConf,
+    live: list[FileInfo],
+    appended: list[FileInfo],
+    deleted_ids: list[int],
+    data_dir: str,
+    version: int,
+    fs,
+) -> dict:
+    """Write the next covering-index version under ``data_dir`` from the
+    source delta; returns the new derived properties.
+
+    Append-only delta (the common 100 TB shape: new files land, nothing
+    deleted): write ONLY the appended rows as additional bucket files
+    and hardlink the existing index files into the new version dir —
+    zero read or write amplification on the already-indexed data.
+    Multiple files per bucket are fine for Spark's bucketed scan (it
+    groups by the bucket id in the file name); quick optimize later
+    compacts the accumulation.  Deletes rewrite the index minus the
+    deleted files' rows (lineage anti-filter)."""
+    from pyspark.sql import functions as F
+
+    from hyperspace_spark.hyperspace import HyperspaceException
+
+    props = entry.derived_properties
+    lineage = props.get("lineage", False)
+    if deleted_ids and not lineage:
+        raise HyperspaceException("cannot handle deleted files without lineage")
+    append_only = bool(appended) and not deleted_ids
+    parts = []
+    if not append_only:
+        old = spark.read.parquet(*entry.index_data_dirs)
+        if deleted_ids:
+            old = old.filter(~F.col(DATA_FILE_ID_COLUMN).isin(deleted_ids))
+        parts = [old]
+    if appended:
+        new_df = entry.relations[0].read(spark, appended)
+        if props.get("filterPredicate"):
+            # Partial index: appended files contribute only the rows
+            # satisfying the build predicate, exactly like the create path.
+            new_df = new_df.filter(props["filterPredicate"])
+        cols = props["indexedColumns"] + props["includedColumns"]
+        parts.append(
+            index_projection(spark, new_df, cols, lineage, appended, entry.file_id_tracker)
+        )
+    merged = parts[0]
+    for p in parts[1:]:
+        merged = merged.unionByName(p)
+    tbl = table_name(entry.name, version)
+    bucket_cols = [flattened_name(c) for c in props["indexedColumns"]]
+    write_bucketed(spark, merged, bucket_cols, props["numBuckets"], data_dir, tbl)
+    if append_only:
+        carry_index_files(fs, entry, data_dir)
+    return {**props, "tableName": tbl}
 
 
 def _apply_partial_predicate(df: "DataFrame", where: str) -> tuple:
@@ -262,15 +336,6 @@ import re as _re
 
 # saveAsTable bucketed file naming: part-00000-<uuid>_00003.c000.snappy.parquet
 _BUCKET_FILE_RE = _re.compile(r"_(\d{5})\.c\d+")
-
-
-def bucket_pruned_files(entry, lits) -> list[str] | None:
-    """Single-column form of :func:`bucket_pruned_files_multi` (kept as
-    the point-probe API: equality/IN literals on the one bucket column)."""
-    indexed = entry.derived_properties.get("indexedColumns", [])
-    if len(indexed) != 1:
-        return None
-    return bucket_pruned_files_multi(entry, [lits] if lits else None)
 
 
 _MAX_BUCKET_COMBOS = 64  # IN x IN cartesian cap: plan/driver-work safety
@@ -456,18 +521,8 @@ def index_scan_df(
     df = _select_reconstructed(df, output_columns, from_index=True)
 
     if appended:
-        rel = entry.relations[0]
-        reader = spark.read.format(rel.file_format)
-        if rel.data_schema_json:
-            reader = reader.schema(StructType.fromJson(json.loads(rel.data_schema_json)))
-        if rel.options:
-            reader = reader.options(**{k: v for k, v in rel.options.items() if k != "path"})
-        if rel.partition_columns:
-            # Loading files directly loses hive-partition columns unless
-            # basePath anchors the partition discovery.
-            reader = reader.option("basePath", rel.root_paths[0])
         src = _select_reconstructed(
-            reader.load([f.path for f in appended]), output_columns, from_index=False
+            entry.relations[0].read(spark, appended), output_columns, from_index=False
         )
         df = df.unionByName(src)
     return df

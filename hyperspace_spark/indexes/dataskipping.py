@@ -33,7 +33,6 @@ from hyperspace_spark.config import DATA_FILE_ID_COLUMN
 from hyperspace_spark.indexes.base import IndexConfig, version_slot
 from hyperspace_spark.indexes.sketches import BloomFilterSketch, Sketch, sketch_from_json
 from hyperspace_spark.metadata.entry import FileIdTracker, FileInfo
-from hyperspace_spark.metadata.signature import file_based_signature
 from hyperspace_spark.planner.expr import BoolOp, Expr, NotExpr
 
 if TYPE_CHECKING:
@@ -95,6 +94,19 @@ def _sketch_per_file(df: "DataFrame", sketches: list[Sketch]) -> "DataFrame":
     return out
 
 
+def _id_mapped_sketches(spark, df, sketches, files, tracker) -> "DataFrame":
+    """Per-file sketch rows of ``df`` keyed by the files' tracker ids
+    (broadcast id join)."""
+    from pyspark.sql import functions as F
+
+    idmap = spark.createDataFrame(
+        [(_file_key(f.path), tracker.add_or_get(f)) for f in files],
+        f"_hs_file string, {DATA_FILE_ID_COLUMN} long",
+    )
+    per_file = _sketch_per_file(df, sketches)
+    return per_file.join(F.broadcast(idmap), "_hs_file", "inner").drop("_hs_file")
+
+
 def create_index_data(
     spark: "SparkSession",
     df: "DataFrame",
@@ -108,14 +120,7 @@ def create_index_data(
 ) -> dict:
     """groupBy(input_file_name()) sketch aggregation + broadcast id join
     (reference: DataSkippingIndex.createIndexData :291-317)."""
-    from pyspark.sql import functions as F
-
-    per_file = _sketch_per_file(df, config.sketches)
-    idmap = spark.createDataFrame(
-        [(_file_key(f.path), tracker.add_or_get(f)) for f in files],
-        f"_hs_file string, {DATA_FILE_ID_COLUMN} long",
-    )
-    index_df = per_file.join(F.broadcast(idmap), "_hs_file", "inner").drop("_hs_file")
+    index_df = _id_mapped_sketches(spark, df, config.sketches, files, tracker)
 
     # Size-targeted repartition (reference: DataSkippingIndex.scala:196-204):
     # ~1 KB per row estimate; clamp by the max-file-count knob.
@@ -131,64 +136,34 @@ def refresh_incremental(
     spark: "SparkSession",
     entry,
     conf,
+    live: list[FileInfo],
     appended: list[FileInfo],
-    deleted: list[FileInfo],
-    mgr,
+    deleted_ids: list[int],
+    data_dir: str,
     version: int,
     fs,
-):
-    """Sketch only the appended files; drop rows of deleted files by id
-    (reference: RefreshIncrementalAction + DataSkippingIndex.scala:90-103
-    left-anti semantics — expressed as a NOT IN filter over the tiny
-    per-file index, which Catalyst compiles to the same thing)."""
+) -> dict:
+    """Write the next sketch version under ``data_dir``: sketch only the
+    appended files (read like the build scan, reader options included)
+    and drop the rows of deleted files by id (reference:
+    RefreshIncrementalAction + DataSkippingIndex.scala:90-103 left-anti
+    semantics — expressed as a NOT IN filter over the tiny per-file
+    index, which Catalyst compiles to the same thing).  Returns the
+    derived properties unchanged; the caller records the version."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
-    tracker = entry.file_id_tracker
-    config = DataSkippingIndexConfig(
-        entry.name, [sketch_from_json(s) for s in entry.derived_properties["sketches"]]
-    )
-    old = spark.read.schema(
-        StructType.fromJson(json.loads(entry.derived_properties["schemaJson"]))
-    ).parquet(*entry.index_data_dirs)
-    if deleted:
-        ids = [tracker.get(f) for f in deleted]
-        old = old.filter(~F.col(DATA_FILE_ID_COLUMN).isin([i for i in ids if i is not None]))
-    parts = [old]
+    props = entry.derived_properties
+    merged = _read_sketches(spark, entry)
+    if deleted_ids:
+        merged = merged.filter(~F.col(DATA_FILE_ID_COLUMN).isin(deleted_ids))
     if appended:
-        appended = [FileInfo(f.path, f.size, f.mtime, tracker.add_or_get(f)) for f in appended]
-        rel = entry.relations[0]
-        reader = spark.read.format(rel.file_format)
-        if rel.data_schema_json:
-            reader = reader.schema(StructType.fromJson(json.loads(rel.data_schema_json)))
-        if rel.partition_columns:
-            reader = reader.option("basePath", rel.root_paths[0])
-        new_src = reader.load([f.path for f in appended])
-        per_file = _sketch_per_file(new_src, config.sketches)
-        idmap = spark.createDataFrame(
-            [(_file_key(f.path), f.id) for f in appended],
-            f"_hs_file string, {DATA_FILE_ID_COLUMN} long",
+        sketches = [sketch_from_json(s) for s in props["sketches"]]
+        new_src = entry.relations[0].read(spark, appended)
+        merged = merged.unionByName(
+            _id_mapped_sketches(spark, new_src, sketches, appended, entry.file_id_tracker)
         )
-        parts.append(per_file.join(F.broadcast(idmap), "_hs_file", "inner").drop("_hs_file"))
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    data_dir = mgr.data_dir(version)
     merged.repartition(1).write.mode("overwrite").parquet(data_dir)
-
-    indexed = entry.source_files_by_key()
-    for f in deleted:
-        indexed.pop(f.key(), None)
-    for f in appended:
-        indexed[f.key()] = f
-    entry.relations[0].files = list(indexed.values())
-    entry.signature = file_based_signature(entry.relations[0].files)
-    entry.index_data_dirs = [data_dir]
-    entry.data_version = version
-    entry.content_files = [
-        FileInfo(s.path, s.size, s.mtime) for s in fs.list_files_recursive(data_dir)
-    ]
-    return entry
+    return props
 
 
 # ---------------------------------------------------------------------------
@@ -258,24 +233,26 @@ def translate(cond: Expr, sketches: list[Sketch]) -> SkipPredicate:
 SKETCH_CACHE_MAX_BYTES = 8 << 20
 
 
+def _read_sketches(spark: "SparkSession", entry) -> "DataFrame":
+    from pyspark.sql.types import StructType
+
+    return spark.read.schema(
+        StructType.fromJson(json.loads(entry.derived_properties["schemaJson"]))
+    ).parquet(*entry.index_data_dirs)
+
+
 def _sketch_frame(spark: "SparkSession", entry, slot: dict | None) -> "DataFrame":
     """The per-file sketch rows of ``entry``'s version.  Small versions
     are collected once into a driver-side ``LocalRelation`` held in
     ``slot``, so later filters over it fold to local rows (Catalyst's
     ``ConvertToLocalRelation``) and start no Spark job."""
     from pyspark.sql import DataFrame
-    from pyspark.sql.types import StructType
-
-    def read():
-        return spark.read.schema(
-            StructType.fromJson(json.loads(entry.derived_properties["schemaJson"]))
-        ).parquet(*entry.index_data_dirs)
 
     if slot is None or sum(f.size for f in entry.content_files) > SKETCH_CACHE_MAX_BYTES:
-        return read()
+        return _read_sketches(spark, entry)
     df = slot.get("sketch")
     if df is None:
-        jdf = read()._jdf
+        jdf = _read_sketches(spark, entry)._jdf
         df = slot["sketch"] = DataFrame(
             spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema()), spark
         )

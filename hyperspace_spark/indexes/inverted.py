@@ -20,6 +20,7 @@ in any engine (the contract oracle replays it in DuckDB).
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING, Iterable
 
@@ -132,25 +133,19 @@ def postings_df(
     return _doc_postings(src, config.id_col, config.text_col, DATA_FILE_ID_COLUMN)
 
 
-def file_doc_stats(spark: "SparkSession", data_dir: str, schema_json: str) -> dict:
-    """Per-source-file corpus statistics from the WRITTEN postings:
+def file_doc_stats(postings: "DataFrame") -> dict:
+    """Per-source-file corpus statistics of a postings frame:
     ``{file_id: [n_docs, n_tokens]}`` (docs with >= 1 token; total token
-    occurrences).  Read back from the index files — one tiny aggregate
-    over postings, never the corpus — so BM25's N and avgdl come from
-    the entry properties with NO query-time job, and stay exactly
-    adjustable per deleted/appended source file."""
-    import json as _json
-
+    occurrences).  One tiny aggregate over postings, never the corpus —
+    so BM25's N and avgdl come from the entry properties with NO
+    query-time job, and stay exactly adjustable per deleted/appended
+    source file."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     from hyperspace_spark.config import DATA_FILE_ID_COLUMN
 
-    schema = StructType.fromJson(_json.loads(schema_json))
     rows = (
-        spark.read.schema(schema)
-        .parquet(data_dir)
-        .groupBy(DATA_FILE_ID_COLUMN)
+        postings.groupBy(DATA_FILE_ID_COLUMN)
         .agg(
             F.count_distinct("_doc").alias("_nd"),
             F.sum("tf").cast("long").alias("_nt"),
@@ -158,6 +153,14 @@ def file_doc_stats(spark: "SparkSession", data_dir: str, schema_json: str) -> di
         .collect()
     )
     return {str(r[0]): [int(r["_nd"]), int(r["_nt"])] for r in rows}
+
+
+def _read_postings(spark: "SparkSession", props: dict, *paths: str) -> "DataFrame":
+    from pyspark.sql.types import StructType
+
+    return spark.read.schema(StructType.fromJson(json.loads(props["schemaJson"]))).parquet(
+        *paths
+    )
 
 
 def create_index_data(
@@ -179,20 +182,115 @@ def create_index_data(
     )
     postings = postings_df(spark, df, config, files, tracker)
     write_bucketed(spark, postings, ["token"], nb, data_dir, tbl)
-    schema_json = postings.schema.json()
-    return {
+    props = {
         "indexedColumns": ["token"],
         "includedColumns": ["_doc", "tf", "positions", "_dl"],
         "numBuckets": nb,
         "lineage": True,
-        "schemaJson": schema_json,
+        "schemaJson": postings.schema.json(),
         "tableName": tbl,
         "textCol": config.text_col,
         "idCol": config.id_col,
-        # {file_id: [n_docs, n_tokens]} — exact BM25 corpus stats,
-        # adjustable per-file at query time for hybrid appends/deletes.
-        "fileDocStats": file_doc_stats(spark, data_dir, schema_json),
     }
+    # {file_id: [n_docs, n_tokens]} — exact BM25 corpus stats, read back
+    # from the written postings and adjustable per-file at query time for
+    # hybrid appends/deletes.
+    props["fileDocStats"] = file_doc_stats(_read_postings(spark, props, data_dir))
+    return props
+
+
+def refresh_incremental(
+    spark: "SparkSession",
+    entry,
+    conf,
+    live,
+    appended,
+    deleted_ids: list[int],
+    data_dir: str,
+    version: int,
+    fs,
+) -> dict:
+    """Write the next postings version under ``data_dir``; returns the
+    new derived properties.
+
+    Retained bucket files hardlink into the new version (flat bucketed
+    layout), the NEW docs' postings append as extra per-bucket files
+    under the same bucket spec.  Deletes rewrite only the posting files
+    holding the deleted docs' rows (lineage anti-filter — postings carry
+    the source file id), so a delete costs index-bytes of the affected
+    files, never a corpus re-tokenize; the rewritten survivors re-enter
+    through the same bucketed write, so bucket pruning is untouched.  A
+    STALE index still answers exactly either way (query-time
+    anti-filter)."""
+    import os
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    from hyperspace_spark.config import DATA_FILE_ID_COLUMN
+    from hyperspace_spark.indexes.base import carry_index_files
+    from hyperspace_spark.indexes.covering import lineage_affected_files, table_name
+
+    props = entry.derived_properties
+    cfg = InvertedTextIndexConfig(entry.name, props["textCol"], props["idCol"])
+    new_postings = None
+    if appended:
+        new_postings = postings_df(
+            spark, entry.relations[0].read(spark, appended), cfg, appended, entry.file_id_tracker
+        ).persist()
+    skip_files: list[str] = []
+    survivors = None
+    if deleted_ids:
+        skip_files = lineage_affected_files(
+            _read_postings(spark, props, *entry.index_data_dirs), deleted_ids
+        )
+        if skip_files:
+            survivors = _read_postings(spark, props, *skip_files).filter(
+                ~F.col(DATA_FILE_ID_COLUMN).isin(deleted_ids)
+            )
+    os.makedirs(data_dir, exist_ok=True)
+    carry_index_files(fs, entry, data_dir, skip_files=skip_files)
+    nb = props["numBuckets"]
+    tbl = table_name(entry.name, version)
+    # Register the new version's external bucketed table over the
+    # hardlinked files FIRST: saveAsTable(mode=append) on a NON-existent
+    # table is CTAS and CLEARS the target directory, silently dropping
+    # the retained postings.  Appending to the pre-registered table keeps
+    # them.
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    schema = StructType.fromJson(json.loads(props["schemaJson"]))
+    cols_ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
+    spark.sql(
+        f"CREATE TABLE {tbl} ({cols_ddl}) USING parquet "
+        f"CLUSTERED BY (`token`) SORTED BY (`token`) "
+        f"INTO {nb} BUCKETS LOCATION '{data_dir}'"
+    )
+    delta = new_postings
+    if survivors is not None:
+        delta = survivors if delta is None else delta.unionByName(survivors)
+    if delta is not None:
+        (
+            delta.repartition(nb, F.col("token"))
+            .write.format("parquet")
+            .mode("append")
+            .bucketBy(nb, "token")
+            .sortBy("token")
+            .option("path", data_dir)
+            .saveAsTable(tbl)
+        )
+    props["tableName"] = tbl
+    # Merge the appended files' BM25 corpus stats into the per-file stats
+    # map — one tiny aggregate over the (persisted) posting delta, so
+    # ranked retrieval stays exact after refresh; deleted files' stats
+    # rows drop (their postings just left).
+    merged = dict(props.get("fileDocStats") or {})
+    for i in deleted_ids:
+        merged.pop(str(i), None)
+    if new_postings is not None:
+        merged.update(file_doc_stats(new_postings))
+        new_postings.unpersist()
+    props["fileDocStats"] = merged
+    return props
 
 
 def _probe_hits(
@@ -267,12 +365,7 @@ def _probe_hits(
     )
 
     if appended:
-        from hyperspace_spark.hyperspace import _relation_reader
-
-        rel = entry.relations[0]
-        raw = _relation_reader(spark, rel, with_base_path=True).load(
-            [f.path for f in appended]
-        )
+        raw = entry.relations[0].read(spark, appended)
         # Appended files have no tracker id yet: derive the copy key from
         # the file name AT THE SCAN (input_file_name() is empty after any
         # exchange, and _doc_postings' groupBy must key on it so two
@@ -321,13 +414,9 @@ def _corpus_stats(spark: "SparkSession", entry, appended=None, deleted=None):
         n_docs += int(nd)
         n_tokens += int(nt)
     if appended:
-        from hyperspace_spark.hyperspace import _relation_reader
         from hyperspace_spark.llm.text import tokens
 
-        rel = entry.relations[0]
-        raw = _relation_reader(spark, rel, with_base_path=True).load(
-            [f.path for f in appended]
-        )
+        raw = entry.relations[0].read(spark, appended)
         row = (
             raw.filter(F.col(props["textCol"]).isNotNull())
             .select(

@@ -26,7 +26,12 @@ from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
 from hyperspace_spark.config import DATA_FILE_ID_COLUMN, HyperspaceConf
-from hyperspace_spark.indexes.base import IndexConfig
+from hyperspace_spark.indexes.base import (
+    FallBackToFull,
+    IndexConfig,
+    carry_index_files,
+    growth_ratio,
+)
 from hyperspace_spark.metadata.entry import FileIdTracker, FileInfo
 
 if TYPE_CHECKING:
@@ -202,11 +207,8 @@ def create_index_data(
 ) -> dict:
     from pyspark.sql import functions as F
 
-    from hyperspace_spark.indexes.covering import with_lineage
+    from hyperspace_spark.indexes.covering import flattened_name, index_projection
 
-    from hyperspace_spark.indexes.covering import flattened_name
-
-    cols = config.referenced_columns()
     # Nested paths flatten to literal `__hs_nested.a.b` column names — the
     # same physical convention as covering indexes, so query-time struct
     # reconstruction (covering._select_reconstructed) works unchanged.
@@ -218,12 +220,8 @@ def create_index_data(
         from hyperspace_spark.indexes.covering import _apply_partial_predicate
 
         df, pred_props = _apply_partial_predicate(df, where)
-    projected = df
-    if conf.lineage_enabled:
-        projected = with_lineage(df, spark, files, tracker)
-    projected = projected.select(
-        *[F.col(c).alias(flattened_name(c)) if "." in c else F.col(c) for c in cols],
-        *([DATA_FILE_ID_COLUMN] if conf.lineage_enabled else []),
+    projected = index_projection(
+        spark, df, config.referenced_columns(), conf.lineage_enabled, files, tracker
     )
     idx_flat = [flattened_name(c) for c in config.indexed_columns]
 
@@ -295,17 +293,11 @@ def append_index_data(
 
     from pyspark.sql import functions as F
 
-    from hyperspace_spark.indexes.covering import flattened_name, with_lineage
+    from hyperspace_spark.indexes.covering import flattened_name, index_projection
 
     props = entry.derived_properties
     cols = list(props["indexedColumns"]) + list(props["includedColumns"])
-    projected = df
-    if props.get("lineage"):
-        projected = with_lineage(df, spark, files, tracker)
-    projected = projected.select(
-        *[F.col(c).alias(flattened_name(c)) if "." in c else F.col(c) for c in cols],
-        *([DATA_FILE_ID_COLUMN] if props.get("lineage") else []),
-    )
+    projected = index_projection(spark, df, cols, props.get("lineage"), files, tracker)
     idx_flat = [flattened_name(c) for c in props["indexedColumns"]]
     target = props.get("targetBytesPerPartition") or conf.zorder_target_bytes_per_partition
     n_parts = max(1, math.ceil(sum(f.size for f in files) / target))
@@ -377,6 +369,66 @@ def drop_deleted_rows(
         else {}
     )
     return paths, stats
+
+
+def refresh_incremental(
+    spark: "SparkSession",
+    entry,
+    conf: HyperspaceConf,
+    live: list[FileInfo],
+    appended: list[FileInfo],
+    deleted_ids: list[int],
+    data_dir: str,
+    version: int,
+    fs,
+) -> dict:
+    """Write the next z-order index version under ``data_dir``; returns
+    the new derived properties.
+
+    Bounded appends z-cluster LOCALLY into their own files (frozen
+    build-time scaling, like the ANN quantizer); retained files hardlink
+    through and their per-file min/max pruning stays exact — the
+    locally-clustered-delta-over-clustered-base layout production table
+    formats ship between OPTIMIZE runs.  Deletes rewrite only the
+    z-files holding deleted rows via the lineage anti-filter (surviving
+    rows keep their z-sort; the production DELETE shape).  Lineage-free
+    legacy entries with deletes and drift beyond
+    zorder.maxIncrementalRatio fall back to a full re-cluster; a later
+    full refresh restores one global interleave."""
+    props = entry.derived_properties
+    if deleted_ids and not props.get("lineage"):
+        raise FallBackToFull()
+    if growth_ratio(live, appended) > conf.zorder_max_incremental_ratio:
+        raise FallBackToFull()
+    new_stats, n_new_parts = {}, 0
+    if appended:
+        new_df = entry.relations[0].read(spark, appended)
+        if props.get("filterPredicate"):
+            # Partial z-order index: appended files contribute only
+            # predicate rows (create-path parity).
+            new_df = new_df.filter(props["filterPredicate"])
+        new_stats, n_new_parts = append_index_data(
+            spark, new_df, entry, conf, appended, entry.file_id_tracker, data_dir
+        )
+    skip_files: list[str] = []
+    if deleted_ids:
+        skip_files, survivor_stats = drop_deleted_rows(spark, entry, deleted_ids, data_dir)
+        new_stats = {**new_stats, **survivor_stats}
+    carry_index_files(fs, entry, data_dir, skip_files=skip_files)
+    if props.get("fileStats"):
+        merged = dict(props["fileStats"])
+        for p in skip_files:
+            merged.pop(p.rsplit("/", 1)[-1], None)
+        merged.update(new_stats)
+        # Same log-size guard collect_file_stats enforces at build: past
+        # the cap, drop the stats (pruning disables, correctness
+        # unaffected) rather than bloat every future log entry.
+        props["fileStats"] = merged if len(merged) <= _FILESTATS_MAX_FILES else {}
+    # OPTIMIZE sizes its per-layout compaction from numBuckets: account
+    # for the appended partitions or the grown index compacts back into
+    # the build-time count (files ~2x target after repeated appends).
+    props["numBuckets"] = int(props.get("numBuckets", 0)) + int(n_new_parts)
+    return props
 
 
 # ---------------------------------------------------------------------------

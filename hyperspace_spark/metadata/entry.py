@@ -137,6 +137,28 @@ class Relation:
             partition_columns=d.get("partitionColumns", []),
         )
 
+    def read(self, spark, files: list[FileInfo] | None = None):
+        """The relation's rows, read exactly like its build scan: stored
+        schema + reader options (minus path).  Every read of source files
+        goes through here — the build source, incremental refresh and the
+        hybrid-scan appended readers — because without the options an
+        appended CSV with header=true would be parsed with defaults and
+        its header row would become index data.  ``files`` restricts the
+        read to those source files; basePath is then added for
+        partitioned sources so partition columns stay resolvable."""
+        from pyspark.sql.types import StructType
+
+        reader = spark.read.format(self.file_format)
+        if self.data_schema_json:
+            reader = reader.schema(StructType.fromJson(json.loads(self.data_schema_json)))
+        if self.options:
+            reader = reader.options(**{k: v for k, v in self.options.items() if k != "path"})
+        if files is None:
+            return reader.load(self.root_paths)
+        if self.partition_columns:
+            reader = reader.option("basePath", self.root_paths[0])
+        return reader.load([f.path for f in files])
+
 
 @dataclass
 class IndexLogEntry:

@@ -137,10 +137,6 @@ def _substitute_scan(node: ir.Node, scan: ir.Scan, replacement, index_name: str)
     return _substitute_scans(node, {id(scan): (replacement, index_name)})
 
 
-def _has_equality_on(cond, column: str) -> bool:
-    return equality_literals(cond, column) is not None
-
-
 def equality_literals(cond, column: str):
     """Literals a top-level equality/IN conjunct pins ``column`` to, or
     None when no such conjunct exists.

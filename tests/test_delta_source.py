@@ -166,6 +166,38 @@ def test_refresh_full_on_delta_uses_snapshot(spark, dtab, tmp_path):
     assert entry.signature == hashlib.md5(f"delta:{dtab}@2".encode()).hexdigest()
 
 
+def test_refresh_incremental_skipping_on_delta_uses_snapshot_signature(spark, tmp_path):
+    """Incremental refresh of a data-skipping index records the PROVIDER's
+    signature (path+version), like create and full refresh: a per-file
+    md5 never matches the Delta scan's, so with hybrid scan off the
+    refreshed index would stop applying."""
+    import hashlib
+
+    from hyperspace_spark import DataSkippingIndexConfig, MinMaxSketch
+
+    root = str(tmp_path / "ds_delta")
+    o = table(spark, "orders")
+    write_delta(o.filter("o_orderkey < 3000"), root)  # v0
+    hs = Hyperspace(spark, system_path=str(tmp_path / "idx"))
+    hs.create_index(
+        read_delta(spark, root),
+        DataSkippingIndexConfig("d_ds", [MinMaxSketch(["o_orderkey"])]),
+    )
+    write_delta(o.filter("o_orderkey >= 3000"), root)  # v1
+    hs.refresh_index("d_ds", "incremental")
+    entry = next(e for e in hs._active_entries(hs.conf()) if e.name == "d_ds")
+    assert entry.signature == hashlib.md5(f"delta:{root}@1".encode()).hexdigest()
+
+    spark.conf.set("spark.hyperspace.index.hybridscan.enabled", "false")
+    try:
+        q = read_delta(spark, root).filter("o_orderkey < 100").select("o_orderkey", "o_custkey")
+        fast, used = hs._apply_with_info(q)
+        assert used == ["d_ds"], hs.why_not(q)
+        assert rows_equal(q, fast)
+    finally:
+        spark.conf.set("spark.hyperspace.index.hybridscan.enabled", "true")
+
+
 def test_overwrite_mode_replaces_content(spark, tmp_path):
     root = str(tmp_path / "ow_delta")
     o = table(spark, "orders")

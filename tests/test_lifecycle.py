@@ -233,28 +233,35 @@ def test_optimize_rejects_bad_mode(spark, tmp_path):
     assert used == ["m_idx"]
 
 
+def _refresh_header_csv(spark, tmp_path, config):
+    """A header=true CSV source indexed by ``config``; one more header'd
+    CSV file is appended and the index refreshed incrementally.  Returns
+    (hs, the re-read source frame)."""
+    src = str(tmp_path / "csv_src")
+
+    def write(lo, hi, mode):
+        spark.range(lo, hi).selectExpr(
+            "id AS k", "id * 10 AS v", "concat('s', id % 3) AS s"
+        ).coalesce(1).write.option("header", "true").mode(mode).csv(src)
+
+    def read():
+        return spark.read.option("header", "true").option("inferSchema", "true").csv(src)
+
+    write(0, 50, "errorifexists")
+    hs = Hyperspace(spark, system_path=str(tmp_path / "idx3"))
+    hs.create_index(read(), config)
+    write(50, 80, "append")
+    hs.refresh_index(config.name, "incremental")
+    return hs, read()
+
+
 def test_refresh_incremental_preserves_reader_options(spark, tmp_path):
     """Appended files must be read with the SAME reader options as the
     build scan: a header=true CSV appended without options would parse
     header rows as data and union corrupt rows into the index."""
-    import shutil
-
-    from hyperspace_spark import CoveringIndexConfig, Hyperspace
-    from pyspark.sql import functions as F
-
-    src = str(tmp_path / "csv_src")
-    spark.range(0, 50).selectExpr("id AS k", "id * 10 AS v").coalesce(1).write.option(
-        "header", "true"
-    ).csv(src)
-    df = spark.read.option("header", "true").option("inferSchema", "true").csv(src)
-    hs = Hyperspace(spark, system_path=str(tmp_path / "idx3"))
-    hs.create_index(df, CoveringIndexConfig("csv_idx", ["k"], ["v"]))
-    # append another header'd CSV file
-    spark.range(50, 80).selectExpr("id AS k", "id * 10 AS v").coalesce(1).write.option(
-        "header", "true"
-    ).mode("append").csv(src)
-    hs.refresh_index("csv_idx", "incremental")
-    df2 = spark.read.option("header", "true").option("inferSchema", "true").csv(src)
+    hs, df2 = _refresh_header_csv(
+        spark, tmp_path, CoveringIndexConfig("csv_idx", ["k"], ["v"])
+    )
     q = df2.filter(F.col("k") == 60).select("k", "v")
     fast, used = hs._apply_with_info(q)
     assert used == ["csv_idx"], hs.why_not(q)
@@ -262,6 +269,31 @@ def test_refresh_incremental_preserves_reader_options(spark, tmp_path):
     # no header-row garbage made it into the index
     allrows = hs.apply(df2.select("k", "v")).collect()
     assert len(allrows) == 80 and all(isinstance(r.k, int) for r in allrows)
+
+
+def test_refresh_incremental_skipping_preserves_reader_options(spark, tmp_path):
+    """The same header'd-CSV append on a data-skipping index: sketching
+    the header row as data would add a row to the appended file's row
+    count and the value 's' to its value list, so metadata-only
+    count(*) and count(DISTINCT s) would disagree with the source."""
+    from hyperspace_spark import (
+        DataSkippingIndexConfig,
+        MinMaxSketch,
+        RowCountSketch,
+        ValueListSketch,
+    )
+
+    config = DataSkippingIndexConfig(
+        "csv_ds", [ValueListSketch(["s"]), RowCountSketch(), MinMaxSketch(["k"])]
+    )
+    hs, df2 = _refresh_header_csv(spark, tmp_path, config)
+    for q in (
+        df2.agg(F.count("*").alias("c")),
+        df2.agg(F.countDistinct("s").alias("d")),
+    ):
+        fast, used = hs._apply_with_info(q)
+        assert used == ["csv_ds"], hs.why_not(q)
+        assert fast.collect() == q.collect()
 
 
 def test_incremental_refresh_appends_only_new_bucket_files(spark, hs, mutable_src, tmp_path):
