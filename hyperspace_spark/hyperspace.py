@@ -17,7 +17,7 @@ from typing import TYPE_CHECKING, Callable
 
 from hyperspace_spark.config import HyperspaceConf
 from hyperspace_spark.fs import filesystem_for
-from hyperspace_spark.indexes.base import FallBackToFull, carry_index_files
+from hyperspace_spark.indexes.base import FallBackToFull, carry_index_files, read_index
 from hyperspace_spark.metadata.entry import FileIdTracker, FileInfo, IndexLogEntry, Relation, States
 from hyperspace_spark.metadata.log_manager import IndexLogManager
 from hyperspace_spark.planner import ir
@@ -645,10 +645,6 @@ class Hyperspace:
             small = [f for f in entry.content_files if f.size < conf.optimize_file_size_threshold]
             if mode == "quick" and len(small) <= 1:
                 return entry
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
             from hyperspace_spark.indexes import covering as cov
 
             props = entry.derived_properties
@@ -670,22 +666,17 @@ class Hyperspace:
                     compact = sorted(f.path for g in groups.values() if len(g) > 1 for f in g)
                     if not compact:
                         return entry  # every unit already has <=1 small file
-            paths = compact or entry.index_data_dirs
+            df = read_index(self.spark, entry, compact)
 
             if kind == "ANN":
-                schema = StructType.fromJson(_json.loads(props["schemaJson"]))
-                df = self.spark.read.schema(schema).option("basePath", old_base).parquet(*paths)
                 # sub-threshold files by definition: one task suffices
                 df = df.coalesce(1) if compact else df.repartition("cluster")
                 df.write.partitionBy("cluster").mode("overwrite").parquet(data_dir)
             elif kind in ("CI", "TXT"):
-                reader = self.spark.read
-                if compact:
-                    reader = reader.schema(StructType.fromJson(_json.loads(props["schemaJson"])))
                 tbl = cov.table_name(name, version)
                 cov.write_bucketed(
                     self.spark,
-                    reader.parquet(*paths),
+                    df,
                     [cov.flattened_name(c) for c in props["indexedColumns"]],
                     props["numBuckets"],
                     data_dir,
@@ -695,13 +686,11 @@ class Hyperspace:
             elif kind == "DS":
                 # Skipping index data is tiny (one row per source file):
                 # compact to a single file.
-                self.spark.read.parquet(*paths).coalesce(1).write.mode("overwrite").parquet(
-                    data_dir
-                )
+                df.coalesce(1).write.mode("overwrite").parquet(data_dir)
             else:
                 from hyperspace_spark.indexes.zorder import rewrite_zorder_data
 
-                rewrite_zorder_data(self.spark, self.spark.read.parquet(*paths), props, data_dir)
+                rewrite_zorder_data(self.spark, df, props, data_dir)
             if compact:
                 carry_index_files(fs, entry, data_dir, skip_files=compact)
             return _publish_version(entry, fs, data_dir, version)
@@ -1101,17 +1090,9 @@ class Hyperspace:
                     .collect()
                 )
             else:
-                import json as _json
-
                 from hyperspace_spark.config import DATA_FILE_ID_COLUMN
-                from pyspark.sql.types import StructType
 
-                schema = StructType.fromJson(_json.loads(props["schemaJson"]))
-                idx = (
-                    self.spark.read.schema(schema)
-                    .option("basePath", entry.index_data_dirs[-1])
-                    .parquet(*entry.index_data_dirs)
-                )
+                idx = read_index(self.spark, entry)
                 if deleted and props.get("lineage"):
                     # a deleted vector must not resolve as a query anchor
                     tracker = entry.file_id_tracker
@@ -1281,19 +1262,10 @@ class Hyperspace:
         100 TB.  None on any failure (callers fall back to Bloom, the
         safe generic for equality probes)."""
         try:
-            import json as _json
-
             from pyspark.sql import functions as F
-            from pyspark.sql.types import StructType
 
-            r = self.spark.read.format(scan.file_format)
-            if scan.data_schema_json:
-                r = r.schema(StructType.fromJson(_json.loads(scan.data_schema_json)))
-            opts = {k: v for k, v in (scan.options or {}).items() if k.lower() != "path"}
-            if opts:
-                r = r.options(**opts)
             row = (
-                r.load(list(scan.root_paths))
+                scan.read(self.spark)
                 .select(col)
                 .limit(int(sample_rows))
                 .agg(F.approx_count_distinct(col).alias("d"), F.count(F.lit(1)).alias("n"))
@@ -1313,12 +1285,7 @@ class Hyperspace:
 
         want = {(s.kind, s.column) for s in sketches}
         for e in self._all_latest_entries(self.conf()):
-            if e.state != States.ACTIVE or e.derived_kind != "DS":
-                continue
-            roots = tuple(
-                sorted(_norm_path(p) for r in e.relations for p in r.root_paths)
-            )
-            if roots != scan.normalized_paths():
+            if e.state != States.ACTIVE or e.derived_kind != "DS" or not _same_source(e, scan):
                 continue
             have = set()
             for sj in e.derived_properties.get("sketches", []):
@@ -1367,12 +1334,6 @@ class Hyperspace:
         ]
         entries = [e for e in entries_all if e.derived_kind in ("CI", "ZCI")]
 
-        def same_source(e, scan) -> bool:
-            roots = tuple(
-                sorted(_norm_path(p) for r in e.relations for p in r.root_paths)
-            )
-            return roots == scan.normalized_paths()
-
         def scan_col_types(scan) -> dict:
             import json as _json
 
@@ -1399,8 +1360,9 @@ class Hyperspace:
             r12): prefer the first candidate whose sample has no
             duplicate and no NULL (countDistinct == count implies both).
             A sample can't prove global uniqueness, so the caveat states
-            what was checked; when the probe can't run (non-parquet
-            source), the 'verify it yourself' caveat stands.
+            what was checked; when the probe can't run, the 'verify it
+            yourself' caveat stands.  The sample is read like the scan
+            (``Relation.read``), so CSV/JSON/... sources are probed too.
 
             Memoized per (paths, candidate set) within this recommend()
             call: the probe is a full sampled Spark job, and a table
@@ -1418,11 +1380,7 @@ class Hyperspace:
             try:
                 from pyspark.sql import functions as F
 
-                sample = (
-                    self.spark.read.parquet(*scan.normalized_paths())
-                    .select(*cands)
-                    .limit(100_000)
-                )
+                sample = scan.read(self.spark).select(*cands).limit(100_000)
                 row = sample.agg(
                     F.count(F.lit(1)).alias("__hs_n"),
                     *[F.countDistinct(c).alias(c) for c in cands],
@@ -1441,12 +1399,7 @@ class Hyperspace:
 
         def covered_by_existing(scan, indexed, required):
             for e in entries:
-                roots = tuple(
-                    sorted(
-                        _norm_path(p) for r in e.relations for p in r.root_paths
-                    )
-                )
-                if roots != scan.normalized_paths():
+                if not _same_source(e, scan):
                     continue
                 p = e.derived_properties
                 if p.get("filterPredicateExpr"):
@@ -1676,7 +1629,7 @@ class Hyperspace:
                 if len(zcols) >= 2 and range_cols:
                     z_served = any(
                         e.derived_kind == "ZCI"
-                        and same_source(e, scan)
+                        and _same_source(e, scan)
                         and not e.derived_properties.get("filterPredicateExpr")
                         and set(zcols)
                         <= set(e.derived_properties.get("indexedColumns", []))
@@ -1740,7 +1693,7 @@ class Hyperspace:
                     seen_keys.add(tkey)
                     if any(
                         e.derived_kind == "TXT"
-                        and same_source(e, scan)
+                        and _same_source(e, scan)
                         and e.derived_properties.get("textCol") == tcol
                         for e in entries_all
                     ):
@@ -1792,7 +1745,7 @@ class Hyperspace:
                         seen_keys.add(akey)
                         if any(
                             e.derived_kind == "ANN"
-                            and same_source(e, scan)
+                            and _same_source(e, scan)
                             and e.derived_properties.get("vecCol") == vcol
                             for e in entries_all
                         ):
@@ -1867,10 +1820,11 @@ class Hyperspace:
         return suggestions
 
 
-def _norm_path(p: str) -> str:
-    from hyperspace_spark.planner.ir import _normalize_path
-
-    return _normalize_path(p)
+def _same_source(entry: IndexLogEntry, scan: ir.Scan) -> bool:
+    """``entry`` indexes the relation ``scan`` reads (same normalized
+    root paths)."""
+    roots = sorted(ir._normalize_path(p) for r in entry.relations for p in r.root_paths)
+    return tuple(roots) == scan.normalized_paths()
 
 
 def _scan_of(rel: Relation) -> ir.Scan:

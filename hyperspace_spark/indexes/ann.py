@@ -29,9 +29,10 @@ exactly what a persisted index exists to avoid.
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
+
+from hyperspace_spark.indexes.base import read_index
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -280,16 +281,10 @@ def partial_recluster(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     props = entry.derived_properties
     centroids = [list(map(float, c)) for c in props["centroids"]]
-    schema = StructType.fromJson(json.loads(props["schemaJson"]))
-    old = (
-        spark.read.schema(schema)
-        .option("basePath", entry.index_data_dirs[-1])
-        .parquet(*entry.index_data_dirs)
-    )
+    old = read_index(spark, entry)
     assigned_new = assign_to_centroids(
         new_df, centroids, props["idCol"], props["vecCol"]
     ).persist()
@@ -385,29 +380,15 @@ def drop_deleted_rows(
     actually live in, not the index size.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     from hyperspace_spark.config import DATA_FILE_ID_COLUMN
     from hyperspace_spark.indexes.covering import lineage_affected_files
 
-    props = entry.derived_properties
-    schema = StructType.fromJson(json.loads(props["schemaJson"]))
-    base = entry.index_data_dirs[-1]
-    idx = (
-        spark.read.schema(schema)
-        .option("basePath", base)
-        .parquet(*entry.index_data_dirs)
-    )
     ids = [int(i) for i in deleted_ids if i is not None]
-    paths = lineage_affected_files(idx, ids)
+    paths = lineage_affected_files(read_index(spark, entry), ids)
     if not paths:
         return []
-    surviving = (
-        spark.read.schema(schema)
-        .option("basePath", base)
-        .parquet(*paths)
-        .filter(~F.col(DATA_FILE_ID_COLUMN).isin(ids))
-    )
+    surviving = read_index(spark, entry, paths).filter(~F.col(DATA_FILE_ID_COLUMN).isin(ids))
     surviving.write.partitionBy("cluster").mode("append").parquet(data_dir)
     return paths
 
@@ -571,7 +552,6 @@ def ann_search(
     import numpy as np
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     from hyperspace_spark.config import DATA_FILE_ID_COLUMN
     from hyperspace_spark.llm.similarity import dot_expr, dot_kernel, unit_expr
@@ -590,10 +570,7 @@ def ann_search(
         rows.append((int(qid), [float(x) for x in v], [int(c) for c in order]))
     qdf = spark.createDataFrame(rows, "qid long, qv array<double>, probes array<int>")
 
-    schema = StructType.fromJson(json.loads(props["schemaJson"]))
-    idx = spark.read.schema(schema).option(
-        "basePath", entry.index_data_dirs[-1]
-    ).parquet(*entry.index_data_dirs)
+    idx = read_index(spark, entry)
     if deleted:
         if not props.get("lineage"):
             # Legacy lineage-free entry: exact delete compensation is
@@ -825,7 +802,6 @@ def ann_join(
     import pandas as pd
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     from hyperspace_spark.config import DATA_FILE_ID_COLUMN
 
@@ -851,10 +827,7 @@ def ann_join(
     ).withColumn("_probe", F.explode(_probes(F.col("_qraw"))))
     qid_type = dict(q.dtypes)["_qid"]
 
-    schema = StructType.fromJson(json.loads(props["schemaJson"]))
-    idx = spark.read.schema(schema).option(
-        "basePath", entry.index_data_dirs[-1]
-    ).parquet(*entry.index_data_dirs)
+    idx = read_index(spark, entry)
     if deleted:
         if not props.get("lineage"):
             raise ValueError("cannot compensate deletes on a lineage-free entry")

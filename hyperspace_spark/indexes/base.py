@@ -47,16 +47,33 @@ def version_slot(cache: dict | None, entry) -> dict | None:
     return held[1]
 
 
-def memo_frame(slot: dict | None, key, build):
-    """``slot[key]``, built by ``build()`` on first use; no memo when
-    ``slot`` is None or full."""
-    if slot is None:
-        return build()
-    df = slot.get(key)
-    if df is None:
-        df = build()
-        if len(slot) < _MAX_VERSION_FRAMES:
-            slot[key] = df
+def read_index(spark, entry, files: list[str] | None = None, slot: dict | None = None):
+    """The rows of ``entry``'s index version: every read of logged index
+    data goes through here (reference: CoveringIndexRuleUtils.scala:
+    113-116).  The schema is the entry's ``schemaJson``; without it Spark
+    infers one from every data file's footer, hundreds of ms of planner
+    latency per read.  ``files`` restricts the read to those index data
+    files ([] = an empty relation), and ANN's ``cluster=N`` partition
+    column stays resolvable through basePath.  With ``slot`` (see
+    ``version_slot``) the resolved frame is memoized per file subset, so
+    a repeated point lookup does not list its bucket file again."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    key = None if files is None else tuple(files)
+    if slot is not None and key in slot:
+        return slot[key]
+    schema = StructType.fromJson(json.loads(entry.derived_properties["schemaJson"]))
+    if files == []:
+        df = spark.createDataFrame([], schema)
+    else:
+        reader = spark.read.schema(schema)
+        if entry.derived_kind == "ANN":
+            reader = reader.option("basePath", entry.index_data_dirs[-1])
+        df = reader.parquet(*(entry.index_data_dirs if files is None else files))
+    if slot is not None and len(slot) < _MAX_VERSION_FRAMES:
+        slot[key] = df
     return df
 
 

@@ -27,7 +27,7 @@ from hyperspace_spark.config import DATA_FILE_ID_COLUMN, NESTED_PREFIX, Hyperspa
 from hyperspace_spark.indexes.base import (
     IndexConfig,
     carry_index_files,
-    memo_frame,
+    read_index,
     version_slot,
 )
 from hyperspace_spark.metadata.entry import FileIdTracker, FileInfo
@@ -241,7 +241,7 @@ def refresh_incremental(
     append_only = bool(appended) and not deleted_ids
     parts = []
     if not append_only:
-        old = spark.read.parquet(*entry.index_data_dirs)
+        old = read_index(spark, entry)
         if deleted_ids:
             old = old.filter(~F.col(DATA_FILE_ID_COLUMN).isin(deleted_ids))
         parts = [old]
@@ -483,34 +483,11 @@ def index_scan_df(
       not list its bucket file again.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
-    props = entry.derived_properties
     if bucketed:
-        tbl = ensure_bucketed_table(spark, entry)
-        df = spark.table(tbl)
+        df = spark.table(ensure_bucketed_table(spark, entry))
     else:
-        # Explicit schema from the log entry: without it Spark infers by
-        # reading every data file's footer — hundreds of ms of planner
-        # latency per query for nothing.
-        schema = (
-            StructType.fromJson(json.loads(props["schemaJson"]))
-            if props.get("schemaJson")
-            else None
-        )
-        if files is not None and schema is not None:
-            df = (
-                spark.createDataFrame([], schema)
-                if not files
-                else memo_frame(
-                    version_slot(cache, entry),
-                    tuple(files),
-                    lambda: spark.read.schema(schema).parquet(*files),
-                )
-            )
-        else:
-            reader = spark.read.schema(schema) if schema is not None else spark.read
-            df = reader.parquet(*entry.index_data_dirs)
+        df = read_index(spark, entry, files, version_slot(cache, entry))
 
     if deleted:
         ids = [entry.file_id_tracker.get(f) for f in deleted]

@@ -16,21 +16,23 @@ with the index data, collect the survivors).  An index version's data
 never changes once written, so the first lookup against a version
 collects its sketch rows into a driver-side ``LocalRelation``, held per
 index and keyed on the version's content (``base.version_slot``); every
-later lookup filters those rows in the driver with no Spark job.
-Versions larger on disk than ``SKETCH_CACHE_MAX_BYTES`` keep the
-reference's read-and-collect job per lookup, and Bloom probes remain a
-pandas-UDF filter that starts a job.
+later lookup filters those rows in the driver with no Spark job.  The
+metadata-only aggregate fold folds the same held rows, so pruning and
+folding share one copy per version, dropped with the rest of the
+version cache by every lifecycle operation.  Versions larger on disk
+than ``SKETCH_CACHE_MAX_BYTES`` are read per lookup (pruning keeps the
+reference's read-and-collect job) and per fold, and Bloom probes remain
+a pandas-UDF filter that starts a job.
 """
 
 from __future__ import annotations
 
-import json
 import math
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
 from hyperspace_spark.config import DATA_FILE_ID_COLUMN
-from hyperspace_spark.indexes.base import IndexConfig, version_slot
+from hyperspace_spark.indexes.base import IndexConfig, read_index, version_slot
 from hyperspace_spark.indexes.sketches import BloomFilterSketch, Sketch, sketch_from_json
 from hyperspace_spark.metadata.entry import FileIdTracker, FileInfo
 from hyperspace_spark.planner.expr import BoolOp, Expr, NotExpr
@@ -153,7 +155,7 @@ def refresh_incremental(
     from pyspark.sql import functions as F
 
     props = entry.derived_properties
-    merged = _read_sketches(spark, entry)
+    merged = read_index(spark, entry)
     if deleted_ids:
         merged = merged.filter(~F.col(DATA_FILE_ID_COLUMN).isin(deleted_ids))
     if appended:
@@ -233,26 +235,20 @@ def translate(cond: Expr, sketches: list[Sketch]) -> SkipPredicate:
 SKETCH_CACHE_MAX_BYTES = 8 << 20
 
 
-def _read_sketches(spark: "SparkSession", entry) -> "DataFrame":
-    from pyspark.sql.types import StructType
-
-    return spark.read.schema(
-        StructType.fromJson(json.loads(entry.derived_properties["schemaJson"]))
-    ).parquet(*entry.index_data_dirs)
-
-
 def _sketch_frame(spark: "SparkSession", entry, slot: dict | None) -> "DataFrame":
     """The per-file sketch rows of ``entry``'s version.  Small versions
     are collected once into a driver-side ``LocalRelation`` held in
     ``slot``, so later filters over it fold to local rows (Catalyst's
-    ``ConvertToLocalRelation``) and start no Spark job."""
+    ``ConvertToLocalRelation``) and start no Spark job.  File pruning
+    and the metadata-only aggregate fold (``rules.MetadataOnlyAggRule``)
+    both read through here, so one index version's rows are held once."""
     from pyspark.sql import DataFrame
 
     if slot is None or sum(f.size for f in entry.content_files) > SKETCH_CACHE_MAX_BYTES:
-        return _read_sketches(spark, entry)
+        return read_index(spark, entry)
     df = slot.get("sketch")
     if df is None:
-        jdf = _read_sketches(spark, entry)._jdf
+        jdf = read_index(spark, entry)._jdf
         df = slot["sketch"] = DataFrame(
             spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema()), spark
         )

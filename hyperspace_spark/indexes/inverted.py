@@ -155,14 +155,6 @@ def file_doc_stats(postings: "DataFrame") -> dict:
     return {str(r[0]): [int(r["_nd"]), int(r["_nt"])] for r in rows}
 
 
-def _read_postings(spark: "SparkSession", props: dict, *paths: str) -> "DataFrame":
-    from pyspark.sql.types import StructType
-
-    return spark.read.schema(StructType.fromJson(json.loads(props["schemaJson"]))).parquet(
-        *paths
-    )
-
-
 def create_index_data(
     spark: "SparkSession",
     df: "DataFrame",
@@ -195,7 +187,7 @@ def create_index_data(
     # {file_id: [n_docs, n_tokens]} — exact BM25 corpus stats, read back
     # from the written postings and adjustable per-file at query time for
     # hybrid appends/deletes.
-    props["fileDocStats"] = file_doc_stats(_read_postings(spark, props, data_dir))
+    props["fileDocStats"] = file_doc_stats(spark.read.schema(postings.schema).parquet(data_dir))
     return props
 
 
@@ -228,7 +220,7 @@ def refresh_incremental(
     from pyspark.sql.types import StructType
 
     from hyperspace_spark.config import DATA_FILE_ID_COLUMN
-    from hyperspace_spark.indexes.base import carry_index_files
+    from hyperspace_spark.indexes.base import carry_index_files, read_index
     from hyperspace_spark.indexes.covering import lineage_affected_files, table_name
 
     props = entry.derived_properties
@@ -241,11 +233,9 @@ def refresh_incremental(
     skip_files: list[str] = []
     survivors = None
     if deleted_ids:
-        skip_files = lineage_affected_files(
-            _read_postings(spark, props, *entry.index_data_dirs), deleted_ids
-        )
+        skip_files = lineage_affected_files(read_index(spark, entry), deleted_ids)
         if skip_files:
-            survivors = _read_postings(spark, props, *skip_files).filter(
+            survivors = read_index(spark, entry, skip_files).filter(
                 ~F.col(DATA_FILE_ID_COLUMN).isin(deleted_ids)
             )
     os.makedirs(data_dir, exist_ok=True)
@@ -317,12 +307,10 @@ def _probe_hits(
     (the stale index still answers exactly); ``appended`` files' docs
     are tokenized on the fly (raw read of ONLY those files, through the
     SAME _doc_postings kernel as the build) and unioned in."""
-    import json as _json
-
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     from hyperspace_spark.config import DATA_FILE_ID_COLUMN
+    from hyperspace_spark.indexes.base import read_index
     from hyperspace_spark.indexes.covering import _BUCKET_FILE_RE
     from hyperspace_spark.planner.mmh3 import bucket_id
 
@@ -343,12 +331,7 @@ def _probe_hits(
                 files.append(f.path)
     if files is None:
         files = [f.path for f in pq]
-    schema = StructType.fromJson(_json.loads(props["schemaJson"]))
-    if files:
-        idx = spark.read.schema(schema).parquet(*files)
-    else:
-        idx = spark.createDataFrame([], schema)
-    hits = idx.filter(F.col("token").isin(norm))
+    hits = read_index(spark, entry, files).filter(F.col("token").isin(norm))
     if deleted:
         tracker = entry.file_id_tracker
         ids = [i for i in (tracker.get(f) for f in deleted) if i is not None]

@@ -20,7 +20,6 @@ reference IndexConstants.scala:59-64).
 
 from __future__ import annotations
 
-import json
 import math
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
@@ -31,6 +30,7 @@ from hyperspace_spark.indexes.base import (
     IndexConfig,
     carry_index_files,
     growth_ratio,
+    read_index,
 )
 from hyperspace_spark.metadata.entry import FileIdTracker, FileInfo
 
@@ -337,23 +337,18 @@ def drop_deleted_rows(
     import os as _os
 
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     from hyperspace_spark.indexes.covering import lineage_affected_files
 
-    props = entry.derived_properties
-    schema = StructType.fromJson(json.loads(props["schemaJson"]))
-    idx = spark.read.schema(schema).parquet(*entry.index_data_dirs)
     ids = [int(i) for i in deleted_ids if i is not None]
-    paths = lineage_affected_files(idx, ids)
+    paths = lineage_affected_files(read_index(spark, entry), ids)
     if not paths:
         return [], {}
     before = (
         set(_os.listdir(data_dir)) if _os.path.isdir(data_dir) else set()
     )
     (
-        spark.read.schema(schema)
-        .parquet(*paths)
+        read_index(spark, entry, paths)
         .filter(~F.col(DATA_FILE_ID_COLUMN).isin(ids))
         .write.mode("append")
         .parquet(data_dir)
@@ -364,7 +359,9 @@ def drop_deleted_rows(
         if f.endswith(".parquet")
     ]
     stats = (
-        collect_file_stats(spark, data_dir, list(props["indexedColumns"]), paths=written)
+        collect_file_stats(
+            spark, data_dir, list(entry.derived_properties["indexedColumns"]), paths=written
+        )
         if written
         else {}
     )
@@ -631,5 +628,3 @@ def rewrite_zorder_data(spark: "SparkSession", df: "DataFrame", props: dict, dat
     ).parquet(data_dir)
     props["fileStats"] = collect_file_stats(spark, data_dir, props["indexedColumns"])
 
-
-_ = json  # reserved for future stats serialization tweaks

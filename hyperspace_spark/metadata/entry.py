@@ -140,12 +140,16 @@ class Relation:
     def read(self, spark, files: list[FileInfo] | None = None):
         """The relation's rows, read exactly like its build scan: stored
         schema + reader options (minus path).  Every read of source files
-        goes through here — the build source, incremental refresh and the
-        hybrid-scan appended readers — because without the options an
-        appended CSV with header=true would be parsed with defaults and
-        its header row would become index data.  ``files`` restricts the
-        read to those source files; basePath is then added for
-        partitioned sources so partition columns stay resolvable."""
+        goes through here — the build source, incremental refresh, the
+        hybrid-scan appended readers, the planner's scan leaves
+        (``ir.Scan`` shares this method: the replayed source scan, the
+        data-skipping rule's kept files, the metadata-only fold's
+        appended files) and recommend()'s sampling probes — because
+        without the options an appended CSV with header=true would be
+        parsed with defaults and its header row would become index data.
+        ``files`` restricts the read to those source files; basePath is
+        then added for partitioned sources so partition columns stay
+        resolvable."""
         from pyspark.sql.types import StructType
 
         reader = spark.read.format(self.file_format)

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from hyperspace_spark.metadata.entry import Relation
 from hyperspace_spark.planner.expr import Expr
 
 
@@ -37,6 +38,10 @@ class Scan(Node):
     # Filled by the planner when a rule rewrites this scan:
     replacement = None  # Callable[[SparkSession], DataFrame] | None
     applied_index: str | None = None
+
+    # A scan carries a Relation's reader fields, so its rows — all of
+    # them, or ``files`` of them — are read by the same method.
+    read = Relation.read
 
     def normalized_paths(self) -> tuple[str, ...]:
         if self.delta_root:

@@ -9,7 +9,6 @@ Catalyst — so the rewritten query still gets the full optimizer
 
 from __future__ import annotations
 
-import json
 from typing import TYPE_CHECKING
 
 from hyperspace_spark.planner import ir
@@ -26,18 +25,6 @@ if TYPE_CHECKING:
 import itertools as _itertools
 
 _VIEW_SEQ = _itertools.count(1)
-
-
-def default_scan_df(spark: "SparkSession", scan: ir.Scan) -> "DataFrame":
-    from pyspark.sql.types import StructType
-
-    reader = spark.read.format(scan.file_format)
-    if scan.options:
-        reader = reader.options(**{k: v for k, v in scan.options.items() if k != "path"})
-    if scan.data_schema_json:
-        reader = reader.schema(StructType.fromJson(json.loads(scan.data_schema_json)))
-    df = reader.load(scan.root_paths)
-    return df.select(*scan.output)
 
 
 def replay(spark: "SparkSession", node: ir.Node) -> "DataFrame":
@@ -72,7 +59,7 @@ def _sql(spark: "SparkSession", node: ir.Node, views: list[str]) -> str:
         if node.replacement is not None:
             df = node.replacement(spark)
         else:
-            df = default_scan_df(spark, node)
+            df = node.read(spark).select(*node.output)
         return _register(spark, df, views)
 
     if isinstance(node, ir.OpaqueN):

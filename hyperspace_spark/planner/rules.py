@@ -43,8 +43,10 @@ class RuleContext:
     prune_memo: dict = field(default_factory=dict)
     # Frames built from immutable index versions, kept ACROSS apply()
     # calls (the owning Hyperspace's dict; see indexes.base.version_slot):
-    # data-skipping sketch rows held in the driver, bucket-pruned covering
-    # reads.  Keyed on index content, so a new version replaces its slot.
+    # data-skipping sketch rows held in the driver, which file pruning
+    # and the metadata-only fold both read, and covering index reads per
+    # bucket-file subset.  Keyed on index content, so a new version
+    # replaces its slot; every lifecycle operation clears the dict.
     version_cache: dict | None = None
 
     def for_scan(self, scan: ir.Scan, kind: str) -> list[Candidate]:
@@ -923,10 +925,9 @@ class DataSkippingIndexRule:
         # its sketch rows (memoized per condition within apply(); the
         # rows themselves are held per index version in
         # ctx.version_cache, so a warm min/max probe starts no job).
-        live_paths: list[str] | None = None
+        live: list | None = None
         pruned_out: set[str] = set()
         contributors: list[str] = []
-        fallback_file: str | None = None
         for cand in _rank_smallest(cands):
             entry = cand.entry
             sketches = [sketch_from_json(s) for s in entry.derived_properties["sketches"]]
@@ -945,41 +946,34 @@ class DataSkippingIndexRule:
             tracker = entry.file_id_tracker
             deleted_keys = {f.key() for f in cand.deleted}
             common = [f for f in entry.source_files if f.key() not in deleted_keys]
-            if live_paths is None:
+            if live is None:
                 # The live file set is scan-time reality — identical
                 # through every candidate's (common + appended) view.
-                live_paths = [f.path for f in common] + [f.path for f in cand.appended]
-                fallback_file = (common or cand.appended or [None])[0]
+                live = common + cand.appended
             pruned_here = {f.path for f in common if tracker.get(f) not in kept_ids}
             if not pruned_here:
                 ctx.tag(entry.name, INELIGIBLE_FILTER_CONDITION, "predicate prunes no file")
                 continue
             pruned_out |= pruned_here
             contributors.append(entry.name)
-        if not contributors or live_paths is None:
+        if not contributors or live is None:
             return None
-        kept = [p for p in live_paths if p not in pruned_out]
+        kept = [f for f in live if f.path not in pruned_out]
 
         if not kept and scan.partition_columns:
             # Empty read can't reconstruct partition columns from paths;
             # keep one file — the filter above still yields zero rows.
-            kept = [fallback_file.path] if fallback_file is not None else []
+            kept = live[:1]
 
         def replacement(spark, _scan=scan, _kept=tuple(kept)):
             import json as _json
 
             from pyspark.sql.types import StructType
 
+            if _kept:
+                return _scan.read(spark, list(_kept)).select(*_scan.output)
             schema = StructType.fromJson(_json.loads(_scan.data_schema_json))
-            if not _kept:
-                return spark.createDataFrame([], schema).select(*_scan.output)
-            reader = spark.read.format(_scan.file_format).schema(schema)
-            opts = {k: v for k, v in _scan.options.items() if k != "path"}
-            if _scan.partition_columns:
-                opts["basePath"] = _scan.root_paths[0]
-            if opts:
-                reader = reader.options(**opts)
-            return reader.load(list(_kept)).select(*_scan.output)
+            return spark.createDataFrame([], schema).select(*_scan.output)
 
         new_node = _substitute_scan(node, scan, replacement, "+".join(contributors))
         return Applied(new_node, 1.0, sorted(contributors))
@@ -1175,9 +1169,6 @@ class MetadataOnlyAggRule:
             deleted_ids = tuple(
                 i for i in (tracker.get(f) for f in cand.deleted) if i is not None
             )
-            appended_paths = tuple(f.path for f in cand.appended)
-            schema_json = entry.derived_properties["schemaJson"]
-            dirs = tuple(entry.index_data_dirs)
             # Re-evaluate the scalar wrappers over the fold aliases, in
             # output order.
             final_exprs = []
@@ -1190,17 +1181,17 @@ class MetadataOnlyAggRule:
                 spark,
                 _plan=tuple(plan),
                 _groups=tuple(groups),
-                _dirs=dirs,
-                _schema=schema_json,
+                _entry=entry,
+                _cache=ctx.version_cache,
                 _del=deleted_ids,
-                _app=appended_paths,
+                _app=tuple(cand.appended),
                 _scan=scan,
                 _out=tuple(final_exprs),
                 _fsql=filter_sql,
                 _fcols=tuple(fcols),
             ):
                 return _metadata_only_agg_df(
-                    spark, _plan, _groups, _dirs, _schema, _del, _app, _scan, _out,
+                    spark, _plan, _groups, _entry, _cache, _del, _app, _scan, _out,
                     _fsql, _fcols,
                 )
 
@@ -1291,62 +1282,8 @@ class MetadataOnlyAggRule:
         return out
 
 
-# Sketch frames pinned in memory per index VERSION (the v__=N dirs are
-# immutable once written — a refresh writes a new dir, so the key can
-# never serve stale rows).  Sketch data is per-FILE rows — metadata-
-# scale by construction — and every metadata-only fold re-reads it;
-# keeping it Spark-persisted turns the fold's dominant cost (sketch
-# parquet IO, ~constant per query) into a memory hit, exactly the way
-# lakehouse engines pin snapshot/statistics state.  Bounded LRU-ish:
-# oldest entries unpersist on overflow.
-_SKETCH_FRAMES: dict = {}
-
-
-def _sketch_frame(spark, dirs, schema_json):
-    import json as _json
-    import os
-
-    from pyspark.sql.types import StructType
-
-    # Key includes each dir's mtime: v__=N dirs are immutable under the
-    # NORMAL lifecycle, but a wipe-and-rebuild of the whole system path
-    # (log ids restart, so the same v__=1 path returns with different
-    # content — the Workspace fingerprint discipline does exactly this)
-    # must never serve the deleted index's rows from the cache.
-    # Limitation: getmtime only protects LOCAL system paths (the repo's
-    # target); on a remote fs it returns the constant -1 and the guard
-    # degrades to the plain (session, dirs) key.  A same-millisecond
-    # local rebuild has the same (vanishingly small) hole.
-    from hyperspace_spark.sources.registry import _strip_file_scheme
-
-    def _m(p):
-        try:
-            return int(os.path.getmtime(_strip_file_scheme(p)) * 1000)
-        except OSError:
-            return -1
-
-    key = (
-        id(spark._jsparkSession) if hasattr(spark, "_jsparkSession") else id(spark),
-        tuple(dirs),
-        tuple(_m(d) for d in dirs),
-    )
-    df = _SKETCH_FRAMES.get(key)
-    if df is None:
-        idx_schema = StructType.fromJson(_json.loads(schema_json))
-        df = spark.read.schema(idx_schema).parquet(*dirs).persist()
-        while len(_SKETCH_FRAMES) >= 64:
-            _k, old = next(iter(_SKETCH_FRAMES.items()))
-            try:
-                old.unpersist(blocking=False)
-            except Exception:
-                pass
-            _SKETCH_FRAMES.pop(_k)
-        _SKETCH_FRAMES[key] = df
-    return df
-
-
 def _metadata_only_agg_df(
-    spark, plan, groups, dirs, schema_json, deleted_ids, appended, scan, out_exprs,
+    spark, plan, groups, entry, version_cache, deleted_ids, appended, scan, out_exprs,
     filter_sql=None, fcols=(),
 ):
     """Fold per-file sketch partials (+ a raw partial over appended files)
@@ -1365,9 +1302,11 @@ def _metadata_only_agg_df(
     from pyspark.sql.types import StructType
 
     from hyperspace_spark.config import DATA_FILE_ID_COLUMN
+    from hyperspace_spark.indexes.base import version_slot
+    from hyperspace_spark.indexes.dataskipping import _sketch_frame
 
-    idx_schema = StructType.fromJson(_json.loads(schema_json))
-    idx = _sketch_frame(spark, dirs, schema_json)
+    idx_schema = StructType.fromJson(_json.loads(entry.derived_properties["schemaJson"]))
+    idx = _sketch_frame(spark, entry, version_slot(version_cache, entry))
     if deleted_ids:
         idx = idx.filter(~F.col(DATA_FILE_ID_COLUMN).isin(list(deleted_ids)))
 
@@ -1409,17 +1348,7 @@ def _metadata_only_agg_df(
         parts = parts.drop(*[col for _field, col in fonly])
 
     if appended:
-        reader = spark.read.format(scan.file_format)
-        if scan.data_schema_json:
-            reader = reader.schema(
-                StructType.fromJson(_json.loads(scan.data_schema_json))
-            )
-        opts = {k: v for k, v in scan.options.items() if k != "path"}
-        if scan.partition_columns:
-            opts["basePath"] = scan.root_paths[0]
-        if opts:
-            reader = reader.options(**opts)
-        loaded = reader.load(list(appended))
+        loaded = scan.read(spark, list(appended))
         if filter_sql:
             loaded = loaded.filter(filter_sql)
         if raw_aggs:

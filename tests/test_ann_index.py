@@ -52,16 +52,11 @@ def test_search_exact_when_probing_all_clusters(spark, hs, emb):
 def test_search_partition_pruning(spark, hs):
     """A 1-probe search must physically read one cluster directory
     (inputFiles() lists pre-pruning, so assert on the executed scan)."""
+    from hyperspace_spark.indexes.base import read_index
+
     entry = next(e for e in hs._active_entries(hs.conf()) if e.name == "ann_ivf")
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(_json.loads(entry.derived_properties["schemaJson"]))
     probed = (
-        spark.read.schema(schema)
-        .option("basePath", entry.index_data_dirs[-1])
-        .parquet(*entry.index_data_dirs)
+        read_index(spark, entry)
         .filter(F.col("cluster") == 0)
         .select(F.input_file_name().alias("f"))
         .distinct()

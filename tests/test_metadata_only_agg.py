@@ -530,11 +530,12 @@ def test_sketch_roundtrip_and_refresh(spark, tmp_path_factory):
 
 
 def test_sketch_cache_invalidated_by_wipe_and_rebuild(spark, tmp_path):
-    """Regression (r9 review): the per-version sketch-frame cache keys on
-    the v__=N dirs, but a wipe-and-rebuild of the whole system path
-    (log ids restart, so the SAME v__=1 path returns with different
+    """Regression (r9 review): a wipe-and-rebuild of the whole system
+    path (log ids restart, so the SAME v__=1 path returns with different
     content — the Workspace fingerprint discipline) must not serve the
-    deleted index's rows.  The dir mtime in the cache key forces a
+    deleted index's rows.  The fold reads the sketch rows held per index
+    version (``indexes.base.version_slot``), keyed on the version's
+    content files (path, size, mtime), so the rebuilt version is
     re-read."""
     import shutil
 
@@ -571,3 +572,27 @@ def test_sketch_cache_invalidated_by_wipe_and_rebuild(spark, tmp_path):
         assert got["s"] == sum(i * 3 for i in range(250))
     finally:
         spark.conf.unset("spark.hyperspace.apply.cacheTtlSeconds")
+
+
+def test_fold_pins_no_frame_after_delete_and_vacuum(spark, tmp_path):
+    """The fold folds the sketch rows the version cache holds in the
+    driver, the same rows pruning filters: nothing is Spark-persisted,
+    so once the index is deleted and vacuumed no cached frame of it
+    outlives it."""
+    src = str(tmp_path / "src")
+    spark.range(0, 100).selectExpr("id AS k", "id * 2 AS v").coalesce(2).write.parquet(src)
+    hs = Hyperspace(spark, system_path=str(tmp_path / "idx"))
+    hs.create_index(
+        spark.read.parquet(src),
+        DataSkippingIndexConfig("pin", [MinMaxSketch(["v"]), RowCountSketch()]),
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    q = spark.read.parquet(src).agg(F.max("v").alias("m"), F.count("*").alias("c"))
+    fast, used = hs._apply_with_info(q)
+    assert used == ["pin"], hs.why_not(q)
+    _assert_same(q, fast)
+    hs.delete_index("pin")
+    hs.vacuum_index("pin")
+    assert hs._version_cache == {}
+    assert jsc.getPersistentRDDs().size() == before

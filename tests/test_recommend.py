@@ -289,19 +289,33 @@ def test_recommend_id_col_skips_nonunique_foreign_key(spark, hs, tmp_path):
     is a NON-unique foreign key; pick_id_col's sampled-uniqueness probe
     must skip it and key the TXT suggestion by the unique row id, with
     the reason stating what was checked."""
+    src = str(tmp_path / "fact_txt")
+    _fact_rows(spark).write.parquet(src)
+    _assert_txt_keyed_by_doc_id(hs, spark.read.parquet(src))
+
+
+def test_recommend_id_col_probe_reads_csv_source(spark, hs, tmp_path):
+    """The sampled-uniqueness probe reads the source like its scan
+    (format and reader options), so a header=true CSV fact table is
+    probed too instead of falling back to the foreign key."""
+    src = str(tmp_path / "fact_txt_csv")
+    _fact_rows(spark).write.option("header", "true").csv(src)
+    _assert_txt_keyed_by_doc_id(hs, spark.read.option("header", "true").csv(src))
+
+
+def _fact_rows(spark):
     from pyspark.sql import functions as F
 
-    src = str(tmp_path / "fact_txt")
-    (
-        spark.range(200)
-        .select(
-            (F.col("id") % 7).alias("cust_key"),  # FK, first candidate
-            F.col("id").alias("doc_id"),  # unique row id
-            F.concat(F.lit("data point "), F.col("id")).alias("text"),
-        )
-        .write.parquet(src)
+    return spark.range(200).select(
+        (F.col("id") % 7).alias("cust_key"),  # FK, first candidate
+        F.col("id").alias("doc_id"),  # unique row id
+        F.concat(F.lit("data point "), F.col("id")).alias("text"),
     )
-    d = spark.read.parquet(src)
+
+
+def _assert_txt_keyed_by_doc_id(hs, d):
+    from pyspark.sql import functions as F
+
     df = d.filter(F.col("text").contains("data")).select("doc_id")
     recs = hs.recommend(df)
     txt = [r for r in recs if r["config"].__class__.__name__ == "InvertedTextIndexConfig"]
