@@ -225,10 +225,6 @@ def _jsql(jexpr) -> str:
     return sql
 
 
-# Public alias for the parser/replayer.
-expr_sql = _jsql
-
-
 # ---------------------------------------------------------------------------
 # Parsing
 # ---------------------------------------------------------------------------

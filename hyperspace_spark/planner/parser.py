@@ -17,7 +17,6 @@ from hyperspace_spark.planner.expr import (
     Attr,
     Cmp,
     _quote_if_needed,
-    expr_sql,
     parse_expr,
     scala_map,
     scala_seq,
@@ -177,6 +176,32 @@ def _opaque(jnode) -> ir.Node:
     return ir.OpaqueN(jplan=jnode, output=names)
 
 
+def _parse_exprs(jexprs, scalar_subquery_in: str | None = None) -> list:
+    """parse_expr over one node's expression list.  An expression whose
+    SQL the JVM could not render declines the node, so a JVM failure
+    never reaches replay.  With ``scalar_subquery_in`` (the node kind),
+    an UNCORRELATED scalar subquery declines it too: it survives
+    optimization as a ScalarSubquery expression (correlated ones
+    decorrelate to joins) whose rendered SQL, `scalarsubquery()`, cannot
+    be regenerated.  The node's subtree then stays verbatim and the rest
+    of the query can still accelerate (TPC-DS q6's Filter, q9's 15
+    bucket probes in a SELECT list).  Declines at the first such
+    expression, before parsing the rest."""
+    parsed = []
+    for e in jexprs:
+        p = parse_expr(e)
+        if p.sql == "<unparseable>":
+            raise UnsupportedPlan("unparseable expression")
+        if scalar_subquery_in and "scalarsubquery" in p.sql.lower():
+            raise UnsupportedPlan(f"{scalar_subquery_in} with scalar subquery")
+        parsed.append(p)
+    return parsed
+
+
+def _refs(parsed) -> frozenset:
+    return frozenset().union(*[p.references for p in parsed])
+
+
 def _parse_or_opaque(jnode, allow_renamed: bool = False) -> ir.Node:
     try:
         node = _parse(jnode)
@@ -198,7 +223,7 @@ _GROUPING_BIT = re.compile(
 )
 
 
-def _parse_grouping_sets(jagg) -> ir.Node:
+def _parse_grouping_sets(jagg, jex) -> ir.Node:
     """Aggregate(Expand) -> GroupingSetsN (GROUP BY ROLLUP/CUBE/
     GROUPING SETS).
 
@@ -213,7 +238,6 @@ def _parse_grouping_sets(jagg) -> ir.Node:
     SQL.  Conservative: only PLAIN column grouping keys qualify —
     computed keys raise UnsupportedPlan and the subtree stays opaque
     (the pre-r11 behavior)."""
-    jex = jagg.child()
     out_attrs = list(scala_seq(jex.output()))
     out_names = [str(a.name()) for a in out_attrs]
     if _GID not in out_names:
@@ -264,31 +288,25 @@ def _parse_grouping_sets(jagg) -> ir.Node:
     if not sets:
         raise UnsupportedPlan("empty grouping sets")
 
-    aggs: list[str] = []
-    refs: frozenset[str] = frozenset()
-    for je in scala_seq(jagg.aggregateExpressions()):
-        s = expr_sql(je)
+    def _to_grouping(match) -> str:
+        k = int(match.group(1))
+        if k >= m:
+            raise UnsupportedPlan("grouping bit out of range")
+        return f"grouping({gcols[m - 1 - k]})"
 
-        def _to_grouping(match) -> str:
-            k = int(match.group(1))
-            if k >= m:
-                raise UnsupportedPlan("grouping bit out of range")
-            return f"grouping({gcols[m - 1 - k]})"
-
-        s = _GROUPING_BIT.sub(_to_grouping, s)
-        if _GID in s:
-            # grouping_id()/other gid arithmetic: not re-derived (rare);
-            # stay opaque rather than regenerate wrong SQL
-            raise UnsupportedPlan("unrecognized grouping-id expression")
-        aggs.append(s)
-        refs = refs | (parse_expr(je).references - {_GID})
+    parsed = _parse_exprs(scala_seq(jagg.aggregateExpressions()))
+    aggs = [_GROUPING_BIT.sub(_to_grouping, p.sql) for p in parsed]
+    if any(_GID in s for s in aggs):
+        # grouping_id()/other gid arithmetic: not re-derived (rare);
+        # stay opaque rather than regenerate wrong SQL
+        raise UnsupportedPlan("unrecognized grouping-id expression")
 
     return ir.GroupingSetsN(
         child=_parse_or_opaque(jex.child()),
         grouping_sets=sets,
         aggs=aggs,
-        output=[n for n in _out_names(jagg)],
-        references=refs | frozenset(gcols),
+        output=_out_names(jagg),
+        references=(_refs(parsed) - {_GID}) | frozenset(gcols),
     )
 
 
@@ -302,85 +320,61 @@ def _parse(jnode) -> ir.Node:
         return _parse_relation(jnode)
 
     if cls == "Project":
-        reuse_child = None
+        plist = scala_seq(jnode.projectList())
         jchild = jnode.child()
+        child = None
         if jchild.getClass().getSimpleName() == "Join":
-            fused, reuse_child = _try_fuse_project_join(jnode, jchild)
-            if fused is not None:
-                return fused
-            pruned, reuse2 = _try_parse_pruning_project(jnode, reuse_child)
-            if pruned is not None:
-                return pruned
-            if reuse2 is not None:
-                reuse_child = reuse2
-        exprs = [expr_sql(e) for e in scala_seq(jnode.projectList())]
-        if any("scalarsubquery" in e.lower() for e in exprs):
-            # An UNCORRELATED scalar subquery in the SELECT list (TPC-DS
-            # q9's 15 bucket probes) renders as `scalarsubquery()` —
-            # not regenerable SQL.  Same verbatim guard as the Filter
-            # branch; the rest of the query can still accelerate.
-            raise UnsupportedPlan("project with scalar subquery")
-        refs = frozenset().union(
-            *[parse_expr(e).references for e in scala_seq(jnode.projectList())]
-        ) if exprs else frozenset()
-        # Reuse the child parse from the pruning probe (r15): the old
-        # shape parsed a Project-over-Join child TWICE on the common
-        # no-rename path (once inside _try_parse_pruning_project, once
-        # here) — and each _parse walks the JVM tree over py4j, so
-        # nested join chains re-parsed 2^depth times (TPC-DS q17's
-        # 7-join plan measured 38 s of apply() latency, ~95% of it py4j
-        # round trips from exactly this).  _try_parse_pruning_project now
-        # hands back the clean parsed child (or its UnsupportedPlan) for
-        # this generic path to consume.
-        if reuse_child is _CHILD_UNSUPPORTED:
-            child_node = _opaque(jchild)
-        elif reuse_child is not None:
-            # mirror _parse_or_opaque's guard: a renamed child under this
-            # name-based Project would silently bind the first copy
-            if getattr(reuse_child, "renames", None):
-                child_node = _opaque(jchild)
+            # Parse the join once; fusion, the pruning Project and the
+            # generic ProjectN below all consume this one parse.
+            sides = _Sides(jchild)
+            try:
+                join = _parse_join(jchild, sides)
+            except UnsupportedPlan:
+                child = _opaque(jchild)
             else:
-                child_node = reuse_child
-        else:
-            child_node = _parse_or_opaque(jchild)
+                fused = _fuse_project_join(plist, jchild, sides, join)
+                if fused is not None:
+                    return fused
+                _finalize_join_collision(join, sides)
+                pruned = _pruning_project(plist, join)
+                if pruned is not None:
+                    return pruned
+                # the _parse_or_opaque guard: a renamed child under this
+                # name-based Project would silently bind the first copy
+                child = _opaque(jchild) if join.renames else join
+        parsed = _parse_exprs(plist, "project")
         return ir.ProjectN(
-            child=child_node, exprs=exprs, output=_out_names(jnode), references=refs
+            child=child if child is not None else _parse_or_opaque(jchild),
+            exprs=[p.sql for p in parsed],
+            output=_out_names(jnode),
+            references=_refs(parsed),
         )
 
     if cls == "Filter":
         ej = _try_parse_exists_filter(jnode)
         if ej is not None:
             return ej
+        jcond = jnode.condition()
+        (condition,) = _parse_exprs([jcond], "filter")
         try:
-            # An UNCORRELATED scalar subquery survives optimization as a
-            # ScalarSubquery expression (correlated ones decorrelate to
-            # joins); its rendered SQL (`scalarsubquery()`) cannot be
-            # regenerated.  Keep the whole Filter subtree verbatim — the
-            # rest of the query can still accelerate (TPC-DS q6 shape).
-            if "scalarsubquery" in expr_sql(jnode.condition()).lower():
-                raise UnsupportedPlan("filter with scalar subquery")
-        except UnsupportedPlan:
-            raise
-        except Exception:
-            pass
-        try:
-            det = bool(jnode.condition().deterministic())
+            det = bool(jcond.deterministic())
         except Exception:
             det = False  # unknown -> treat as non-deterministic (safe)
         return ir.FilterN(
             child=_parse_or_opaque(jnode.child()),
-            condition=parse_expr(jnode.condition()),
+            condition=condition,
             deterministic=det,
         )
 
     if cls == "Aggregate":
-        if jnode.child().getClass().getSimpleName() == "Expand":
+        jchild = jnode.child()
+        if jchild.getClass().getSimpleName() == "Expand":
             # GROUP BY ROLLUP / CUBE / GROUPING SETS lowers to Aggregate
             # over Expand; recover the grouping sets from the gid bit
             # patterns so the relations UNDERNEATH stay index candidates
             # (an opaque Expand hid them before r11).
             try:
-                return _parse_grouping_sets(jnode)
+                return _parse_grouping_sets(jnode, jchild)
             except UnsupportedPlan:
                 # Unrecoverable shape (computed grouping key, exotic gid
                 # expression): keep the WHOLE aggregate verbatim.  An
@@ -389,23 +383,14 @@ def _parse(jnode) -> ir.Node:
                 # SQL text that re-parses as a function call over a
                 # column the view does not expose.
                 return _opaque(jnode)
-        grouping = [expr_sql(e) for e in scala_seq(jnode.groupingExpressions())]
-        aggs = [expr_sql(e) for e in scala_seq(jnode.aggregateExpressions())]
-        refs = frozenset().union(
-            *[
-                parse_expr(e).references
-                for e in (
-                    list(scala_seq(jnode.groupingExpressions()))
-                    + list(scala_seq(jnode.aggregateExpressions()))
-                )
-            ]
-        ) if (grouping or aggs) else frozenset()
+        grouping = _parse_exprs(scala_seq(jnode.groupingExpressions()))
+        aggs = _parse_exprs(scala_seq(jnode.aggregateExpressions()))
         return ir.AggregateN(
-            child=_parse_or_opaque(jnode.child()),
-            grouping=grouping,
-            aggs=aggs,
+            child=_parse_or_opaque(jchild),
+            grouping=[p.sql for p in grouping],
+            aggs=[p.sql for p in aggs],
             output=_out_names(jnode),
-            references=refs,
+            references=_refs(grouping + aggs),
         )
 
     if cls == "Sort":
@@ -415,6 +400,7 @@ def _parse(jnode) -> ir.Node:
         refs: frozenset[str] = frozenset()
         for so in scala_seq(jnode.order()):
             key = so.child()
+            child_sql = None
             if cmap:
                 # A renamed child exposes second copies as __hs_dupN:
                 # bare-attribute keys translate through the map; any
@@ -422,11 +408,15 @@ def _parse(jnode) -> ir.Node:
                 # rendered name could bind the wrong copy).
                 if key.getClass().getSimpleName() != "AttributeReference":
                     raise UnsupportedPlan("sort:non-attr-key-over-renamed-child")
-                child_sql = _quote_if_needed(
-                    cmap.get(int(key.exprId().id()), str(key.name()))
-                )
-            else:
-                child_sql = expr_sql(key)
+                exposed = cmap.get(int(key.exprId().id()), str(key.name()))
+                child_sql = _quote_if_needed(exposed)
+                # The rendered key uses the child's exposed __hs_dupN
+                # name; keep SortN.references consistent with the SQL
+                # actually replayed (both names — original and exposed).
+                refs = refs | {exposed}
+            (pkey,) = _parse_exprs([key])
+            refs = refs | pkey.references
+            child_sql = child_sql or pkey.sql
             direction = "ASC" if "Ascending" in str(so.direction().getClass().getSimpleName()) else "DESC"
             nulls = (
                 "NULLS FIRST"
@@ -434,14 +424,6 @@ def _parse(jnode) -> ir.Node:
                 else "NULLS LAST"
             )
             orders.append(f"{child_sql} {direction} {nulls}")
-            refs = refs | parse_expr(key).references
-            if cmap and key.getClass().getSimpleName() == "AttributeReference":
-                # The rendered key uses the child's exposed __hs_dupN
-                # name; keep SortN.references consistent with the SQL
-                # actually replayed (both names — original and exposed).
-                refs = refs | frozenset(
-                    {cmap.get(int(key.exprId().id()), str(key.name()))}
-                )
         return ir.SortN(
             child=child, orders=orders, references=refs, renames=dict(cmap)
         )
@@ -465,10 +447,7 @@ def _parse(jnode) -> ir.Node:
         )
 
     if cls == "Window":
-        wexprs = [expr_sql(e) for e in scala_seq(jnode.windowExpressions())]
-        refs = frozenset().union(
-            *[parse_expr(e).references for e in scala_seq(jnode.windowExpressions())]
-        ) if wexprs else frozenset()
+        wexprs = _parse_exprs(scala_seq(jnode.windowExpressions()))
         # Plain-attribute PARTITION BY keys (None if any is computed):
         # lets WindowBucketedIndexRule serve the window's clustered
         # distribution from the index's bucketing.
@@ -481,9 +460,9 @@ def _parse(jnode) -> ir.Node:
                 break
         return ir.WindowN(
             child=_parse_or_opaque(jnode.child()),
-            window_exprs=wexprs,
+            window_exprs=[p.sql for p in wexprs],
             output=_out_names(jnode),
-            references=refs,
+            references=_refs(wexprs),
             partition_cols=part_cols,
         )
 
@@ -491,7 +470,8 @@ def _parse(jnode) -> ir.Node:
         return ir.UnionN(kids=[_parse_or_opaque(c) for c in scala_seq(jnode.children())])
 
     if cls == "Join":
-        return _parse_join(jnode)
+        sides = _Sides(jnode)
+        return _finalize_join_collision(_parse_join(jnode, sides), sides)
 
     raise UnsupportedPlan(cls)
 
@@ -595,24 +575,25 @@ def _try_parse_exists_filter(jnode) -> "ir.ExistsFilterN | None":
         att = j.joinType().exists()
         tok = flag_tokens[int(att.exprId().id())]
         cond_opt = j.condition()
-        if not cond_opt.isDefined() or has_flag(cond_opt.get()):
+        if not cond_opt.isDefined():
             return None
+        jcond = cond_opt.get()
+        if has_flag(jcond):
+            return None
+        jright = j.right()
+        lset = j.left().outputSet()
         cond_sql = _render_qualified(
-            cond_opt.get(),
-            j.left().outputSet(),
-            j.right().outputSet(),
-            lalias="__hs_l",
-            ralias=tok,
+            jcond, lset, jright.outputSet(), lalias="__hs_l", ralias=tok
         )
         if cond_sql is None:
             return None
         # correlated left-side columns must stay available on the child
-        it = cond_opt.get().references().iterator()
+        it = jcond.references().iterator()
         while it.hasNext():
             a = it.next()
-            if j.left().outputSet().contains(a):
+            if lset.contains(a):
                 refs.add(str(a.name()))
-        branches.append((tok, _parse_or_opaque(j.right()), cond_sql))
+        branches.append((tok, _parse_or_opaque(jright), cond_sql))
     return ir.ExistsFilterN(
         child=_parse_or_opaque(cur),
         cond_template=tmpl,
@@ -621,146 +602,155 @@ def _try_parse_exists_filter(jnode) -> "ir.ExistsFilterN | None":
     )
 
 
-def _parse_join(jnode, allow_collision: bool = False) -> "ir.JoinN":
-    """The Join branch of _parse, extracted so the Project-fusion path
-    (_try_fuse_project_join) can parse a COLLIDING-output join without
-    the ambiguity bail: with ``allow_collision`` the duplicate-name
-    check is skipped — the caller must install select_exprs that
-    disambiguate every output column before the node is used."""
-    if True:
-        try:
-            # ExistenceJoin (and any future internal type) THROWS from
-            # .sql(); that Java exception must become a clean decline,
-            # not a crash that opaques the whole statement.
-            jt = str(jnode.joinType().sql()).lower().replace(" ", "_")
-        except Exception:
-            raise UnsupportedPlan(
-                f"join:{jnode.joinType().getClass().getSimpleName()}"
-            )
-        left = _parse_or_opaque(jnode.left(), allow_renamed=True)
-        right = _parse_or_opaque(jnode.right(), allow_renamed=True)
-        # exprId-keyed rename maps from renamed children (r13, the q47
-        # collision class): every name-based resolution below is unsound
-        # against a renamed side (it would silently bind the FIRST copy),
-        # so non-empty maps force the exprId paths throughout.
-        lmap = getattr(left, "renames", None) or {}
-        rmap = getattr(right, "renames", None) or {}
-        cond_opt = jnode.condition()
-        condition = None
-        equi: list[tuple[str, str]] = []
-        residual: list[str] = []
-        residual_jconjs: list = []
-        shared_keys: list[str] = []
-        needs_unique_output = False
-        if cond_opt.isDefined():
-            condition = parse_expr(cond_opt.get())
-            lcols = frozenset(_names(left))
-            rcols = frozenset(_names(right))
-            shared = lcols & rcols
-            for jconj in _java_conjuncts(cond_opt.get()):
-                conj = parse_expr(jconj)
-                pair = None if (lmap or rmap) else _equi_pair(conj, lcols, rcols)
-                if pair is None:
-                    # Name resolution failed — the reference resolves by
-                    # exprId (JoinIndexRule.scala:179-317); we have the
-                    # JVM conjunct in hand, so do the same.  This is how
-                    # a self-join whose key has the SAME name on both
-                    # sides (TPC-DS q65's sb.ss_store_sk =
-                    # sc.ss_store_sk) still yields an attributed pair.
-                    pair = _equi_pair_by_exprid(jconj, jnode, lmap, rmap)
-                    if pair is not None and pair[0].lower() == pair[1].lower():
-                        # The replayed join must not expose the name
-                        # twice; only an INNER equi join guarantees the
-                        # two copies are value-equal so the right copy
-                        # can be dropped (left_semi/left_anti never
-                        # expose right columns at all — nothing to drop).
-                        if jt == "inner":
-                            shared_keys.append(pair[1])
-                        # Other join types keep BOTH copies (an outer
-                        # join's copies are not value-equal — neither
-                        # can be dropped); the ON clause references the
-                        # CHILD-level names (__hs_l/__hs_r aliases), so
-                        # the pair is unambiguous as-is, and the output
-                        # collision triggers the r13 rename synthesis
-                        # below instead of the old loud bail.
-                if pair is not None:
-                    equi.append(pair)
-                else:
-                    # A residual referencing a column BOTH sides expose
-                    # (e.g. df1.join(df2, "id")) cannot be replayed by
-                    # bare name — the SQL would be ambiguous and every
-                    # sibling rewrite would die at replay.  r11: the raw
-                    # JVM conjunct is in hand, so first try rendering it
-                    # with the replay's own side aliases (__hs_l/__hs_r),
-                    # attributing each attribute by exprId — the
-                    # range-band self-join shape (a.id = b.id AND a.ts
-                    # BETWEEN b.lo AND b.hi) then parses instead of
-                    # bailing the whole query.  Unrenderable conjuncts
-                    # keep the loud bail (fallback, never a wrong
-                    # replay); unambiguous residuals keep bare SQL.
-                    shared_ci = {c.lower() for c in shared}
-                    if (
-                        lmap
-                        or rmap
-                        or any(r.lower() in shared_ci for r in conj.references)
-                    ):
-                        # Renamed children force the exprId-qualified
-                        # path even without a shared name: the residual's
-                        # ORIGINAL names may bind the wrong copy in the
-                        # replayed child.
-                        qualified = _qualified_residual(jconj, jnode, lmap, rmap)
-                        if qualified is None:
-                            raise UnsupportedPlan("join:ambiguous-column-condition")
-                        residual.append(qualified)
-                        needs_unique_output = True
-                    else:
-                        residual.append(conj.sql)
-                    residual_jconjs.append(jconj)
-        right_keep = None
-        if shared_keys:
-            drop = {c.lower() for c in shared_keys}
-            right_keep = [c for c in _names(right) if c.lower() not in drop]
-        out = ir.JoinN(
-            left=left,
-            right=right,
-            join_type=jt,
-            condition=condition,
-            equi_keys=equi,
-            residual_sql=" AND ".join(residual) if residual else None,
-            right_keep=right_keep,
+class _Sides:
+    """A JVM join's two children.  Each side's outputSet is fetched on
+    first use, then shared by every conjunct and the fused Project that
+    needs exprId attribution."""
+
+    def __init__(self, jjoin):
+        self.left, self.right = jjoin.left(), jjoin.right()
+        self._sets = None
+
+    def sets(self) -> tuple:
+        if self._sets is None:
+            self._sets = (self.left.outputSet(), self.right.outputSet())
+        return self._sets
+
+
+def _parse_join(jnode, sides: _Sides) -> "ir.JoinN":
+    """The Join node itself, before any collision handling: a join whose
+    output carries a name twice needs a fusing parent Project
+    (_fuse_project_join) or _finalize_join_collision before anything
+    consumes it."""
+    try:
+        # ExistenceJoin (and any future internal type) THROWS from
+        # .sql(); that Java exception must become a clean decline,
+        # not a crash that opaques the whole statement.
+        jt = str(jnode.joinType().sql()).lower().replace(" ", "_")
+    except Exception:
+        raise UnsupportedPlan(
+            f"join:{jnode.joinType().getClass().getSimpleName()}"
         )
-        if (
-            jt in ("left_semi", "left_anti")
-            and equi
-            and len(residual_jconjs) == 1
-            and not lmap
-            and not rmap
-        ):
-            # EXISTS/NOT-EXISTS band shape: the whole residual is one
-            # side-separated comparison — record the structured form so
-            # BandExistsAggRule can rewrite the pair scan to a per-key
-            # aggregate (sound for anti too: a key-group match exists in
-            # the MAX/MIN aggregate iff one exists in the raw rows).
-            # Skipped under child renames: _band_conjunct renders by
-            # original name.
-            out.band = _band_conjunct(residual_jconjs[0], jnode)
-        if jt in ("left_semi", "left_anti"):
-            # Output is the left side only — no collision possible here,
-            # but a renamed LEFT child's map passes through verbatim.
-            out.renames = dict(lmap)
-        elif not allow_collision:
-            _finalize_join_collision(out, jnode)
-        return out
+    left = _parse_or_opaque(sides.left, allow_renamed=True)
+    right = _parse_or_opaque(sides.right, allow_renamed=True)
+    # exprId-keyed rename maps from renamed children (r13, the q47
+    # collision class): every name-based resolution below is unsound
+    # against a renamed side (it would silently bind the FIRST copy),
+    # so non-empty maps force the exprId paths throughout.
+    lmap = getattr(left, "renames", None) or {}
+    rmap = getattr(right, "renames", None) or {}
+    cond_opt = jnode.condition()
+    condition = None
+    equi: list[tuple[str, str]] = []
+    residual: list[str] = []
+    residual_jconjs: list = []
+    shared_keys: list[str] = []
+    if cond_opt.isDefined():
+        jcond = cond_opt.get()
+        condition = parse_expr(jcond)
+        lcols = frozenset(_names(left))
+        rcols = frozenset(_names(right))
+        shared = lcols & rcols
+        for jconj in _java_conjuncts(jcond):
+            conj = parse_expr(jconj)
+            pair = None if (lmap or rmap) else _equi_pair(conj, lcols, rcols)
+            if pair is None:
+                # Name resolution failed — the reference resolves by
+                # exprId (JoinIndexRule.scala:179-317); we have the
+                # JVM conjunct in hand, so do the same.  This is how
+                # a self-join whose key has the SAME name on both
+                # sides (TPC-DS q65's sb.ss_store_sk =
+                # sc.ss_store_sk) still yields an attributed pair.
+                pair = _equi_pair_by_exprid(jconj, sides, lmap, rmap)
+                if pair is not None and pair[0].lower() == pair[1].lower():
+                    # The replayed join must not expose the name
+                    # twice; only an INNER equi join guarantees the
+                    # two copies are value-equal so the right copy
+                    # can be dropped (left_semi/left_anti never
+                    # expose right columns at all — nothing to drop).
+                    if jt == "inner":
+                        shared_keys.append(pair[1])
+                    # Other join types keep BOTH copies (an outer
+                    # join's copies are not value-equal — neither
+                    # can be dropped); the ON clause references the
+                    # CHILD-level names (__hs_l/__hs_r aliases), so
+                    # the pair is unambiguous as-is, and the output
+                    # collision triggers the r13 rename synthesis
+                    # (_finalize_join_collision) instead of a bail.
+            if pair is not None:
+                equi.append(pair)
+            else:
+                # A residual referencing a column BOTH sides expose
+                # (e.g. df1.join(df2, "id")) cannot be replayed by
+                # bare name — the SQL would be ambiguous and every
+                # sibling rewrite would die at replay.  r11: the raw
+                # JVM conjunct is in hand, so first try rendering it
+                # with the replay's own side aliases (__hs_l/__hs_r),
+                # attributing each attribute by exprId — the
+                # range-band self-join shape (a.id = b.id AND a.ts
+                # BETWEEN b.lo AND b.hi) then parses instead of
+                # bailing the whole query.  Unrenderable conjuncts
+                # keep the loud bail (fallback, never a wrong
+                # replay); unambiguous residuals keep bare SQL.
+                shared_ci = {c.lower() for c in shared}
+                if (
+                    lmap
+                    or rmap
+                    or any(r.lower() in shared_ci for r in conj.references)
+                ):
+                    # Renamed children force the exprId-qualified
+                    # path even without a shared name: the residual's
+                    # ORIGINAL names may bind the wrong copy in the
+                    # replayed child.
+                    qualified = _render_qualified(
+                        jconj, *sides.sets(), lmap=lmap, rmap=rmap
+                    )
+                    if qualified is None:
+                        raise UnsupportedPlan("join:ambiguous-column-condition")
+                    residual.append(qualified)
+                else:
+                    residual.append(conj.sql)
+                residual_jconjs.append(jconj)
+    right_keep = None
+    if shared_keys:
+        drop = {c.lower() for c in shared_keys}
+        right_keep = [c for c in _names(right) if c.lower() not in drop]
+    out = ir.JoinN(
+        left=left,
+        right=right,
+        join_type=jt,
+        condition=condition,
+        equi_keys=equi,
+        residual_sql=" AND ".join(residual) if residual else None,
+        right_keep=right_keep,
+    )
+    if (
+        jt in ("left_semi", "left_anti")
+        and equi
+        and len(residual_jconjs) == 1
+        and not lmap
+        and not rmap
+    ):
+        # EXISTS/NOT-EXISTS band shape: the whole residual is one
+        # side-separated comparison — record the structured form so
+        # BandExistsAggRule can rewrite the pair scan to a per-key
+        # aggregate (sound for anti too: a key-group match exists in
+        # the MAX/MIN aggregate iff one exists in the raw rows).
+        # Skipped under child renames: _band_conjunct renders by
+        # original name.
+        out.band = _band_conjunct(residual_jconjs[0], sides)
+    if jt in ("left_semi", "left_anti"):
+        # Output is the left side only — no collision possible here,
+        # but a renamed LEFT child's map passes through verbatim.
+        out.renames = dict(lmap)
+    return out
 
 
-def _finalize_join_collision(out: "ir.JoinN", jnode) -> "ir.JoinN":
-    """The allow_collision=False tail of _parse_join, callable post-hoc
-    (r15): when the fusion probe parsed a join with allow_collision=True
-    and then bailed, this converts its node into exactly what
-    _parse_join(allow_collision=False) would have returned — so the
-    pruning/generic paths can REUSE the parse instead of re-walking the
-    JVM subtree (the collision-join re-parse was the residual 2x-3x
-    amplification after the pruning-project reuse fix)."""
+def _finalize_join_collision(out: "ir.JoinN", sides: _Sides) -> "ir.JoinN":
+    """Give a join that no parent Project fused an output every consumer
+    can read: a semi/anti join already has one; any other join whose
+    output names collide, or whose children carry renames, gets the
+    synthesized renamed SELECT list."""
     if out.join_type in ("left_semi", "left_anti"):
         return out
     lmap = getattr(out.left, "renames", None) or {}
@@ -774,95 +764,69 @@ def _finalize_join_collision(out: "ir.JoinN", jnode) -> "ir.JoinN":
         # explicit exprId-keyed SELECT list — second copies
         # become __hs_dupN — and record the map for map-aware
         # consumers (a parent join or a fused/pruning Project).
-        _synthesize_renamed_select(out, jnode, lmap, rmap)
+        _synthesize_renamed_select(out, sides, lmap, rmap)
     return out
 
 
-class _ChildUnsupported:
-    """Sentinel: the pruning probe parsed the Project's child and it
-    raised UnsupportedPlan — the generic path should go straight to the
-    opaque wrap instead of re-walking the subtree over py4j."""
+class _UniqueSelect:
+    """A SELECT list whose output names stay unique case-insensitively:
+    the first use of a name keeps it, later copies become the next free
+    __hs_dupN.  ``renames`` maps the exprId of every column whose final
+    name differs from its Catalyst name to that final name."""
 
+    def __init__(self):
+        self.exprs: list[str] = []
+        self.output: list[str] = []
+        self.renames: dict[int, str] = {}
+        self._used: set[str] = set()
+        self._n = 0
 
-_CHILD_UNSUPPORTED = _ChildUnsupported()
-
-
-def _try_parse_pruning_project(jnode, precomputed_child=None):
-    """Attribute-only Project directly above a JOIN that carries exprId
-    renames (or whose kept names still collide): Catalyst's column
-    pruning inserts these between the levels of a self-join chain —
-    q47's Project between the v1×v1_lag join and the outer join keeps
-    BOTH sum_sales copies under one name.  Each attribute is translated
-    through the child's map, the output re-deduped (__hs_dupN), and the
-    COMPOSED map carried upward; only map-aware consumers may sit above
-    (the _parse_or_opaque guard).
-
-    ``precomputed_child`` carries an already-parsed child (from the
-    fusion probe, r15) so the subtree is never walked twice over py4j.
-
-    Returns ``(node, reused_child)``: ``(ProjectN, None)`` when handled;
-    ``(None, child)`` when not applicable but the child parsed clean
-    (no renames — the generic path must consume it instead of re-parsing
-    the whole subtree, r15); ``(None, _CHILD_UNSUPPORTED)`` when the
-    child parse raised; ``(None, None)`` when the child was never
-    parsed (non-attribute project list)."""
-    jlist = list(scala_seq(jnode.projectList()))
-    if not jlist or any(
-        e.getClass().getSimpleName() != "AttributeReference" for e in jlist
-    ):
-        return None, None
-    names = [str(e.name()) for e in jlist]
-    if precomputed_child is _CHILD_UNSUPPORTED:
-        return None, _CHILD_UNSUPPORTED
-    if precomputed_child is not None:
-        child = precomputed_child
-    else:
-        try:
-            child = _parse(jnode.child())
-        except UnsupportedPlan:
-            return None, _CHILD_UNSUPPORTED  # generic path wraps opaque
-    cmap = getattr(child, "renames", None) or {}
-    if not cmap and len({n.lower() for n in names}) == len(names):
-        return None, child  # nothing renamed/colliding: reuse the parse
-    exprs: list[str] = []
-    out: list[str] = []
-    renames: dict[int, str] = {}
-    used: set[str] = set()
-    counter = [0]
-
-    def mint() -> str:
-        while True:
-            cand = f"__hs_dup{counter[0]}"
-            counter[0] += 1
-            if cand not in used:
-                return cand
-
-    for e in jlist:
-        eid = int(e.exprId().id())
-        base = str(e.name())
-        exposed = cmap.get(eid, base)
-        final = exposed if exposed.lower() not in used else mint()
-        used.add(final.lower())
-        q = _quote_if_needed(exposed)
-        exprs.append(
-            f"{q} AS {_quote_if_needed(final)}" if final != exposed else q
-        )
-        out.append(final)
+    def add(self, eid: int, base: str, exposed: str, qualifier: str = "") -> None:
+        final = exposed
+        while final.lower() in self._used:
+            final = f"__hs_dup{self._n}"
+            self._n += 1
+        self._used.add(final.lower())
+        q = qualifier + _quote_if_needed(exposed)
+        self.exprs.append(q if final == exposed else f"{q} AS {_quote_if_needed(final)}")
+        self.output.append(final)
         if final != base:
-            renames[eid] = final
-    return (
-        ir.ProjectN(
-            child=child,
-            exprs=exprs,
-            output=out,
-            references=frozenset(names),
-            renames=renames,
-        ),
-        None,
+            self.renames[eid] = final
+
+
+def _pruning_project(plist, join: "ir.JoinN") -> "ir.ProjectN | None":
+    """Attribute-only Project directly above a finalized JOIN that
+    carries exprId renames (or whose kept names still collide):
+    Catalyst's column pruning inserts these between the levels of a
+    self-join chain — q47's Project between the v1×v1_lag join and the
+    outer join keeps BOTH sum_sales copies under one name.  Each
+    attribute is translated through the join's map, the output
+    re-deduped (__hs_dupN), and the COMPOSED map carried upward; only
+    map-aware consumers may sit above (the _parse_or_opaque guard).
+    None when the list is not attribute-only or nothing is renamed or
+    colliding."""
+    if not plist or any(
+        e.getClass().getSimpleName() != "AttributeReference" for e in plist
+    ):
+        return None
+    names = [str(e.name()) for e in plist]
+    cmap = join.renames
+    if not cmap and len({n.lower() for n in names}) == len(names):
+        return None
+    sel = _UniqueSelect()
+    for e, base in zip(plist, names):
+        eid = int(e.exprId().id())
+        sel.add(eid, base, cmap.get(eid, base))
+    return ir.ProjectN(
+        child=join,
+        exprs=sel.exprs,
+        output=sel.output,
+        references=frozenset(names),
+        renames=sel.renames,
     )
 
 
-def _synthesize_renamed_select(out: "ir.JoinN", jnode, lmap: dict, rmap: dict) -> None:
+def _synthesize_renamed_select(out: "ir.JoinN", sides: _Sides, lmap: dict, rmap: dict) -> None:
     """Install an explicit exprId-attributed SELECT list on a join whose
     output carries duplicate names (r13, VERDICT r12 #4 — the q47
     moving-average self-join chain).  First occurrences keep their
@@ -873,47 +837,22 @@ def _synthesize_renamed_select(out: "ir.JoinN", jnode, lmap: dict, rmap: dict) -
     keep = None
     if out.right_keep is not None:
         keep = {c.lower() for c in out.right_keep}
-    sel: list[str] = []
-    out_names: list[str] = []
-    renames: dict[int, str] = {}
-    used: set[str] = set()
-    counter = [0]
-
-    def mint() -> str:
-        while True:
-            cand = f"__hs_dup{counter[0]}"
-            counter[0] += 1
-            if cand not in used:
-                return cand
-
-    def add(side: str, amap: dict, jattr) -> None:
-        eid = int(jattr.exprId().id())
-        base = str(jattr.name())
-        exposed = amap.get(eid, base)
-        final = exposed if exposed.lower() not in used else mint()
-        used.add(final.lower())
-        q = _quote_if_needed(exposed)
-        if final != exposed:
-            sel.append(f"{side}.{q} AS {_quote_if_needed(final)}")
-        else:
-            sel.append(f"{side}.{q}")
-        out_names.append(final)
-        if final != base:
-            renames[eid] = final
-
-    for a in scala_seq(jnode.left().output()):
-        add("__hs_l", lmap, a)
-    for a in scala_seq(jnode.right().output()):
-        if keep is not None:
+    sel = _UniqueSelect()
+    for qualifier, amap, jside in (
+        ("__hs_l.", lmap, sides.left),
+        ("__hs_r.", rmap, sides.right),
+    ):
+        for a in scala_seq(jside.output()):
             eid = int(a.exprId().id())
-            exposed = rmap.get(eid, str(a.name()))
-            if exposed.lower() not in keep:
+            base = str(a.name())
+            exposed = amap.get(eid, base)
+            if jside is sides.right and keep is not None and exposed.lower() not in keep:
                 continue  # a right key copy the inner-equi dedup drops
-        add("__hs_r", rmap, a)
-    out.select_exprs = sel
-    out.select_output = out_names
+            sel.add(eid, base, exposed, qualifier)
+    out.select_exprs = sel.exprs
+    out.select_output = sel.output
     out.right_keep = None
-    out.renames = renames
+    out.renames = sel.renames
 
 
 def _names(node: ir.Node) -> list[str]:
@@ -969,22 +908,15 @@ _RESIDUAL_BINOPS = {
 }
 
 
-def _qualified_residual(jconj, jnode, lmap=None, rmap=None) -> str | None:
-    """Render a residual join conjunct with the REPLAY's side aliases
-    (__hs_l/__hs_r), attributing every attribute to its side by exprId —
-    the only sound spelling when both sides expose the same column name.
-    None when the expression leaves the bounded grammar or an attribute
-    resolves to neither/both sides (planner falls back loudly)."""
-    lset, rset = jnode.left().outputSet(), jnode.right().outputSet()
-    return _render_qualified(jconj, lset, rset, lmap=lmap, rmap=rmap)
-
-
 def _render_qualified(
     jexpr, lset, rset, lalias="__hs_l", ralias="__hs_r", lmap=None, rmap=None
 ) -> str | None:
-    """Side-qualified rendering over the bounded residual grammar,
-    shared by _qualified_residual, the Project-over-join fusion, and the
-    ExistenceJoin-chain branch conditions (custom aliases).  lmap/rmap
+    """Side-qualified rendering over the bounded residual grammar: a
+    residual join conjunct referencing a column BOTH sides expose, a
+    fused Project's expressions, and the ExistenceJoin-chain branch
+    conditions (custom aliases).  Every attribute is attributed to its
+    side by exprId; None when the expression leaves the grammar or an
+    attribute resolves to neither/both sides.  lmap/rmap
     (r13): exprId -> exposed-name maps for RENAMED children — an
     attribute a child renamed must be referenced by its __hs_dupN name."""
     lmap = lmap or {}
@@ -1046,7 +978,7 @@ def _render_qualified(
     return render(jexpr)
 
 
-def _try_fuse_project_join(jproj, jjoin):
+def _fuse_project_join(plist, jjoin, sides: _Sides, join: "ir.JoinN") -> "ir.JoinN | None":
     """Project DIRECTLY above an inner join whose output carries the
     same column name from both sides (TPC-DS q95's ws_wh CTE:
     ``SELECT ws1.ws_order_number, ws1.ws_warehouse_sk wh1,
@@ -1054,58 +986,40 @@ def _try_fuse_project_join(jproj, jjoin):
     name-based replay of the bare join is ambiguous, so the subtree
     used to go opaque and its scans were invisible to every index rule.
     The Project's own expressions are attributed by exprId, so when each
-    renders under the bounded grammar the Project FUSES into the join as
-    an explicit side-qualified SELECT list.
-
-    Returns ``(fused, reusable_child)`` (r15): on success the fused
-    JoinN rides in the first slot; when the probe bails AFTER parsing
-    the join, the parse is finished through _finalize_join_collision —
-    exactly the allow_collision=False result — and handed back so the
-    pruning/generic paths never re-walk the subtree over py4j;
-    ``(None, None)`` = bailed before parsing anything."""
+    renders under the bounded grammar the Project FUSES into the join
+    (not yet finalized) as an explicit side-qualified SELECT list.
+    Returns the fused join, or None without touching ``join``."""
     names = _out_names(jjoin)
     if len({n.lower() for n in names}) == len(names):
-        return None, None  # no collision: the generic path replays fine
-    if not list(scala_seq(jproj.projectList())):
+        return None  # no collision: the generic path replays fine
+    if not plist:
         # an EMPTY pruning Project (count(*) over the join) would fuse
         # to `SELECT FROM ...` — not a statement; keep the opaque path
-        return None, None
-    try:
-        join_node = _parse_join(jjoin, allow_collision=True)
-    except UnsupportedPlan:
-        return None, _CHILD_UNSUPPORTED
-
-    def bail():
-        try:
-            return None, _finalize_join_collision(join_node, jjoin)
-        except UnsupportedPlan:
-            return None, _CHILD_UNSUPPORTED
-
-    if join_node.join_type != "inner":
-        return bail()
-    lset, rset = jjoin.left().outputSet(), jjoin.right().outputSet()
-    lmap = getattr(join_node.left, "renames", None) or {}
-    rmap = getattr(join_node.right, "renames", None) or {}
+        return None
+    if join.join_type != "inner":
+        return None
+    lmap = getattr(join.left, "renames", None) or {}
+    rmap = getattr(join.right, "renames", None) or {}
     sel: list[str] = []
     out_names: list[str] = []
-    for je in scala_seq(jproj.projectList()):
+    for je in plist:
         jcls = je.getClass().getSimpleName()
         if jcls not in ("Alias", "AttributeReference"):
-            return bail()
+            return None
         body_expr = je.child() if jcls == "Alias" else je
-        body = _render_qualified(body_expr, lset, rset, lmap=lmap, rmap=rmap)
+        body = _render_qualified(body_expr, *sides.sets(), lmap=lmap, rmap=rmap)
         if body is None:
-            return bail()
+            return None
         name = str(je.name())
         sel.append(f"{body} AS {_quote_if_needed(name)}")
         out_names.append(name)
     if len({n.lower() for n in out_names}) != len(out_names):
-        return bail()  # the project output itself is ambiguous
-    join_node.select_exprs = sel
-    join_node.select_output = out_names
-    join_node.right_keep = None
-    join_node.renames = {}  # the fused list re-establishes unique names
-    return join_node, None
+        return None  # the project output itself is ambiguous
+    join.select_exprs = sel
+    join.select_output = out_names
+    join.right_keep = None
+    join.renames = {}  # the fused list re-establishes unique names
+    return join
 
 
 _BAND_OPS = {
@@ -1121,7 +1035,7 @@ def _render_side(e, allowed_set, alias: str | None):
     """Render an expression whose every attribute belongs to
     ``allowed_set`` (a JVM AttributeSet, exprId-exact) — bare names when
     alias is None, alias-qualified otherwise.  Same bounded grammar as
-    ``_qualified_residual`` minus boolean glue (band operands are
+    ``_render_qualified`` minus boolean glue (band operands are
     arithmetic).  Returns (sql, refs, total) or None; ``total`` is False
     when the expression contains a construct that can THROW under ANSI
     mode (Divide → divide-by-zero, Cast → overflow/format) — the band
@@ -1166,7 +1080,7 @@ def _render_side(e, allowed_set, alias: str | None):
     return None if sql is None else (sql, frozenset(refs), not throwing)
 
 
-def _band_conjunct(jconj, jnode) -> tuple | None:
+def _band_conjunct(jconj, sides: _Sides) -> tuple | None:
     """(op, right_expr_bare_sql, left_expr_qualified_sql, r_refs,
     r_total) when the conjunct is one comparison whose operands separate
     cleanly by side: the right operand references ONLY right attributes
@@ -1199,7 +1113,7 @@ def _band_conjunct(jconj, jnode) -> tuple | None:
         op = _BAND_OPS[cls]
     else:
         return None
-    lset, rset = jnode.left().outputSet(), jnode.right().outputSet()
+    lset, rset = sides.sets()
     a, b = jconj.left(), jconj.right()
     for r_operand, l_operand, o in ((a, b, op), (b, a, _BAND_FLIP[op])):
         r = _render_side(r_operand, rset, None)
@@ -1212,7 +1126,7 @@ def _band_conjunct(jconj, jnode) -> tuple | None:
     return None
 
 
-def _equi_pair_by_exprid(jconj, jnode, lmap=None, rmap=None) -> tuple[str, str] | None:
+def _equi_pair_by_exprid(jconj, sides: _Sides, lmap: dict, rmap: dict) -> tuple[str, str] | None:
     """Attribute an EqualTo(attr, attr) conjunct to join sides by exprId
     membership in the JVM children's outputSet — the reference rule's
     own resolution (JoinIndexRule.scala:179-317), reachable here because
@@ -1229,9 +1143,7 @@ def _equi_pair_by_exprid(jconj, jnode, lmap=None, rmap=None) -> tuple[str, str] 
         or b.getClass().getSimpleName() != "AttributeReference"
     ):
         return None
-    lset, rset = jnode.left().outputSet(), jnode.right().outputSet()
-    lmap = lmap or {}
-    rmap = rmap or {}
+    lset, rset = sides.sets()
 
     def side(attr):
         in_l, in_r = lset.contains(attr), rset.contains(attr)

@@ -163,9 +163,10 @@ def _sql(spark: "SparkSession", node: ir.Node, views: list[str]) -> str:
             raise ValueError(f"unsupported join type {node.join_type}")
         on = f" ON {' AND '.join(conds)}" if conds else ""
         if node.select_exprs is not None:
-            # Fused parent Project (parser._try_fuse_project_join): the
-            # join's own output is name-ambiguous, so the SELECT list is
-            # fully side-qualified and defines the output.
+            # A fused parent Project (parser._fuse_project_join) or a
+            # synthesized renamed SELECT (parser._finalize_join_collision):
+            # the join's own output is name-ambiguous, so the SELECT list
+            # is fully side-qualified and defines the output.
             sel = ", ".join(node.select_exprs)
             return f"SELECT {sel} FROM {left} {jt} {right}{on}"
         if node.right_keep is not None:

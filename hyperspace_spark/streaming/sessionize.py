@@ -93,13 +93,15 @@ def _advance_batch(start, last, n, total, ts, vals, gap_ms):
     ``max(carried last, previous element)``).
 
     Integer fields (start / end / count) are bit-exactly ``_advance``'s.
-    Float totals use ``np.add.reduceat`` (pairwise summation) for the
-    closed middle segments, so they can differ from the scalar
-    sequential accumulation by ulps — the operator contract rounds
-    totals (round(total_value, 2) in the workload + oracle), and
-    tests/test_sessionize_property.py asserts the tight tolerance.  The
-    continuation segment seeds the carried ``total`` through an exact
-    sequential ``np.cumsum``.
+    Float totals are exact sequential ``np.cumsum`` sums in two places:
+    the closed continuation segment (the carried ``total`` plus the
+    events before the first break), and the carried ``total`` when the
+    batch has no break.  After a break, the closed middle segments and
+    the new open session's carried ``total`` come from
+    ``np.add.reduceat`` (pairwise summation), so they can differ from
+    the scalar sequential accumulation by ulps — the operator contract
+    rounds totals (round(total_value, 2) in the workload + oracle), and
+    tests/test_sessionize_property.py asserts the tight tolerance.
 
     Returns ``((start, last, n, total), (st, en, cnt, tot))`` where the
     second element holds the closed sessions as int64/int64/int64/float64

@@ -1,8 +1,10 @@
 """Unit layer for the planner: rule scoring, optimizer max-score search,
-ranking, source-provider registry, cross-instance OCC.
+ranking, source-provider registry, cross-instance OCC, and how often the
+parser visits each plan node.
 
 Mirrors the reference's rule unit tests (ScoreBasedIndexPlanOptimizerTest,
-JoinIndexRankerTest, FilterIndexRankerTest) without Spark jobs.
+JoinIndexRankerTest, FilterIndexRankerTest) without Spark jobs; only the
+parse-count test runs a small Spark query.
 """
 
 import json
@@ -229,3 +231,62 @@ def test_cross_instance_occ(tmp_path):
     ok1 = m1.write_log(1, e.with_state("REFRESHING", 1))
     ok2 = m2.write_log(1, e.with_state("OPTIMIZING", 1))
     assert ok1 and not ok2
+
+
+def test_self_join_chain_parses_each_join_once(spark, tmp_path, monkeypatch):
+    """A q47-shaped self-join chain (the same aggregate joined to itself
+    three times on a shared key, colliding payload names, attribute-only
+    Projects between the levels) must parse each Join node once and no
+    plan node twice.  Re-parsing a Project's join child per consumer
+    (fusion probe, pruning Project, generic Project) re-walks every
+    level below it over py4j: 2^depth work on these chains."""
+    from hyperspace_spark import CoveringIndexConfig, Hyperspace
+    from hyperspace_spark.planner import parser
+    from pyspark.sql import functions as F
+    from tests.conftest import rows_equal
+
+    src = str(tmp_path / "sales")
+    spark.range(600).select(
+        (F.col("id") % 20).alias("k"),
+        (F.col("id") % 7).alias("m"),
+        ((F.col("id") * 37) % 1000).cast("double").alias("amt"),
+    ).write.parquet(src)
+    sales = spark.read.parquet(src)
+    hs = Hyperspace(spark, system_path=str(tmp_path / "idx"))
+    hs.create_index(sales, CoveringIndexConfig("chain_ci", ["k"], ["m", "amt"]))
+    sales.createOrReplaceTempView("chain_sales")
+    q = spark.sql(
+        """
+        WITH v1 AS (
+          SELECT k, m, sum(amt) AS total,
+                 rank() OVER (PARTITION BY k ORDER BY m) rn
+          FROM chain_sales GROUP BY k, m)
+        SELECT v1.k, v1.m, v1.total, lag.total ptotal, lead.total ntotal,
+               lag2.total p2total
+        FROM v1, v1 lag, v1 lead, v1 lag2
+        WHERE v1.k = lag.k AND v1.k = lead.k AND v1.k = lag2.k
+          AND v1.rn = lag.rn + 1 AND v1.rn = lead.rn - 1
+          AND v1.rn = lag2.rn + 2
+        """
+    )
+    tree = str(q._jdf.queryExecution().optimizedPlan().treeString())
+    lines = [ln for ln in tree.splitlines() if ln.strip()]
+    joins = sum(1 for ln in lines if ln.lstrip(" :+-").startswith("Join "))
+    assert joins == 3, tree
+
+    calls = {"_parse": 0, "_parse_join": 0}
+    for name in calls:
+        orig = getattr(parser, name)
+
+        def counted(*a, _orig=orig, _name=name, **k):
+            calls[_name] += 1
+            return _orig(*a, **k)
+
+        monkeypatch.setattr(parser, name, counted)
+    parser.parse_df(q)
+    assert calls["_parse_join"] == joins, calls
+    assert calls["_parse"] <= len(lines), (calls, len(lines))
+    monkeypatch.undo()
+
+    assert q.count() > 0
+    assert rows_equal(q, hs.apply(q))
