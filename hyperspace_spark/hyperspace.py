@@ -1251,56 +1251,6 @@ class Hyperspace:
             )
         return "\n".join(lines)
 
-    # ------------------------------------------------------------------
-    # index recommendation (extension: whyNot explains the miss, this
-    # proposes the index that would hit — the advisory loop's other half)
-    # ------------------------------------------------------------------
-    def _sampled_distinct_ratio(self, scan, col: str, sample_rows: int = 100_000):
-        """Distinct-value ratio of ``col`` over a bounded sample of the
-        scan, for recommend()'s sketch-kind choice.  LIMIT keeps the job
-        O(sample), never O(table) — advisory APIs must stay cheap at
-        100 TB.  None on any failure (callers fall back to Bloom, the
-        safe generic for equality probes)."""
-        try:
-            from pyspark.sql import functions as F
-
-            row = (
-                scan.read(self.spark)
-                .select(col)
-                .limit(int(sample_rows))
-                .agg(F.approx_count_distinct(col).alias("d"), F.count(F.lit(1)).alias("n"))
-                .first()
-            )
-            if not row or not row["n"]:
-                return None
-            return float(row["d"]) / float(row["n"])
-        except Exception:
-            return None
-
-    def _ds_covered(self, scan, sketches) -> bool:
-        """An ACTIVE skipping index on the same source already holds an
-        equivalent sketch for every proposed (kind, column) — a
-        ValueList also answers the equality probes a Bloom would."""
-        from hyperspace_spark.indexes.sketches import sketch_from_json
-
-        want = {(s.kind, s.column) for s in sketches}
-        for e in self._all_latest_entries(self.conf()):
-            if e.state != States.ACTIVE or e.derived_kind != "DS" or not _same_source(e, scan):
-                continue
-            have = set()
-            for sj in e.derived_properties.get("sketches", []):
-                try:
-                    sk = sketch_from_json(sj)
-                    have.add((sk.kind, sk.column))
-                except Exception:
-                    continue
-            if all(
-                (k, c) in have or (k == "Bloom" and ("ValueList", c) in have)
-                for k, c in want
-            ):
-                return True
-        return False
-
     def recommend(self, df: "DataFrame") -> list[dict]:
         """Covering-index configurations that would accelerate ``df``,
         derived from the query's own shape: filters suggest an index
@@ -1314,517 +1264,9 @@ class Hyperspace:
         planner rule that would consume it>, "reason": <human line>,
         "source": <root paths>}`` — pass ``config`` straight to
         ``create_index``.  Advisory only: nothing is created."""
-        from hyperspace_spark.indexes.covering import CoveringIndexConfig
-        from hyperspace_spark.planner import ir as _ir
-        from hyperspace_spark.planner.parser import parse_df
-        from hyperspace_spark.planner.rules import (
-            equality_literals,
-            match_filter_pattern,
-            match_linear_side,
-        )
-        from hyperspace_spark.planner.expr import split_conjuncts
+        from hyperspace_spark.recommend import recommend
 
-        try:
-            plan = parse_df(df)
-        except Exception:
-            return []
-        conf = self.conf()
-        entries_all = [
-            e for e in self._all_latest_entries(conf) if e.state == States.ACTIVE
-        ]
-        entries = [e for e in entries_all if e.derived_kind in ("CI", "ZCI")]
-
-        def scan_col_types(scan) -> dict:
-            import json as _json
-
-            try:
-                fields = _json.loads(scan.data_schema_json)["fields"]
-            except Exception:
-                return {}
-            out = {}
-            for f in fields:
-                t = f.get("type")
-                if isinstance(t, dict) and t.get("type") == "array":
-                    out[f["name"]] = f"array<{t.get('elementType')}>"
-                elif isinstance(t, str):
-                    out[f["name"]] = t
-            return out
-
-        _id_col_memo: dict[tuple, tuple[str, str]] = {}
-
-        def pick_id_col(scan) -> tuple[str, str]:
-            """(id_col, caveat) for TXT/ANN suggestions.  The first
-            *id/*key column can be a NON-unique foreign key (a *_sk
-            dimension key on a fact table), and TXT/ANN indexes key rows
-            by id_col — so run a sampled-uniqueness probe (r13, ADVICE
-            r12): prefer the first candidate whose sample has no
-            duplicate and no NULL (countDistinct == count implies both).
-            A sample can't prove global uniqueness, so the caveat states
-            what was checked; when the probe can't run, the 'verify it
-            yourself' caveat stands.  The sample is read like the scan
-            (``Relation.read``), so CSV/JSON/... sources are probed too.
-
-            Memoized per (paths, candidate set) within this recommend()
-            call: the probe is a full sampled Spark job, and a table
-            with several TXT/ANN candidate columns would otherwise pay
-            the identical probe once per column (ADVICE r13)."""
-            cands = [
-                c
-                for c in scan.output
-                if c.lower().endswith("id") or c.lower().endswith("key")
-            ] or ([scan.output[0]] if scan.output else ["id"])
-            memo_key = (scan.normalized_paths(), tuple(cands))
-            hit = _id_col_memo.get(memo_key)
-            if hit is not None:
-                return hit
-            try:
-                from pyspark.sql import functions as F
-
-                sample = scan.read(self.spark).select(*cands).limit(100_000)
-                row = sample.agg(
-                    F.count(F.lit(1)).alias("__hs_n"),
-                    *[F.countDistinct(c).alias(c) for c in cands],
-                ).collect()[0]
-                n = row["__hs_n"]
-                for c in cands:
-                    if n and row[c] == n:
-                        out = (c, f"id_col {c} unique over a {n}-row sample")
-                        _id_col_memo[memo_key] = out
-                        return out
-            except Exception:
-                pass
-            out = (cands[0], f"verify id_col {cands[0]} is a unique row id")
-            _id_col_memo[memo_key] = out
-            return out
-
-        def covered_by_existing(scan, indexed, required):
-            for e in entries:
-                if not _same_source(e, scan):
-                    continue
-                p = e.derived_properties
-                if p.get("filterPredicateExpr"):
-                    continue  # partial: can't assume it serves
-                have = p.get("indexedColumns", [])
-                cov = set(have) | set(p.get("includedColumns", []))
-                if have[: len(indexed)] == list(indexed) and set(required) <= cov:
-                    return True
-            return False
-
-        suggestions: list[dict] = []
-        seen_keys: set[tuple] = set()
-
-        def add(scan, indexed, required, rule, reason):
-            indexed = [c for c in indexed if "." not in c]
-            if not indexed:
-                return
-            included = sorted(c for c in required if c not in indexed and "." not in c)
-            key = (scan.normalized_paths(), tuple(indexed), tuple(included))
-            if key in seen_keys or covered_by_existing(scan, indexed, required):
-                return
-            seen_keys.add(key)
-            name = f"hs_rec_{len(suggestions)}_{indexed[0]}".lower()
-            suggestions.append(
-                {
-                    "config": CoveringIndexConfig(name, list(indexed), included),
-                    "rule": rule,
-                    "reason": reason,
-                    "source": list(scan.normalized_paths()),
-                }
-            )
-
-        seen_filters: set[int] = set()
-
-        def walk(node):
-            m = match_filter_pattern(node)
-            if m is not None and id(m[1]) not in seen_filters:
-                # outermost match wins: Project(Filter(Scan)) also
-                # matches again at the bare Filter child with a wider
-                # required set — suggest once, with the projection.
-                seen_filters.add(id(m[1]))
-                _, filt, scan = m
-                try:
-                    required = sorted(_ir.required_columns(node))
-                except ValueError:
-                    required = sorted(filt.condition.references)
-                refs = [c for c in sorted(filt.condition.references) if "." not in c]
-                # Disjunctive filter family (r11): when every OR branch
-                # pins some column with an equality/IN, propose ONE index
-                # per distinct branch column — together they let
-                # FilterOrIndexRule serve the disjunction as a union of
-                # bucket-pruned branch scans.  Creating the set closes
-                # the loop: covered_by_existing then drops each proposal.
-                from hyperspace_spark.planner.expr import BoolOp, split_disjuncts
-                from hyperspace_spark.planner.rules import FilterOrIndexRule
-
-                handled_or = False
-                cond = filt.condition
-                if isinstance(cond, BoolOp) and cond.op == "or":
-                    disjuncts = split_disjuncts(cond)
-                    branch_cols: list[str] = []
-                    if 2 <= len(disjuncts) <= FilterOrIndexRule.MAX_BRANCHES:
-                        for d in disjuncts:
-                            deq = [
-                                c
-                                for c in sorted(d.references)
-                                if "." not in c
-                                and equality_literals(d, c) is not None
-                            ]
-                            if not deq:
-                                branch_cols = []
-                                break
-                            branch_cols.append(deq[0])
-                    if branch_cols:
-                        handled_or = True
-                        for col in dict.fromkeys(branch_cols):
-                            add(
-                                scan,
-                                [col],
-                                required,
-                                "FilterOrIndexRule",
-                                f"OR branch pins {col}: index-OR union reads "
-                                "only that literal's buckets per branch "
-                                "(create the full set of branch indexes)",
-                            )
-                eq = [
-                    c
-                    for c in refs
-                    if equality_literals(filt.condition, c) is not None
-                ]
-                if handled_or:
-                    pass
-                elif eq:
-                    add(
-                        scan,
-                        eq[:1],
-                        required,
-                        "FilterIndexRule",
-                        f"equality probe on {eq[0]}: bucket-pruned point lookup",
-                    )
-                elif refs:
-                    add(
-                        scan,
-                        refs[:1],
-                        required,
-                        "FilterIndexRule",
-                        f"range predicate on {refs[0]}: sorted index scan with row-group pruning",
-                    )
-                # A LITERAL equality conjunct alongside other predicates
-                # also admits a PARTIAL index scoped to that conjunct —
-                # predicate-fraction build/storage cost for the same
-                # query family (CoveringIndexConfig(where=...)).
-                from hyperspace_spark.planner.expr import Cmp, Lit
-                from hyperspace_spark.planner.expr import (
-                    split_conjuncts as _split,
-                )
-
-                conjs = _split(filt.condition)
-                lit_eq = [
-                    c
-                    for c in conjs
-                    if isinstance(c, Cmp)
-                    and c.op == "="
-                    and isinstance(c.right, Lit)
-                    and c.references
-                ]
-                others = [c for c in refs if c not in {
-                    next(iter(c2.references)) for c2 in lit_eq
-                }]
-                if lit_eq and others:
-                    pred = lit_eq[0]
-                    suggestions_before = len(suggestions)
-                    add(
-                        scan,
-                        others[:1],
-                        required,
-                        "FilterIndexRule",
-                        f"partial index WHERE {pred.sql}: indexes only the "
-                        f"queried subset at predicate-fraction cost",
-                    )
-                    if len(suggestions) > suggestions_before:
-                        cfg = suggestions[-1]["config"]
-                        cfg.where = pred.sql
-                        suggestions[-1]["config"] = cfg
-                # Data-skipping sketch recommendation (r11; the advisory
-                # role of the reference's MinMaxAnalysisUtil.analyze):
-                # one DataSkippingIndexConfig whose sketch kind fits
-                # each predicate shape — MinMax for ranges; for
-                # equality/IN a sampled cardinality estimate picks
-                # ValueList (low cardinality: exact per-file lists) vs
-                # Bloom (high cardinality: constant bytes per file).
-                from hyperspace_spark.indexes.dataskipping import (
-                    DataSkippingIndexConfig,
-                )
-                from hyperspace_spark.indexes.sketches import (
-                    BloomFilterSketch,
-                    MinMaxSketch,
-                    ValueListSketch,
-                )
-
-                ds_sketches: list = []
-                ds_reasons: list[str] = []
-                for col in refs:
-                    if col in (scan.partition_columns or []):
-                        continue  # Spark prunes partition values natively
-                    if equality_literals(filt.condition, col) is not None:
-                        ratio = self._sampled_distinct_ratio(scan, col)
-                        if ratio is not None and ratio <= 0.05:
-                            ds_sketches.append(ValueListSketch([col]))
-                            ds_reasons.append(
-                                f"ValueList({col}): equality probe on a "
-                                f"low-cardinality column (~{ratio:.1%} "
-                                "distinct in sample)"
-                            )
-                        else:
-                            ds_sketches.append(BloomFilterSketch([col]))
-                            ds_reasons.append(
-                                f"Bloom({col}): equality probe on a "
-                                "high-cardinality column"
-                            )
-                    elif any(
-                        isinstance(cj, Cmp)
-                        and cj.op in ("<", "<=", ">", ">=")
-                        and cj.references == frozenset([col])
-                        for cj in conjs
-                    ):
-                        ds_sketches.append(MinMaxSketch([col]))
-                        ds_reasons.append(f"MinMax({col}): range predicate")
-                first_key = eq[:1] if eq else refs[:1]
-                if (
-                    ds_sketches
-                    and not self._ds_covered(scan, ds_sketches)
-                    # an ACTIVE covering index that already serves this
-                    # query makes a skipping index redundant advice
-                    and not covered_by_existing(scan, first_key, required)
-                ):
-                    ds_name = f"hs_rec_ds_{len(suggestions)}_{ds_sketches[0].column}".lower()
-                    suggestions.append(
-                        {
-                            "config": DataSkippingIndexConfig(
-                                ds_name, sketches=ds_sketches
-                            ),
-                            "rule": "DataSkippingIndexRule",
-                            "reason": "; ".join(ds_reasons),
-                            "source": list(scan.normalized_paths()),
-                        }
-                    )
-                # Z-order recommendation (r12; reference
-                # ZOrderCoveringIndex.scala:28-189): a MULTI-column
-                # predicate family with at least one range is the shape
-                # a single-key covering index serves poorly (bucket
-                # pruning pins only the first key; the other columns
-                # scan every bucket).  Z-clustering interleaves all the
-                # predicate columns, so per-file min/max stats prune on
-                # ANY of them.
-                range_cols = [
-                    c
-                    for c in refs
-                    if any(
-                        isinstance(cj, Cmp)
-                        and cj.op in ("<", "<=", ">", ">=")
-                        and cj.references == frozenset([c])
-                        for cj in conjs
-                    )
-                ]
-                zcols = list(dict.fromkeys(eq + range_cols))
-                if len(zcols) >= 2 and range_cols:
-                    z_served = any(
-                        e.derived_kind == "ZCI"
-                        and _same_source(e, scan)
-                        and not e.derived_properties.get("filterPredicateExpr")
-                        and set(zcols)
-                        <= set(e.derived_properties.get("indexedColumns", []))
-                        and set(required)
-                        <= set(e.derived_properties.get("indexedColumns", []))
-                        | set(e.derived_properties.get("includedColumns", []))
-                        for e in entries_all
-                    )
-                    zkey = (scan.normalized_paths(), "ZCI", tuple(zcols))
-                    if not z_served and zkey not in seen_keys:
-                        seen_keys.add(zkey)
-                        from hyperspace_spark.indexes.zorder import (
-                            ZOrderCoveringIndexConfig,
-                        )
-
-                        zname = f"hs_rec_z_{len(suggestions)}_{zcols[0]}".lower()
-                        suggestions.append(
-                            {
-                                "config": ZOrderCoveringIndexConfig(
-                                    zname,
-                                    list(zcols),
-                                    sorted(
-                                        c
-                                        for c in required
-                                        if c not in zcols and "." not in c
-                                    ),
-                                ),
-                                "rule": "ZOrderFilterIndexRule",
-                                "reason": (
-                                    f"multi-column predicate on {', '.join(zcols)} "
-                                    "with a range: z-clustering prunes files on "
-                                    "ANY of the columns (a single-key covering "
-                                    "index pins only its first key)"
-                                ),
-                                "source": list(scan.normalized_paths()),
-                            }
-                        )
-                # Inverted-text recommendation (r12): substring/term
-                # predicates (LIKE '%..%', contains, instr, locate)
-                # re-scan and re-tokenize every row per query; a TXT
-                # index serves term/phrase/boolean/BM25 probes from
-                # bucket-pruned postings.
-                import re as _re
-
-                types = scan_col_types(scan)
-                for cj in conjs:
-                    if len(cj.references) != 1:
-                        continue
-                    (tcol,) = cj.references
-                    if types.get(tcol) != "string":
-                        continue
-                    if not _re.search(
-                        r"\bcontains\(|\binstr\(|\blocate\(|LIKE\s+'%",
-                        cj.sql,
-                        _re.IGNORECASE,
-                    ):
-                        continue
-                    tkey = (scan.normalized_paths(), "TXT", tcol)
-                    if tkey in seen_keys:
-                        continue
-                    seen_keys.add(tkey)
-                    if any(
-                        e.derived_kind == "TXT"
-                        and _same_source(e, scan)
-                        and e.derived_properties.get("textCol") == tcol
-                        for e in entries_all
-                    ):
-                        continue
-                    from hyperspace_spark.indexes.inverted import (
-                        InvertedTextIndexConfig,
-                    )
-
-                    id_col, id_caveat = pick_id_col(scan)
-                    suggestions.append(
-                        {
-                            "config": InvertedTextIndexConfig(
-                                f"hs_rec_txt_{len(suggestions)}_{tcol}".lower(),
-                                text_col=tcol,
-                                id_col=id_col,
-                            ),
-                            "rule": "text_search (explicit API)",
-                            "reason": (
-                                f"substring predicate on {tcol} re-scans every "
-                                "row per query; an inverted TXT index serves "
-                                "term/phrase/boolean/BM25 probes from "
-                                f"bucket-pruned postings ({id_caveat})"
-                            ),
-                            "source": list(scan.normalized_paths()),
-                        }
-                    )
-            # ANN recommendation (r12): a top-k ordered by an expression
-            # over a float-vector column is a brute-force O(corpus)
-            # similarity scan PER QUERY; an IVF index bounds each probe
-            # to n_probe clusters.
-            if (
-                isinstance(node, _ir.LimitN)
-                and isinstance(node.child, _ir.SortN)
-                and node.n <= 1000
-            ):
-                ms = match_linear_side(node.child.child)
-                if ms is not None:
-                    scan, required = ms
-                    types = scan_col_types(scan)
-                    vec_cols = [
-                        c
-                        for c in sorted(required)
-                        if types.get(c) in ("array<float>", "array<double>")
-                    ]
-                    for vcol in vec_cols[:1]:
-                        akey = (scan.normalized_paths(), "ANN", vcol)
-                        if akey in seen_keys:
-                            continue
-                        seen_keys.add(akey)
-                        if any(
-                            e.derived_kind == "ANN"
-                            and _same_source(e, scan)
-                            and e.derived_properties.get("vecCol") == vcol
-                            for e in entries_all
-                        ):
-                            continue
-                        from hyperspace_spark.indexes.ann import IvfIndexConfig
-
-                        id_col, id_caveat = pick_id_col(scan)
-                        suggestions.append(
-                            {
-                                "config": IvfIndexConfig(
-                                    f"hs_rec_ann_{len(suggestions)}_{vcol}".lower(),
-                                    vec_col=vcol,
-                                    id_col=id_col,
-                                ),
-                                "rule": "ann_search / ann_join (explicit API)",
-                                "reason": (
-                                    f"top-{node.n} ordered by an expression over "
-                                    f"vector column {vcol}: brute force scores the "
-                                    "whole corpus per query; IVF probes n_probe "
-                                    "clusters (add pq_m for the PQ layout at "
-                                    f"billion-vector scale; {id_caveat})"
-                                ),
-                                "source": list(scan.normalized_paths()),
-                            }
-                        )
-            if isinstance(node, _ir.JoinN) and node.equi_keys:
-                for side, keys in (
-                    (node.left, [l for l, _ in node.equi_keys]),
-                    (node.right, [r for _, r in node.equi_keys]),
-                ):
-                    ms = match_linear_side(side)
-                    if ms is None:
-                        continue
-                    scan, required = ms
-                    add(
-                        scan,
-                        keys,
-                        sorted(required),
-                        "JoinIndexRule",
-                        f"equi-join on {', '.join(keys)}: co-bucketed pair eliminates the join shuffle "
-                        "(create BOTH sides' indexes with equal num_buckets)",
-                    )
-            if isinstance(node, _ir.AggregateN) and node.grouping:
-                from hyperspace_spark.planner.rules import _plain_column
-
-                keys = [c for c in (_plain_column(g) for g in node.grouping) if c]
-                ms = match_linear_side(node.child)
-                if keys and ms is not None:
-                    scan, required = ms
-                    add(
-                        scan,
-                        keys,
-                        sorted(required),
-                        "AggBucketedIndexRule",
-                        f"GROUP BY {', '.join(keys)}: bucketed read drops the aggregation exchange",
-                    )
-            if isinstance(node, _ir.WindowN) and node.partition_cols:
-                ms = match_linear_side(node.child)
-                if ms is not None:
-                    scan, required = ms
-                    add(
-                        scan,
-                        list(node.partition_cols),
-                        sorted(required),
-                        "WindowBucketedIndexRule",
-                        f"window PARTITION BY {', '.join(node.partition_cols)}: bucketed read drops the window exchange",
-                    )
-            for k in _ir.children(node):
-                walk(k)
-
-        walk(plan)
-        return suggestions
-
-
-def _same_source(entry: IndexLogEntry, scan: ir.Scan) -> bool:
-    """``entry`` indexes the relation ``scan`` reads (same normalized
-    root paths)."""
-    roots = sorted(ir._normalize_path(p) for r in entry.relations for p in r.root_paths)
-    return tuple(roots) == scan.normalized_paths()
+        return recommend(self, df)
 
 
 def _scan_of(rel: Relation) -> ir.Scan:

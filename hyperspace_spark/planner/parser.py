@@ -351,9 +351,11 @@ def _parse(jnode) -> ir.Node:
         )
 
     if cls == "Filter":
-        ej = _try_parse_exists_filter(jnode)
-        if ej is not None:
-            return ej
+        jchild = jnode.child()
+        if jchild.getClass().getSimpleName() in ("Join", "Project"):
+            ej = _try_parse_exists_filter(jnode, jchild)
+            if ej is not None:
+                return ej
         jcond = jnode.condition()
         (condition,) = _parse_exprs([jcond], "filter")
         try:
@@ -361,7 +363,7 @@ def _parse(jnode) -> ir.Node:
         except Exception:
             det = False  # unknown -> treat as non-deterministic (safe)
         return ir.FilterN(
-            child=_parse_or_opaque(jnode.child()),
+            child=_parse_or_opaque(jchild),
             condition=condition,
             deterministic=det,
         )
@@ -476,7 +478,7 @@ def _parse(jnode) -> ir.Node:
     raise UnsupportedPlan(cls)
 
 
-def _try_parse_exists_filter(jnode) -> "ir.ExistsFilterN | None":
+def _try_parse_exists_filter(jnode, jchild) -> "ir.ExistsFilterN | None":
     """Filter over a chain of ExistenceJoins -> ir.ExistsFilterN (r13).
 
     Catalyst decorrelates EXISTS subqueries under a DISJUNCTION (TPC-DS
@@ -488,7 +490,8 @@ def _try_parse_exists_filter(jnode) -> "ir.ExistsFilterN | None":
     correlated EXISTS subqueries (Catalyst re-decorrelates on replay —
     an exact round trip), keeping the branch subtrees' scans visible to
     the index rules.  None when the shape doesn't hold or any piece
-    leaves the bounded grammar (the Filter then goes opaque as before)."""
+    leaves the bounded grammar (the Filter then goes opaque as before).
+    ``jchild`` is the Filter's child, which the caller has already read."""
     def _is_ej(n) -> bool:
         return (
             n.getClass().getSimpleName() == "Join"
@@ -496,7 +499,7 @@ def _try_parse_exists_filter(jnode) -> "ir.ExistsFilterN | None":
         )
 
     chain = []
-    cur = jnode.child()
+    cur = jchild
     while True:
         if _is_ej(cur):
             chain.append(cur)

@@ -3660,8 +3660,8 @@ def pipeline_end_to_end(spark, sf_dir):
     #
     # MEASURED AND KEPT AS-IS (r15, VERDICT r14 #5): an eager
     # localCheckpoint would truncate the 38-Exchange static plan to one
-    # materialized scan, but the interleaved A/B (scripts/r15_ab.py)
-    # measured it 1.9x SLOWER (1.54 -> 2.88 s at sf0.1): the persist
+    # materialized scan, but the interleaved A/B (scripts/r15_ab.py @
+    # f9ec1a6) measured it 1.9x SLOWER (1.54 -> 2.88 s at sf0.1): the persist
     # path materializes lazily into a columnar in-memory cache during
     # the first branch, while localCheckpoint pays an eager extra
     # materialization pass into row-format RDD blocks and both branches

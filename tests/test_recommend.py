@@ -66,6 +66,13 @@ def test_recommend_range_and_join_and_agg(spark, hs, tmp_path):
     assert len(by_rule.get("JoinIndexRule", [])) == 2
     keys = {tuple(rec["config"].indexed_columns) for rec in by_rule["JoinIndexRule"]}
     assert keys == {("l_orderkey",), ("o_orderkey",)}
+    # index one side -> only the other side is still proposed
+    (l_rec,) = [
+        rec for rec in by_rule["JoinIndexRule"] if rec["config"].indexed_columns == ["l_orderkey"]
+    ]
+    hs.create_index(li, l_rec["config"])
+    left = [rec for rec in hs.recommend(j) if rec["rule"] == "JoinIndexRule"]
+    assert [rec["config"].indexed_columns for rec in left] == [["o_orderkey"]], left
     # group-by over a scan -> bucketed-agg suggestion
     a = o.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("s"))
     recs_a = hs.recommend(a)
@@ -202,6 +209,19 @@ def test_recommend_partial_index_variant(spark, hs, tmp_path):
     out, used = hs._apply_with_info(df)
     assert cfg.name in used, hs.why_not(df)
     assert rows_equal(df, out)
+    # loop closed: the partial index serves the filter, so no covering
+    # or skipping proposal is left and the created config is not
+    # proposed again
+    recs = hs.recommend(df)
+    assert not [
+        r for r in recs if r["rule"] in ("FilterIndexRule", "DataSkippingIndexRule")
+    ], recs
+    assert not [
+        r
+        for r in recs
+        if getattr(r["config"], "where", None) == cfg.where
+        and getattr(r["config"], "indexed_columns", None) == cfg.indexed_columns
+    ], recs
 
 
 def test_recommend_zorder_roundtrip(spark, hs, tmp_path):
