@@ -15,6 +15,7 @@ import os
 import time
 from typing import TYPE_CHECKING, Callable
 
+from hyperspace_spark import session
 from hyperspace_spark.config import HyperspaceConf
 from hyperspace_spark.fs import filesystem_for
 from hyperspace_spark.indexes.base import FallBackToFull, carry_index_files, read_index
@@ -103,33 +104,27 @@ class Hyperspace:
         op: Callable[[IndexLogEntry, IndexLogManager, int], IndexLogEntry],
         base_entry: IndexLogEntry | None = None,
     ) -> IndexLogEntry:
-        # Lifecycle ops build internal frames over the user's source
-        # (lineage projections with input_file_name(), stats scans,
-        # index-data writes); under session enable() those frames must
-        # NEVER route back through the planner — hold the action-routing
-        # guard for the whole transaction.
-        prev_guard = getattr(_DF_ROUTE_GUARD, "active", False)
-        _DF_ROUTE_GUARD.active = True
-        try:
-            mgr = self._log_mgr(name, conf)
-            latest_id = mgr.get_latest_id()
-            base = base_entry if base_entry is not None else mgr.get_latest_log()
-            if base is None:
-                raise HyperspaceException(f"Index {name} does not exist.")
-            begin = base.with_state(transient, (latest_id if latest_id is not None else -1) + 1)
-            if not mgr.write_log(begin.id, begin):
-                raise ConcurrentModificationError(f"Concurrent modification on index {name}.")
-            new_version = begin.id  # data version namespaced by log id -> unique
-            result = op(begin, mgr, new_version)
-            result = result.with_state(final, begin.id + 1)
-            if not mgr.write_log(result.id, result):
-                raise ConcurrentModificationError(f"Concurrent modification on index {name}.")
-            if final in States.STABLE:
-                mgr.update_latest_stable(result.id)
-            self._invalidate_cache()
-            return result
-        finally:
-            _DF_ROUTE_GUARD.active = prev_guard
+        # Every caller is a lifecycle op, which runs under
+        # session.internal() (_instrument): the lineage projections,
+        # stats scans and index-data writes it makes over the user's
+        # source never route back through the planner.
+        mgr = self._log_mgr(name, conf)
+        latest_id = mgr.get_latest_id()
+        base = base_entry if base_entry is not None else mgr.get_latest_log()
+        if base is None:
+            raise HyperspaceException(f"Index {name} does not exist.")
+        begin = base.with_state(transient, (latest_id if latest_id is not None else -1) + 1)
+        if not mgr.write_log(begin.id, begin):
+            raise ConcurrentModificationError(f"Concurrent modification on index {name}.")
+        new_version = begin.id  # data version namespaced by log id -> unique
+        result = op(begin, mgr, new_version)
+        result = result.with_state(final, begin.id + 1)
+        if not mgr.write_log(result.id, result):
+            raise ConcurrentModificationError(f"Concurrent modification on index {name}.")
+        if final in States.STABLE:
+            mgr.update_latest_stable(result.id)
+        self._invalidate_cache()
+        return result
 
     # ------------------------------------------------------------------
     # createIndex (reference: actions/CreateAction.scala, CreateActionBase.scala)
@@ -253,22 +248,10 @@ class Hyperspace:
         return self.apply(self.spark.sql(query))
 
     # ------------------------------------------------------------------
-    # session-level enable (reference: package.scala:40-93 /
-    # HyperspaceSparkSessionExtension.scala:44-69).  The reference injects
-    # an optimizer rule into the session's extensions so EVERY query is
-    # index-aware; a Python-side engine can't register Catalyst rules, so
-    # the equivalent ergonomic surface is two instance/class patches:
-    # SparkSession.sql routes its result through apply(), and (since r6)
-    # DataFrame ACTIONS (collect/count/show/toPandas/...) on an enabled
-    # session apply() the frame first, so
-    # ``spark.read.parquet(p).filter(...).collect()`` is accelerated with
-    # no explicit hs.apply() — closing the DataFrame-API half of the
-    # reference's ApplyHyperspace.scala:32-76 coverage.  ``df.write``
-    # IS routed too (r6: a property patch on the DataFrame class),
-    # ``df.rdd`` builds from the rewritten frame (r10,
-    # _make_routed_rdd), and ``df.writeStream`` sinks trigger automatic
-    # index maintenance (r9, streaming/refresh.py listener).  Every
-    # action surface is now covered.
+    # session-level enable (reference: package.scala:40-93): spark.sql,
+    # DataFrame actions, df.write, df.rdd and writeStream sinks on an
+    # enabled session reach the planner with no explicit apply() (see
+    # session.py).
     # ------------------------------------------------------------------
     def enable(self, dataframe_api: bool = True) -> None:
         """Route this session's queries through the index planner:
@@ -280,62 +263,16 @@ class Hyperspace:
         ``spark.newSession()`` are auto-enabled with their own Hyperspace
         instance on the same system path (disable the child session
         individually to opt it out)."""
-        import threading
-
-        spark = self.spark
-        if getattr(spark, "_hs_original_sql", None) is None:
-            spark._hs_original_sql = spark.sql  # bound class method
-        orig = spark._hs_original_sql
-        hs = self
-        guard = threading.local()  # reentrancy: apply()'s own DDL
-
-        def routed_sql(query, *args, **kwargs):
-            df = orig(query, *args, **kwargs)
-            if getattr(guard, "active", False) or getattr(_DF_ROUTE_GUARD, "active", False):
-                # Internal statement issued from inside apply()'s replay
-                # (e.g. bucketed-table re-registration DDL): planning it
-                # would be wasted work at best.
-                return df
-            guard.active = True
-            try:
-                return hs.apply(df)
-            finally:
-                guard.active = False
-
-        spark.sql = routed_sql
-        if dataframe_api:
-            _install_df_action_routing()
-            _DF_ROUTES[spark] = self
-        else:
-            # Explicit opt-out must win over a prior enable(dataframe_api=
-            # True) on the same session — "latest wins" applies to the
-            # flag, not just the instance.
-            _DF_ROUTES.pop(spark, None)
-            if not _DF_ROUTES:
-                _uninstall_df_action_routing()
-        # newSession() children are distinct SparkSession objects: the
-        # instance patch above and the route registry would both miss
-        # them.  Patch newSession so children inherit the routing.
-        if getattr(spark, "_hs_original_newSession", None) is None:
-            spark._hs_original_newSession = spark.newSession
-        orig_ns = spark._hs_original_newSession
-        sys_path = self._system_path
-
-        def routed_newSession():
-            child = orig_ns()
-            type(hs)(child, system_path=sys_path).enable(dataframe_api=dataframe_api)
-            return child
-
-        spark.newSession = routed_newSession
+        session.enable(self, dataframe_api)
 
     def disable(self) -> None:
         """Restore the pre-enable session surface (no-op if not
         enabled): ``spark.sql``, ``spark.newSession``, and this
         session's DataFrame-action routing."""
-        _disable_session_sql(self.spark)
+        session.disable(self.spark)
 
     def is_enabled(self) -> bool:
-        return getattr(self.spark, "_hs_original_sql", None) is not None
+        return session.is_enabled(self.spark)
 
     def _apply_with_info(self, df: "DataFrame", reasons: Reasons | None = None):
         conf = self.conf()
@@ -434,10 +371,8 @@ class Hyperspace:
                     except Exception:
                         pass
                     continue
-                # The rewritten frame must not be re-planned when a
-                # DataFrame-action route (session enable) executes it:
-                # its scans read index data, which never matches a
-                # candidate, so a second pass is pure wasted planning.
+                # session.routed() executes a rewrite as built: its scans
+                # read index data, which never matches a candidate.
                 rewritten._hs_no_reroute = True
                 result = (rewritten, best.index_names)
             if cache_key is not None:
@@ -1451,7 +1386,13 @@ def _event_index_name(args, kwargs) -> str:
     return ""
 
 
-def _instrument_lifecycle() -> None:
+def _instrument() -> None:
+    """Wrap the engine's entry points.  Each runs under
+    ``session.internal()``, so on an enabled session the frames it
+    builds and executes (sketch rows, lineage projections, sampling
+    probes, search collects) are never planned as user queries
+    (reference: ApplyHyperspace.scala:43-47,68-75).  Lifecycle ops also
+    emit a timed telemetry event."""
     import functools
 
     from hyperspace_spark.telemetry import timed_event
@@ -1465,278 +1406,32 @@ def _instrument_lifecycle() -> None:
         ("vacuum_index", "vacuum"),
         ("vacuum_outdated_indexes", "vacuum"),
         ("cancel", "cancel"),
-    ]:
-        orig = getattr(Hyperspace, meth, None)
-        if orig is None:
-            continue
-
-        def wrap(orig=orig, kind=kind):
+    ] + [(meth, None) for meth in (
+        "_apply_with_info", "recommend", "ann_search", "ann_join", "text_search",
+        "text_search_ranked", "text_search_boolean", "text_search_phrase",
+    )]:
+        def wrap(orig=getattr(Hyperspace, meth), kind=kind):
             @functools.wraps(orig)
             def inner(self, *args, **kwargs):
-                detail = " ".join(str(a) for a in args[1:] if isinstance(a, (str, int)))
-                with timed_event(kind, _event_index_name(args, kwargs), detail):
-                    return orig(self, *args, **kwargs)
+                with session.internal():
+                    if kind is None:
+                        return orig(self, *args, **kwargs)
+                    detail = " ".join(str(a) for a in args[1:] if isinstance(a, (str, int)))
+                    with timed_event(kind, _event_index_name(args, kwargs), detail):
+                        return orig(self, *args, **kwargs)
 
             return inner
 
         setattr(Hyperspace, meth, wrap())
 
 
-_instrument_lifecycle()
+_instrument()
 
 
-# ---------------------------------------------------------------------------
 # Session-level helpers mirroring the reference's implicit-class surface
 # (package.scala:40-93: spark.enableHyperspace() / disableHyperspace() /
 # isHyperspaceEnabled()).  Python has no implicits; these are plain
 # functions over the session.
-# ---------------------------------------------------------------------------
-# ---------------------------------------------------------------------------
-# DataFrame-action routing for session-level enable: a CLASS-level patch
-# on pyspark's DataFrame action methods, gated per-session by a weak
-# registry, so frames built with the DataFrame API (spark.read.* +
-# transformations) hit the index planner on execution with no explicit
-# apply().  Equivalent surface to the reference's ApplyHyperspace
-# optimizer rule for DataFrame queries (ApplyHyperspace.scala:32-76).
-#
-# Safety properties:
-# - sessions not in _DF_ROUTES pass straight through (one dict probe);
-# - _DF_ROUTE_GUARD (thread-local) stops recursion — apply()'s own
-#   planning/replay work runs actions on the same session;
-# - frames apply() already rewrote carry _hs_no_reroute and skip the
-#   second planning pass;
-# - patching collect() transitively covers take/head/first/toLocalIterator
-#   paths that funnel through it in pyspark; count/show/toPandas have
-#   their own JVM entry points and are patched individually.
-# ---------------------------------------------------------------------------
-import threading as _threading
-import weakref as _weakref
-
-_DF_ROUTES: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-_DF_ROUTE_GUARD = _threading.local()
-_DF_PATCHED: dict = {}
-_DF_ACTION_METHODS = ("collect", "count", "show", "toPandas")
-
-
-def _route_for(df):
-    if not _DF_ROUTES:
-        return None
-    try:
-        return _DF_ROUTES.get(df.sparkSession)
-    except Exception:
-        return None
-
-
-def _make_routed_action(orig):
-    import functools
-
-    @functools.wraps(orig)
-    def routed(self, *args, **kwargs):
-        hs = _route_for(self)
-        if (
-            hs is None
-            or getattr(_DF_ROUTE_GUARD, "active", False)
-            or getattr(self, "_hs_no_reroute", False)
-        ):
-            return orig(self, *args, **kwargs)
-        _DF_ROUTE_GUARD.active = True
-        try:
-            rewritten = hs.apply(self)
-        finally:
-            _DF_ROUTE_GUARD.active = False
-        return orig(rewritten, *args, **kwargs)
-
-    return routed
-
-
-def _df_impl_class():
-    """The CONCRETE DataFrame class local sessions instantiate.  Since
-    Spark 4, ``pyspark.sql.DataFrame`` is an abstract facade and the
-    classic engine's subclass overrides every action method — patching
-    the facade would never be reached via the MRO."""
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame  # Spark >= 4
-    except ImportError:
-        from pyspark.sql import DataFrame  # Spark 3.x: one concrete class
-    return DataFrame
-
-
-def _make_routed_write(orig_prop):
-    def routed(self):
-        hs = _route_for(self)
-        if (
-            hs is None
-            or getattr(_DF_ROUTE_GUARD, "active", False)
-            or getattr(self, "_hs_no_reroute", False)
-        ):
-            return orig_prop.fget(self)
-        _DF_ROUTE_GUARD.active = True
-        try:
-            rewritten = hs.apply(self)
-        finally:
-            _DF_ROUTE_GUARD.active = False
-        return orig_prop.fget(rewritten)
-
-    return property(routed, doc=orig_prop.__doc__)
-
-
-def _make_routed_rdd(orig_prop):
-    # Handles both plain ``property`` and ``functools.cached_property``
-    # (rdd since Spark 4): delegating to the original descriptor's
-    # __get__ preserves cached_property's instance-dict caching when
-    # routing is inactive (the wrapper property is a data descriptor, so
-    # the cached instance attribute never shadows it).  When routing IS
-    # active, the RDD comes from the REWRITTEN frame and is cached on
-    # the instance so repeated accesses return the same object
-    # (``df.rdd is df.rdd`` — callers rely on that identity for
-    # determinism of zipWithIndex-style derivations).
-    def routed(self):
-        hs = _route_for(self)
-        if (
-            hs is None
-            or getattr(_DF_ROUTE_GUARD, "active", False)
-            or getattr(self, "_hs_no_reroute", False)
-        ):
-            return orig_prop.__get__(self, type(self))
-        cached = self.__dict__.get("_hs_routed_rdd")
-        if cached is not None:
-            return cached
-        _DF_ROUTE_GUARD.active = True
-        try:
-            rewritten = hs.apply(self)
-        finally:
-            _DF_ROUTE_GUARD.active = False
-        if rewritten is self:
-            return orig_prop.__get__(self, type(self))
-        out = orig_prop.__get__(rewritten, type(rewritten))
-        self.__dict__["_hs_routed_rdd"] = out
-        return out
-
-    return property(routed, doc=getattr(orig_prop, "__doc__", None))
-
-
-def _install_df_action_routing() -> None:
-    if _DF_PATCHED:
-        return
-    cls = _df_impl_class()
-    for name in _DF_ACTION_METHODS:
-        orig = getattr(cls, name)
-        _DF_PATCHED[name] = orig
-        setattr(cls, name, _make_routed_action(orig))
-    # df.write is a property returning DataFrameWriter(self): build the
-    # writer over the REWRITTEN frame so ETL sinks are accelerated too.
-    orig_write = cls.__dict__.get("write")
-    if isinstance(orig_write, property):
-        _DF_PATCHED["write"] = orig_write
-        setattr(cls, "write", _make_routed_write(orig_write))
-    # .rdd IS routed (r10; previously a one-time warning): the RDD is
-    # built from the REWRITTEN frame, so dropping out of the DataFrame
-    # world keeps the acceleration — the reference gets this for free
-    # because its Catalyst injection rewrites every query regardless of
-    # how the result is consumed (package.scala:40-93).
-    import functools as _functools
-
-    for name in ("rdd",):
-        orig_prop = cls.__dict__.get(name)
-        if isinstance(orig_prop, (property, _functools.cached_property)):
-            _DF_PATCHED[name] = orig_prop
-            setattr(cls, name, _make_routed_rdd(orig_prop))
-    # .writeStream IS routed — not for plan acceleration (streaming plans
-    # fall back by design) but for index MAINTENANCE: a file sink whose
-    # path is the source root of active indexes gets automatic
-    # incremental refresh per micro-batch (streaming/refresh.py).
-    _install_stream_sink_routing()
-
-
-_STREAM_PATCHED: dict = {}
-
-
-def _stream_writer_class():
-    from pyspark.sql.streaming.readwriter import DataStreamWriter
-
-    return DataStreamWriter
-
-
-def _install_stream_sink_routing() -> None:
-    """Patch DataStreamWriter so start() enrols file sinks that target an
-    active index's source root for automatic incremental maintenance.
-    The reference gets every plan (incl. streaming sinks) for free via
-    Catalyst injection (package.scala:40-93); this is the writeStream
-    half of that coverage a session-level patch can honestly provide —
-    the streaming PLAN still executes unrewritten, but the indexes over
-    the sunk data no longer stale silently."""
-    if _STREAM_PATCHED:
-        return
-    cls = _stream_writer_class()
-    orig_option = cls.option
-    orig_options = cls.options
-    orig_start = cls.start
-
-    def routed_option(self, key, value):
-        if isinstance(key, str) and key.lower() == "path":
-            self._hs_sink_path = value
-        return orig_option(self, key, value)
-
-    def routed_options(self, **opts):
-        for k, v in opts.items():
-            if k.lower() == "path":
-                self._hs_sink_path = v
-        return orig_options(self, **opts)
-
-    def routed_start(self, path=None, *args, **kwargs):
-        q = orig_start(self, path, *args, **kwargs)
-        try:
-            sink = path or kwargs.get("path") or getattr(self, "_hs_sink_path", None)
-            df = getattr(self, "_df", None)
-            spark = df.sparkSession if df is not None else None
-            hs = _DF_ROUTES.get(spark) if spark is not None else None
-            if hs is not None and sink:
-                from hyperspace_spark.streaming.refresh import (
-                    indexes_rooted_at,
-                    register_auto_maintenance,
-                )
-
-                names = indexes_rooted_at(hs, sink)
-                if names:
-                    register_auto_maintenance(spark, q, hs, names)
-                    from hyperspace_spark.telemetry import HyperspaceEvent, emit
-
-                    emit(
-                        HyperspaceEvent(
-                            kind="stream_maintenance",
-                            detail=",".join(sorted(names)),
-                            success=True,
-                        )
-                    )
-        except Exception:
-            pass  # maintenance enrolment must never break the stream
-        return q
-
-    _STREAM_PATCHED.update(option=orig_option, options=orig_options, start=orig_start)
-    cls.option = routed_option
-    cls.options = routed_options
-    cls.start = routed_start
-
-
-def _uninstall_stream_sink_routing() -> None:
-    if not _STREAM_PATCHED:
-        return
-    cls = _stream_writer_class()
-    for name, orig in _STREAM_PATCHED.items():
-        setattr(cls, name, orig)
-    _STREAM_PATCHED.clear()
-
-
-def _uninstall_df_action_routing() -> None:
-    if not _DF_PATCHED:
-        return
-    cls = _df_impl_class()
-    for name, orig in _DF_PATCHED.items():
-        setattr(cls, name, orig)
-    _uninstall_stream_sink_routing()
-    _DF_PATCHED.clear()
-
-
 def enable_hyperspace(spark, hs: "Hyperspace | None" = None) -> "Hyperspace":
     """Route ``spark.sql`` and DataFrame actions through the index
     planner.  Returns the Hyperspace instance doing the routing (a
@@ -1746,46 +1441,5 @@ def enable_hyperspace(spark, hs: "Hyperspace | None" = None) -> "Hyperspace":
     return hs
 
 
-def _disable_session_sql(spark) -> None:
-    """Shared disable: put back exactly what enable() saved.  If some
-    OTHER library had instance-patched ``spark.sql`` before enable()
-    (query-audit wrappers etc.), the saved original is that wrapper —
-    restore it rather than popping down to the bare class method, which
-    would silently uninstall the third party's hook."""
-    _DF_ROUTES.pop(spark, None)
-    if not _DF_ROUTES:
-        # last enabled session gone: restore the pristine DataFrame class
-        _uninstall_df_action_routing()
-    try:
-        from hyperspace_spark.streaming.refresh import unregister_session
-
-        unregister_session(spark)
-    except Exception:
-        pass
-    saved_ns = getattr(spark, "_hs_original_newSession", None)
-    if saved_ns is not None:
-        if getattr(saved_ns, "__func__", None) is type(spark).newSession and getattr(
-            saved_ns, "__self__", None
-        ) is spark:
-            spark.__dict__.pop("newSession", None)
-        else:
-            spark.newSession = saved_ns
-        spark._hs_original_newSession = None
-    saved = getattr(spark, "_hs_original_sql", None)
-    if saved is None:
-        return
-    if getattr(saved, "__func__", None) is type(spark).sql and getattr(
-        saved, "__self__", None
-    ) is spark:
-        spark.__dict__.pop("sql", None)  # was the bound class method: un-shadow
-    else:
-        spark.sql = saved  # was an instance-level wrapper: reinstall it
-    spark._hs_original_sql = None
-
-
-def disable_hyperspace(spark) -> None:
-    _disable_session_sql(spark)
-
-
-def is_hyperspace_enabled(spark) -> bool:
-    return getattr(spark, "_hs_original_sql", None) is not None
+disable_hyperspace = session.disable
+is_hyperspace_enabled = session.is_enabled

@@ -33,7 +33,7 @@ from hyperspace_spark.indexes.sketches import BloomFilterSketch, MinMaxSketch, V
 from hyperspace_spark.indexes.zorder import ZOrderCoveringIndexConfig
 from hyperspace_spark.metadata.entry import IndexLogEntry, States
 from hyperspace_spark.planner import ir
-from hyperspace_spark.planner.expr import BoolOp, Cmp, Lit, split_conjuncts, split_disjuncts
+from hyperspace_spark.planner.expr import BoolOp, Cmp, Lit, NullTest, split_conjuncts, split_disjuncts
 from hyperspace_spark.planner.implication import implies
 from hyperspace_spark.planner.parser import parse_df
 from hyperspace_spark.planner.rules import (
@@ -113,26 +113,30 @@ class _Recommender:
             required = sorted(ir.required_columns(node))
         except ValueError:
             required = sorted(cond.references)
-        refs = [c for c in sorted(cond.references) if "." not in c]
         conjs = split_conjuncts(cond)
+        # a column only Spark's inferred isnotnull conjuncts name is no user predicate
+        refs = sorted({c for cj in conjs if not (isinstance(cj, NullTest) and not cj.is_null)
+                       for c in cj.references if "." not in c})
         eq = [c for c in refs if equality_literals(cond, c) is not None]
         ranges = [c for c in refs if any(_is_range(cj, c) for cj in conjs)]
 
         # Disjunctive filter family (r11): when every OR branch pins a
         # column with an equality/IN, ONE index per distinct branch
         # column lets FilterOrIndexRule serve the disjunction as a union
-        # of bucket-pruned branch scans.
+        # of bucket-pruned branch scans.  One entry per disjunct, served
+        # against that disjunct alone as the rule checks a partial index;
+        # propose() keeps a column's first unserved entry.
         keyed = [
             (_covering([col], required), "FilterOrIndexRule",
              f"OR branch pins {col}: index-OR union reads only that literal's buckets per "
-             "branch (create the full set of branch indexes)")
-            for col in _or_branch_cols(cond)
+             "branch (create the full set of branch indexes)", disjunct)
+            for col, disjunct in _or_branches(cond)
         ]
         if not keyed and refs:
             col = (eq or refs)[0]
             why = (f"equality probe on {col}: bucket-pruned point lookup" if eq else
                    f"range predicate on {col}: sorted index scan with row-group pruning")
-            keyed = [(_covering([col], required), "FilterIndexRule", why)]
+            keyed = [(_covering([col], required), "FilterIndexRule", why, cond)]
         # A LITERAL equality conjunct alongside other predicates also
         # admits a PARTIAL index scoped to that conjunct: predicate-
         # fraction build and storage cost for the same query family.
@@ -147,16 +151,16 @@ class _Recommender:
             pred = lit_eq[0].sql
             why = (f"partial index WHERE {pred}: indexes only the queried subset at "
                    "predicate-fraction cost")
-            partial = [(_covering(others[:1], required, where=pred), "FilterIndexRule", why)]
+            partial = [(_covering(others[:1], required, where=pred), "FilterIndexRule", why, cond)]
         # An index already serves this filter (its key, its partial
         # variant or the whole OR-branch set): any other covering or
         # skipping index would be redundant advice.
         if not (
-            (keyed and all(self._served(scan, c, cond) for c, _, _ in keyed))
-            or any(self._served(scan, c, cond) for c, _, _ in partial)
+            (keyed and all(self._served(scan, c, f) for c, _, _, f in keyed))
+            or any(self._served(scan, c, f) for c, _, _, f in partial)
         ):
-            for cfg, rule, why in keyed + partial:
-                self.propose(scan, cfg, rule, why, cond)
+            for cfg, rule, why, f in keyed + partial:
+                self.propose(scan, cfg, rule, why, f)
             self._skipping(scan, refs, eq, ranges)
 
         # Z-order (r12; reference ZOrderCoveringIndex.scala:28-189): a
@@ -276,21 +280,22 @@ def _is_range(conj, col: str) -> bool:
     return isinstance(conj, Cmp) and conj.op in ("<", "<=", ">", ">=") and conj.references == {col}
 
 
-def _or_branch_cols(cond) -> list[str]:
-    """The column each OR branch pins with an equality/IN, each once;
-    [] unless every one of 2..MAX_BRANCHES branches pins one."""
+def _or_branches(cond) -> list[tuple]:
+    """``(column, disjunct)`` per OR branch, the column the branch pins
+    with an equality/IN; [] unless every one of 2..MAX_BRANCHES branches
+    pins one."""
     disjuncts = split_disjuncts(cond) if isinstance(cond, BoolOp) and cond.op == "or" else []
     if not 2 <= len(disjuncts) <= FilterOrIndexRule.MAX_BRANCHES:
         return []
-    cols = []
+    out = []
     for d in disjuncts:
         deq = [
             c for c in sorted(d.references) if "." not in c and equality_literals(d, c) is not None
         ]
         if not deq:
             return []
-        cols.append(deq[0])
-    return list(dict.fromkeys(cols))
+        out.append((deq[0], d))
+    return out
 
 
 def _covering(indexed, required, where=None, cls=CoveringIndexConfig):

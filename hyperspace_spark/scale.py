@@ -126,14 +126,10 @@ def ensure_min_parallelism(df: "DataFrame", target: int | None = None) -> "DataF
         # Internal partition-count inspection — must not trip the
         # enable()-routed .rdd (planning an internal frame here could
         # recurse into the very build this guard sits on).
-        try:
-            df._hs_no_reroute = True
+        from hyperspace_spark.session import internal
+
+        with internal():
             n = df.rdd.getNumPartitions()
-        finally:
-            try:
-                del df._hs_no_reroute
-            except AttributeError:
-                pass
     if n >= target:
         return df
     return df.repartition(target)

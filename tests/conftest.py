@@ -1,3 +1,4 @@
+import contextlib
 import os
 
 import pytest
@@ -83,3 +84,23 @@ def count_jobs(spark, fn):
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextlib.contextmanager
+def apply_events():
+    """Collect, per ``apply`` telemetry event emitted inside the block,
+    the list of index names it used.  One event is emitted per apply()
+    that used an index, planned or served from the apply cache."""
+    from hyperspace_spark import telemetry
+
+    used = []
+
+    def on_apply(ev):
+        if ev.kind == "apply":
+            used.append(ev.index_name.split(","))
+
+    telemetry.on_event(on_apply)
+    try:
+        yield used
+    finally:
+        telemetry.off_event(on_apply)

@@ -342,3 +342,49 @@ def _assert_txt_keyed_by_doc_id(hs, d):
     assert len(txt) == 1, recs
     assert txt[0]["config"].id_col == "doc_id", txt[0]
     assert "unique over a" in txt[0]["reason"], txt[0]["reason"]
+
+
+def test_recommend_or_branch_served_by_partial_index(spark, hs, tmp_path):
+    """FilterOrIndexRule checks a partial index against its branch's own
+    disjunct, so recommend's served check does too: with a partial index
+    serving one branch and a whole-table index the other, the OR filter
+    is index-served and nothing is proposed for its branches."""
+    from hyperspace_spark import CoveringIndexConfig
+
+    src = str(tmp_path / "orders_or_partial")
+    table(spark, "orders").repartition(4).write.parquet(src)
+    o = spark.read.parquet(src)
+    cols = ["o_custkey", "o_orderkey", "o_orderpriority", "o_orderstatus", "o_totalprice"]
+    hs.create_index(o, CoveringIndexConfig(
+        "p_ck", ["o_custkey"], cols[1:], where="o_orderpriority = '1-URGENT'", num_buckets=4
+    ))
+    hs.create_index(o, CoveringIndexConfig(
+        "w_st", ["o_orderstatus"], [c for c in cols if c != "o_orderstatus"], num_buckets=4
+    ))
+    df = o.filter(
+        "(o_custkey = 42 AND o_orderpriority = '1-URGENT') OR o_orderstatus = 'F'"
+    ).select("o_orderkey", "o_totalprice")
+    out, used = hs._apply_with_info(df)
+    assert sorted(used) == ["p_ck", "w_st"], hs.why_not(df)
+    assert rows_equal(df, out)
+    recs = hs.recommend(df)
+    assert not [
+        r for r in recs if r["rule"] in ("FilterOrIndexRule", "FilterIndexRule")
+    ], recs
+
+
+def test_recommend_ignores_inferred_isnotnull_columns(spark, hs, tmp_path):
+    """Spark infers ``isnotnull`` filters on both sides of a band join;
+    a column only those reference is no user predicate, so the orders
+    side (no user filter) gets no filter proposal and the lineitem side
+    is keyed on the user's own range column."""
+    src_o = str(tmp_path / "o_nn")
+    src_l = str(tmp_path / "l_nn")
+    table(spark, "orders").write.parquet(src_o)
+    table(spark, "lineitem").write.parquet(src_l)
+    o = spark.read.parquet(src_o)
+    li = spark.read.parquet(src_l)
+    recs = hs.recommend(li.filter("l_quantity < 5").join(o, li.l_orderkey > o.o_orderkey))
+    filt = [r for r in recs if r["rule"] == "FilterIndexRule"]
+    assert not [r for r in filt if r["source"] == [src_o] or "o_orderkey" in r["reason"]], recs
+    assert [r["config"].indexed_columns for r in filt] == [["l_quantity"]], recs

@@ -1,8 +1,9 @@
-"""Session-level enable: plain ``spark.sql`` on an enabled session routes
-through the index planner (reference package.scala:40-93 ergonomics);
-disable restores stock behavior.  DataFrame-API queries still need
-explicit hs.apply() — documented divergence (no Catalyst rule injection
-from Python)."""
+"""Session-level enable: on an enabled session, ``spark.sql``, DataFrame
+actions (collect/count/show/toPandas), ``df.write``, ``df.rdd`` and
+``writeStream`` sinks route through the index planner with no explicit
+hs.apply() (reference package.scala:40-93 ergonomics); engine-internal
+frames are never planned as user queries; disable restores stock
+behavior.  Routing is observed through the ``apply`` telemetry events."""
 
 import os
 
@@ -16,6 +17,8 @@ from hyperspace_spark import (
     enable_hyperspace,
     is_hyperspace_enabled,
 )
+
+from tests.conftest import apply_events
 
 
 @pytest.fixture
@@ -91,7 +94,7 @@ def test_enable_routes_dataframe_actions(indexed, spark):
     """r6: ``spark.read.parquet(...).filter(...).collect()`` on an
     enabled session hits the index with NO explicit hs.apply() — the
     DataFrame-API half of the reference's ApplyHyperspace coverage."""
-    from hyperspace_spark.hyperspace import _df_impl_class
+    from hyperspace_spark.session import _df_impl_class
 
     DataFrame = _df_impl_class()
     pristine_collect = DataFrame.collect
@@ -102,13 +105,10 @@ def test_enable_routes_dataframe_actions(indexed, spark):
     hs.enable()
     try:
         q2 = spark.read.parquet(src).filter("g = 13").select("k", "v")
-        hs._apply_cache.clear()
-        assert sorted(map(tuple, q2.collect())) == baseline
-        # The route planned this frame and chose the index (the cache
-        # records the chosen index names per analyzed-plan hash).
-        assert any(v[1] == ["sess_idx"] for v in hs._apply_cache.values()), (
-            "collect() did not route through the planner"
-        )
+        with apply_events() as used:
+            assert sorted(map(tuple, q2.collect())) == baseline
+        # The route planned this frame and chose the index.
+        assert ["sess_idx"] in used, "collect() did not route through the planner"
         # count/toPandas route too
         assert q2.count() == len(baseline)
         assert len(q2.toPandas()) == len(baseline)
@@ -116,18 +116,18 @@ def test_enable_routes_dataframe_actions(indexed, spark):
         hs.disable()
     # last enabled session disabled -> pristine class restored
     assert DataFrame.collect is pristine_collect
-    hs._apply_cache.clear()
-    spark.read.parquet(src).filter("g = 13").select("k", "v").collect()
-    assert not hs._apply_cache, "routing survived disable()"
+    with apply_events() as used:
+        spark.read.parquet(src).filter("g = 13").select("k", "v").collect()
+    assert not used, "routing survived disable()"
 
 
 def test_enable_dataframe_api_optout(indexed, spark):
     hs, src = indexed
     hs.enable(dataframe_api=False)
     try:
-        hs._apply_cache.clear()
-        spark.read.parquet(src).filter("g = 13").select("k", "v").collect()
-        assert not hs._apply_cache, "dataframe_api=False must not route actions"
+        with apply_events() as used:
+            spark.read.parquet(src).filter("g = 13").select("k", "v").collect()
+        assert not used, "dataframe_api=False must not route actions"
     finally:
         hs.disable()
 
@@ -136,16 +136,16 @@ def test_enable_dataframe_api_optout_after_optin(indexed, spark):
     """r7: enable(dataframe_api=False) AFTER enable(dataframe_api=True)
     on the same session must stop action routing — 'latest wins' applies
     to the flag, not just the instance."""
-    from hyperspace_spark import hyperspace as hsmod
+    from hyperspace_spark import session
 
     hs, src = indexed
     hs.enable(dataframe_api=True)
     hs.enable(dataframe_api=False)
     try:
-        assert spark not in hsmod._DF_ROUTES
-        hs._apply_cache.clear()
-        spark.read.parquet(src).filter("g = 13").select("k", "v").collect()
-        assert not hs._apply_cache, "explicit opt-out must unroute actions"
+        assert spark not in session._ROUTES
+        with apply_events() as used:
+            spark.read.parquet(src).filter("g = 13").select("k", "v").collect()
+        assert not used, "explicit opt-out must unroute actions"
     finally:
         hs.disable()
 
@@ -158,10 +158,10 @@ def test_rdd_routes_through_planner(indexed, spark):
     cached per frame (`df.rdd is df.rdd`), results are row-exact, the
     lineage shows the index scan, and disable() restores the stock
     descriptor.  .writeStream routing (r9) is unchanged."""
-    from hyperspace_spark.hyperspace import (
+    from hyperspace_spark.session import (
         _df_impl_class,
         _stream_writer_class,
-        _STREAM_PATCHED,
+        _PATCHED,
     )
 
     DataFrame = _df_impl_class()
@@ -194,7 +194,7 @@ def test_rdd_routes_through_planner(indexed, spark):
         # writeStream routing installed while enabled
         stream = spark.readStream.format("rate").load()
         _ = stream.writeStream
-        assert _STREAM_PATCHED, "stream sink routing not installed"
+        assert _PATCHED, "stream sink routing not installed"
         assert Writer.__dict__.get("start") is not pristine_start
     finally:
         hs.disable()
@@ -216,11 +216,9 @@ def test_enable_routes_dataframe_write(indexed, spark, tmp_path):
     baseline = sorted(map(tuple, q.collect()))
     hs.enable()
     try:
-        hs._apply_cache.clear()
-        spark.read.parquet(src).filter("g = 13").select("k", "v").write.parquet(out)
-        assert any(v[1] == ["sess_idx"] for v in hs._apply_cache.values()), (
-            "write did not route through the planner"
-        )
+        with apply_events() as used:
+            spark.read.parquet(src).filter("g = 13").select("k", "v").write.parquet(out)
+        assert ["sess_idx"] in used, "write did not route through the planner"
     finally:
         hs.disable()
     assert sorted(map(tuple, spark.read.parquet(out).collect())) == baseline
@@ -259,7 +257,7 @@ def test_newsession_child_inherits_enable(indexed, spark):
     """r6 (closes the r5-documented hole): ``spark.newSession()`` on an
     enabled session returns a child that is itself enabled — same system
     path, own Hyperspace instance."""
-    from hyperspace_spark import hyperspace as hsmod
+    from hyperspace_spark import session
 
     hs, src = indexed
     hs.enable()
@@ -268,14 +266,14 @@ def test_newsession_child_inherits_enable(indexed, spark):
         child = spark.newSession()
         assert child is not spark
         assert is_hyperspace_enabled(child)
-        assert child in hsmod._DF_ROUTES
+        assert child in session._ROUTES
         # the child's routing instance targets the same index store
-        assert hsmod._DF_ROUTES[child]._system_path == hs._system_path
+        assert session._ROUTES[child]._system_path == hs._system_path
         # and its sql path plans against the parent's indexes
         plan = (
             child.read.parquet(src).filter("g = 13").select("k", "v")
         )
-        fast, used = hsmod._DF_ROUTES[child]._apply_with_info(plan)
+        fast, used = session._ROUTES[child]._apply_with_info(plan)
         assert used == ["sess_idx"]
     finally:
         if child is not None:
@@ -355,3 +353,77 @@ def test_enable_routes_metadata_fold(spark, tmp_path):
         assert "sess_meta" in why
     finally:
         hs.disable()
+
+
+def test_internal_frames_are_not_planned_as_user_queries(spark, tmp_path, monkeypatch):
+    """One guard covers every engine entry point: the data-skipping
+    pruning's own sketch-row frame under a ``spark.sql``-routed apply and
+    recommend()'s sampling probes are executed as built, so each user
+    query is planned exactly once."""
+    from hyperspace_spark import DataSkippingIndexConfig, MinMaxSketch
+
+    src = str(tmp_path / "guard_src")
+    spark.range(0, 4000).select(
+        F.col("id").alias("k"), (F.col("id") % 97).alias("g"), (F.col("id") * 2.5).alias("v")
+    ).repartitionByRange(4, "k").write.parquet(src)
+    hs = Hyperspace(spark, system_path=str(tmp_path / "guard_idx"))
+    hs.create_index(
+        spark.read.parquet(src),
+        CoveringIndexConfig("guard_ci", ["g"], ["k", "v"], num_buckets=4),
+    )
+    hs.create_index(spark.read.parquet(src), DataSkippingIndexConfig("guard_ds", [MinMaxSketch(["k"])]))
+    calls = []
+    orig = Hyperspace._apply_with_info
+
+    def counting(self, df, *args, **kwargs):
+        calls.append(df)
+        return orig(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(Hyperspace, "_apply_with_info", counting)
+    spark.read.parquet(src).createOrReplaceTempView("guard_t")
+    want = sorted((k, k * 2.5) for k in range(100, 121))
+    spark.conf.set("spark.hyperspace.apply.cacheTtlSeconds", "0")
+    hs.enable()
+    try:
+        with apply_events() as used:
+            rows = spark.sql("SELECT k, v FROM guard_t WHERE k BETWEEN 100 AND 120").collect()
+        assert sorted(map(tuple, rows)) == want
+        assert used == [["guard_ds"]]
+        assert len(calls) == 1, [c._jdf.queryExecution().analyzed().toString() for c in calls]
+
+        # equality probes on k and v: recommend() samples each column's
+        # cardinality to pick a ValueList or Bloom sketch
+        calls.clear()
+        hs.recommend(spark.read.parquet(src).filter("k = 105 AND v = 262.5").select("k", "v"))
+        assert calls == [], "recommend()'s probes were planned as user queries"
+
+        calls.clear()
+        df = spark.read.parquet(src).filter("k BETWEEN 100 AND 120").select("k", "v")
+        assert sorted(map(tuple, df.collect())) == want
+        assert len(calls) == 1
+    finally:
+        hs.disable()
+        spark.conf.unset("spark.hyperspace.apply.cacheTtlSeconds")
+
+
+def test_disable_restores_every_patched_attribute(indexed, spark):
+    """enable() then disable() puts back every class attribute the
+    routing replaced and un-shadows the session's ``sql``/``newSession``."""
+    from hyperspace_spark.session import _PATCHED, _df_impl_class, _stream_writer_class
+
+    targets = [
+        (_df_impl_class(), ("collect", "count", "show", "toPandas", "write", "rdd")),
+        (_stream_writer_class(), ("option", "options", "start")),
+    ]
+    pristine = {(cls, n): cls.__dict__[n] for cls, names in targets for n in names}
+    hs, src = indexed
+    hs.enable()
+    try:
+        assert set(_PATCHED) == set(pristine)
+        assert all(cls.__dict__[n] is not orig for (cls, n), orig in pristine.items())
+    finally:
+        hs.disable()
+    assert not _PATCHED
+    for (cls, n), orig in pristine.items():
+        assert cls.__dict__[n] is orig, f"{cls.__name__}.{n} not restored"
+    assert "sql" not in spark.__dict__ and "newSession" not in spark.__dict__

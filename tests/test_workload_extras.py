@@ -79,10 +79,12 @@ def test_opaque_union_accel_uses_index(spark):
     OpaqueN verbatim replay."""
     from hyperspace_spark.workload import QUERIES, workspace
 
+    from tests.conftest import apply_events
+
     ws = workspace(spark, GUARD_SF_DIR)
-    ws.hs._apply_cache.clear()
-    df = QUERIES["opaque_union_accel"](spark, GUARD_SF_DIR)
-    assert any(v[1] == ["w_o_cov"] for v in ws.hs._apply_cache.values()) or any(
+    with apply_events() as used:
+        df = QUERIES["opaque_union_accel"](spark, GUARD_SF_DIR)
+    assert ["w_o_cov"] in used or any(
         "w_o_cov" in f for f in df.inputFiles()
     ), "covering index not applied to the parseable union branch"
 
