@@ -245,7 +245,11 @@ class Hyperspace:
         return out
 
     def sql(self, query: str) -> "DataFrame":
-        return self.apply(self.spark.sql(query))
+        # Plan once: on an enabled session the routed spark.sql would
+        # plan the query itself, and apply() would then plan the rewrite.
+        with session.internal():
+            df = self.spark.sql(query)
+        return self.apply(df)
 
     # ------------------------------------------------------------------
     # session-level enable (reference: package.scala:40-93): spark.sql,

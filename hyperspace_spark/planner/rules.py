@@ -16,6 +16,7 @@ from hyperspace_spark.config import HyperspaceConf
 from hyperspace_spark.planner import ir
 from hyperspace_spark.planner.candidates import Candidate, Reasons
 from hyperspace_spark.planner.expr import split_conjuncts
+from hyperspace_spark.planner.implication import implies
 
 # Rule-stage whyNot reasons (reference: plananalysis/FilterReason.scala).
 NO_FIRST_INDEXED_COL_COND = "NO_FIRST_INDEXED_COL_COND"
@@ -135,10 +136,6 @@ def _substitute_scans(node: ir.Node, subs: dict[int, tuple]) -> ir.Node:
     return clone(node)
 
 
-def _substitute_scan(node: ir.Node, scan: ir.Scan, replacement, index_name: str) -> ir.Node:
-    return _substitute_scans(node, {id(scan): (replacement, index_name)})
-
-
 def equality_literals(cond, column: str):
     """Literals a top-level equality/IN conjunct pins ``column`` to, or
     None when no such conjunct exists.
@@ -166,9 +163,106 @@ def equality_literals(cond, column: str):
     return None
 
 
+def _index_bytes(c: Candidate) -> int:
+    return sum(f.size for f in c.entry.content_files)
+
+
 def _rank_smallest(cands: list[Candidate]) -> list[Candidate]:
     """Prefer the smallest index data (reference FilterIndexRanker.scala)."""
-    return sorted(cands, key=lambda c: (sum(f.size for f in c.entry.content_files), c.entry.name))
+    return sorted(cands, key=lambda c: (_index_bytes(c), c.entry.name))
+
+
+# ---------------------------------------------------------------------------
+# shared covering-rule parts: gate, pick, file pruning, index leaf
+# ---------------------------------------------------------------------------
+def _gate(ctx: RuleContext, cands, required, cond, key_fits) -> list[Candidate]:
+    """The candidates that can serve a subtree (reference: the IndexFilter
+    chain, HyperspaceRule.scala:28-91), each rejection tagged once:
+
+    - the rule's key test, ``key_fits(indexed_columns)``: True, False for
+      a silent miss, or the ``(reason, detail)`` to tag;
+    - every required column covered (indexed or included);
+    - a partial index only where ``cond`` — the deterministic filter that
+      replays on top of the index scan, None when there is none —
+      PROVABLY implies its build predicate (every index conjunct implied
+      by some query conjunct; conservative, planner/implication.py).
+      Appended files are safe as-is: the hybrid union scans them RAW and
+      the filter re-applies on top, dropping rows outside the predicate.
+    """
+    out = []
+    for c in cands:
+        p = c.entry.derived_properties
+        indexed = p.get("indexedColumns", [])
+        covered = set(indexed) | set(p.get("includedColumns", []))
+        fit = key_fits(indexed)
+        if fit is not True:
+            if fit:
+                ctx.tag(c.entry.name, *fit)
+        elif not required.issubset(covered):
+            ctx.tag(c.entry.name, MISSING_REQUIRED_COL, f"missing {sorted(required - covered)}")
+        elif (pred := _entry_predicate(c.entry)) is not None and (cond is None or not implies(cond, pred)):
+            ctx.tag(
+                c.entry.name, PREDICATE_NOT_IMPLIED, f"query filter does not imply index predicate {pred.sql!r}"
+            )
+        else:
+            out.append(c)
+    return out
+
+
+def _pick(ctx: RuleContext, eligible: list[Candidate]) -> Candidate | None:
+    """The smallest eligible index; every other one is tagged as the loser
+    (the ranked tail, so the winner never tags itself)."""
+    if not eligible:
+        return None
+    winner, *losers = _rank_smallest(eligible)
+    for c in losers:
+        ctx.tag(c.entry.name, ANOTHER_INDEX_APPLIED, f"lost to {winner.entry.name}")
+    return winner
+
+
+def _index_files(ctx: RuleContext, cand: Candidate, cond) -> list[str] | None:
+    """The index data files ``cond`` can touch, or None for a full read —
+    computed driver-side, zero Spark jobs:
+
+    - CI: equality/IN conjuncts pinning EVERY indexed column map the rows
+      to their bucket FILES through a Spark-compatible murmur3 chained
+      like Spark's Murmur3Hash fold (planner/mmh3.py), so a k-column
+      point probe reads numBuckets'th of the index.  Gated by
+      ``filterRule.useBucketSpec``; a hybrid candidate reads in full.
+      Range predicates read the whole index plainly: the data is sorted
+      by the indexed columns, so parquet row-group stats prune.
+    - ZCI: per-file min/max ranges of the indexed columns (tight after
+      z-clustering, indexes/zorder.py); None unless a file drops.
+    """
+    from hyperspace_spark.indexes.covering import bucket_pruned_files_multi
+    from hyperspace_spark.indexes.zorder import stats_pruned_files
+
+    entry = cand.entry
+    if entry.derived_kind == "ZCI":
+        return stats_pruned_files(entry, cond)
+    if not ctx.conf.filter_rule_use_bucket_spec or cand.appended:
+        return None
+    indexed = entry.derived_properties.get("indexedColumns", [])
+    return bucket_pruned_files_multi(entry, [equality_literals(cond, c) for c in indexed])
+
+
+def _index_leaf(ctx: RuleContext, scan: ir.Scan, required, cand: Candidate, files=None, bucketed=False):
+    """The ``(replacement, index_name)`` pair ``_substitute_scans`` installs
+    for ``scan``: a read of ``cand``'s index (restricted to ``files``,
+    bucketed for shuffle-free joins and aggregates) projected to the
+    required columns in scan order, dotted nested leaves last, with the
+    hybrid-scan compensation for its appended and deleted files."""
+    cols = [c for c in scan.output if c in required] + sorted(c for c in required if "." in c)
+
+    def replacement(spark, _cache=ctx.version_cache):
+        from hyperspace_spark.indexes.covering import index_scan_df
+
+        return index_scan_df(
+            spark, cand.entry, cols, appended=cand.appended, deleted=cand.deleted,
+            bucketed=bucketed, files=files, cache=_cache,
+        )
+
+    return replacement, cand.entry.name
 
 
 # ---------------------------------------------------------------------------
@@ -177,111 +271,33 @@ def _rank_smallest(cands: list[Candidate]) -> list[Candidate]:
 class FilterIndexRule:
     kind = "CI"
     base_score = 50.0
-    require_first_indexed = True  # z-order relaxes this (any indexed col)
+
+    @staticmethod
+    def key_fits(indexed, refs):
+        """Reference: the first indexed column must appear in the predicate
+        (FilterColumnFilter, FilterIndexRule.scala:62-103) — that's the
+        column the bucketed/sorted layout can actually seek on."""
+        if indexed and indexed[0] in refs:
+            return True
+        return NO_FIRST_INDEXED_COL_COND, f"first indexed {indexed[:1]} not in predicate"
 
     def apply(self, node: ir.Node, ctx: RuleContext) -> Applied | None:
         m = match_filter_pattern(node)
         if m is None:
             return None
-        project, filt, scan = m
+        _, filt, scan = m
         cands = ctx.for_scan(scan, self.kind)
-        if not cands:
-            return None
-        cond_refs = filt.condition.references
-        if not cond_refs:
+        refs = filt.condition.references
+        if not cands or not refs:
             return None
         required = ir.required_columns(node)
-
-        eligible: list[Candidate] = []
-        for c in cands:
-            p = c.entry.derived_properties
-            indexed = p.get("indexedColumns", [])
-            covered = set(indexed) | set(p.get("includedColumns", []))
-            if self.require_first_indexed:
-                # Reference: first indexed column must appear in the predicate
-                # (FilterColumnFilter, FilterIndexRule.scala:62-103) — that's
-                # the column the bucketed/sorted layout can actually seek on.
-                if not indexed or indexed[0] not in cond_refs:
-                    ctx.tag(c.entry.name, NO_FIRST_INDEXED_COL_COND, f"first indexed {indexed[:1]} not in predicate")
-                    continue
-            else:
-                if not (set(indexed) & cond_refs):
-                    ctx.tag(c.entry.name, MISSING_INDEXED_COL, "no indexed column in predicate")
-                    continue
-            if not required.issubset(covered):
-                ctx.tag(c.entry.name, MISSING_REQUIRED_COL, f"missing {sorted(required - covered)}")
-                continue
-            pred = _entry_predicate(c.entry)
-            if pred is not None:
-                # Partial index: eligible only when the query filter
-                # PROVABLY implies the build predicate (every index
-                # conjunct implied by some query conjunct — conservative,
-                # planner/implication.py).  Appended files are safe
-                # as-is: the hybrid union scans them RAW and the query
-                # filter re-applies on top, so rows outside the predicate
-                # (which necessarily fail the query filter) drop there.
-                from hyperspace_spark.planner.implication import implies
-
-                if not implies(filt.condition, pred):
-                    ctx.tag(
-                        c.entry.name,
-                        PREDICATE_NOT_IMPLIED,
-                        f"query filter does not imply index predicate {pred.sql!r}",
-                    )
-                    continue
-            eligible.append(c)
-        if not eligible:
+        winner = _pick(ctx, _gate(ctx, cands, required, filt.condition, lambda ix: self.key_fits(ix, refs)))
+        if winner is None:
             return None
-        ranked = _rank_smallest(eligible)
-        winner = ranked[0]
-        # Tag the RANKED tail, not eligible[1:]: with eligible unsorted
-        # the winner could tag itself as "lost to <winner>" while the
-        # real loser got no reason (whyNot diagnostics only).
-        for c in ranked[1:]:
-            ctx.tag(c.entry.name, ANOTHER_INDEX_APPLIED, f"lost to {winner.entry.name}")
-
-        out_cols = [c for c in scan.output if c in required] + sorted(
-            c for c in required if "." in c
+        leaf = _index_leaf(ctx, scan, required, winner, files=_index_files(ctx, winner, filt.condition))
+        return Applied(
+            _substitute_scans(node, {id(scan): leaf}), self.base_score * winner.coverage, [winner.entry.name]
         )
-        entry = winner.entry
-        appended, deleted = winner.appended, winner.deleted
-        # Bucket pruning: an equality/IN conjunct on the first indexed
-        # column pins the rows to specific bucket FILES, computed driver-
-        # side with a Spark-compatible murmur3 (planner/mmh3.py) — zero
-        # Spark jobs, composes with a plain parquet read (no bucketed-
-        # table catalog round-trip, no autoBucketedScan sensitivity).  At
-        # 100 TB a point probe reads 1/numBuckets of the index.  Range
-        # predicates read the whole index plainly: the data is sorted by
-        # the indexed columns, so parquet row-group stats do the pruning.
-        pruned: list[str] | None = None
-        if ctx.conf.filter_rule_use_bucket_spec and not appended and self.kind == "CI":
-            # Composite bucket keys prune too (r10): equality/IN
-            # conjuncts pinning EVERY indexed column chain their hashes
-            # like Spark's Murmur3Hash fold — a k-column point probe
-            # still reads numBuckets'th of the index.
-            indexed = entry.derived_properties.get("indexedColumns", [])
-            lits_per_col = [equality_literals(filt.condition, c) for c in indexed]
-            if indexed and all(l is not None for l in lits_per_col):
-                from hyperspace_spark.indexes.covering import bucket_pruned_files_multi
-
-                pruned = bucket_pruned_files_multi(entry, lits_per_col)
-        if pruned is None and entry.derived_properties.get("fileStats"):
-            # Z-order path: per-file min/max ranges of the indexed columns
-            # (tight after z-clustering) prune index files driver-side —
-            # zero Spark jobs (indexes/zorder.py).
-            from hyperspace_spark.indexes.zorder import stats_pruned_files
-
-            pruned = stats_pruned_files(entry, filt.condition)
-
-        def replacement(
-            spark, _e=entry, _cols=out_cols, _a=appended, _d=deleted, _f=pruned, _c=ctx.version_cache
-        ):
-            from hyperspace_spark.indexes.covering import index_scan_df
-
-            return index_scan_df(spark, _e, _cols, appended=_a, deleted=_d, files=_f, cache=_c)
-
-        new_node = _substitute_scan(node, scan, replacement, entry.name)
-        return Applied(new_node, self.base_score * winner.coverage, [entry.name])
 
 
 class ZOrderFilterIndexRule(FilterIndexRule):
@@ -291,7 +307,10 @@ class ZOrderFilterIndexRule(FilterIndexRule):
 
     kind = "ZCI"
     base_score = 60.0
-    require_first_indexed = False
+
+    @staticmethod
+    def key_fits(indexed, refs):
+        return bool(set(indexed) & refs) or (MISSING_INDEXED_COL, "no indexed column in predicate")
 
 
 class FilterOrIndexRule:
@@ -306,13 +325,16 @@ class FilterOrIndexRule:
           ->  union( idx_on_a ⋉ buckets(a=1)  FILTER d1,
                      idx_on_b ⋉ buckets(b=2)  FILTER d2 AND d1 IS NOT TRUE )
 
-    Each disjunct routes to the covering index whose FIRST indexed column
-    it pins with an equality/IN conjunct, reading only that literal's
-    bucket files (driver-side murmur3, zero Spark jobs).  The k-th branch
-    is guarded by `NOT coalesce(d_j, false)` for every earlier disjunct
-    j < k, so a row satisfying several disjuncts surfaces exactly once —
-    no DISTINCT, no shuffle.  At 100 TB an OR of two point probes reads
-    2/numBuckets of two indexes instead of the full table.
+    Each disjunct routes to an index the single-index rules' key test
+    admits for THAT disjunct and whose files it prunes (``_index_files``:
+    bucket files for a CI, min/max stats for a ZCI, so mixed-kind unions
+    compose an equality branch on one index with a range branch on a
+    z-clustered one); a partial index must be implied by the disjunct
+    alone (other disjuncts' rows are served by their own branches).  The
+    k-th branch is guarded by `NOT coalesce(d_j, false)` for every earlier
+    disjunct j < k, so a row satisfying several disjuncts surfaces exactly
+    once — no DISTINCT, no shuffle.  At 100 TB an OR of two point probes
+    reads 2/numBuckets of two indexes instead of the full table.
 
     Declines (plain FilterIndexRule/ZOrderFilterIndexRule still
     compete) when: any branch can't prune (a full-index branch scan is
@@ -330,7 +352,6 @@ class FilterOrIndexRule:
     so it must out-rank ZCI's 60.
     """
 
-    kind = "CI"
     base_score = 65.0  # beats CI-50 and ZCI-60: every branch is pruned
     MAX_BRANCHES = 8  # an OR wider than this is selectivity-free anyway
 
@@ -340,109 +361,51 @@ class FilterOrIndexRule:
         m = match_filter_pattern(node)
         if m is None:
             return None
-        project, filt, scan = m
+        _, filt, scan = m
         cond = filt.condition
         if not isinstance(cond, BoolOp) or cond.op != "or" or not filt.deterministic:
             return None
         disjuncts = split_disjuncts(cond)
         if not (2 <= len(disjuncts) <= self.MAX_BRANCHES):
             return None
-        cands = ctx.for_scan(scan, "CI")
-        z_cands = ctx.for_scan(scan, "ZCI")
-        if not cands and not z_cands:
+        kinds = [(ctx.for_scan(scan, r.kind), r.key_fits) for r in (FilterIndexRule, ZOrderFilterIndexRule)]
+        if not any(cands for cands, _ in kinds) or any("." in r for r in cond.references):
             return None
         required = ir.required_columns(node)
-        if any("." in r for r in cond.references):
-            return None
 
-        plan: list[tuple] = []
-        used: list[str] = []
+        branches = []
         for d in disjuncts:
             if not d.references:
                 return None
             eligible = []
-            for c in cands + z_cands:
-                p = c.entry.derived_properties
-                is_z = c.entry.derived_kind == "ZCI"
-                indexed = p.get("indexedColumns", [])
-                covered = set(indexed) | set(p.get("includedColumns", []))
-                if not indexed:
-                    continue
-                if is_z:
-                    if not set(indexed) & d.references:
-                        continue  # stats prune on any indexed column
-                elif indexed[0] not in d.references:
-                    continue  # bucket pruning needs the first key pinned
-                if not required.issubset(covered):
-                    continue
-                if c.appended:
-                    # A stale index would scan its appended files once
-                    # per BRANCH — decline; plain FilterIndexRule's
-                    # single hybrid union handles this case.
-                    continue
-                if _entry_predicate(c.entry) is not None:
-                    # Partial index: sound only if THIS disjunct implies
-                    # the index predicate (other disjuncts' rows are
-                    # served by their own branches).
-                    from hyperspace_spark.planner.implication import implies
-
-                    if not implies(d, _entry_predicate(c.entry)):
-                        continue
-                if is_z:
-                    # Z-order branch (r10b): per-file min/max stats prune
-                    # RANGE disjuncts — mixed-kind unions compose an
-                    # equality branch on one index with a range branch
-                    # on a z-clustered one.  stats_pruned_files returns
-                    # None unless it actually drops files.
-                    from hyperspace_spark.indexes.zorder import stats_pruned_files
-
-                    pruned = stats_pruned_files(c.entry, d)
-                    if pruned is None:
-                        ctx.tag(c.entry.name, OR_BRANCH_NOT_PRUNABLE, "file stats prune nothing for disjunct")
-                        continue
-                else:
-                    lits_per_col = [equality_literals(d, col) for col in indexed]
-                    if any(l is None for l in lits_per_col):
-                        ctx.tag(c.entry.name, OR_BRANCH_NOT_PRUNABLE, f"no equality on all of {indexed} in disjunct")
-                        continue
-                    from hyperspace_spark.indexes.covering import bucket_pruned_files_multi
-
-                    pruned = bucket_pruned_files_multi(c.entry, lits_per_col)
-                    if pruned is None:
-                        ctx.tag(c.entry.name, OR_BRANCH_NOT_PRUNABLE, "bucket pruning unavailable")
-                        continue
-                eligible.append((c, pruned))
+            for cands, fits in kinds:
+                for c in _gate(ctx, cands, required, d, lambda ix: fits(ix, d.references) is True):
+                    if c.appended:
+                        continue  # its appended files would scan once PER BRANCH
+                    files = _index_files(ctx, c, d)
+                    if files is None:
+                        z = c.entry.derived_kind == "ZCI"
+                        why = "file stats prune nothing for disjunct" if z else "bucket pruning unavailable"
+                        ctx.tag(c.entry.name, OR_BRANCH_NOT_PRUNABLE, why)
+                    else:
+                        eligible.append((len(files), _index_bytes(c), c.entry.name, c, files))
             if not eligible:
                 return None
-            eligible.sort(
-                key=lambda cp: (
-                    len(cp[1]),
-                    sum(f.size for f in cp[0].entry.content_files),
-                    cp[0].entry.name,
-                )
-            )
-            winner, pruned = eligible[0]
-            plan.append((d, winner, pruned))
-            used.append(winner.entry.name)
+            *_, winner, files = min(eligible, key=lambda e: e[:3])
+            branches.append((d.sql, winner, files, _index_leaf(ctx, scan, required, winner, files=files)[0]))
 
-        winners = {id(w.entry) for _, w, _ in plan}
-        if len(winners) == 1 and plan[0][1].entry.derived_kind == "ZCI":
+        if len({id(w.entry) for _, w, _, _ in branches}) == 1 and branches[0][1].entry.derived_kind == "ZCI":
             # Every branch resolved to the same z-order index: one
             # stats-pruned scan of it reads the same files once each —
             # let ZOrderFilterIndexRule serve the whole disjunction.
             return None
-        out_cols = [c for c in scan.output if c in required]
-        coverage = min(w.coverage for _, w, _ in plan)
-        branches = [
-            (d.sql, w.entry, list(pruned), w.deleted) for d, w, pruned in plan
-        ]
+        used = [w.entry.name for _, w, _, _ in branches]
 
-        def replacement(spark, _branches=branches, _cols=out_cols, _c=ctx.version_cache):
-            from hyperspace_spark.indexes.covering import index_scan_df
+        def replacement(spark, _branches=tuple(branches)):
             from hyperspace_spark.telemetry import HyperspaceEvent, emit
 
-            frames = []
-            for i, (dsql, entry, files, deleted) in enumerate(_branches):
+            out = None
+            for i, (dsql, win, files, read) in enumerate(_branches):
                 # Per-branch statistics, consumed by explain(verbose=True):
                 # which index serves the disjunct and how hard it prunes.
                 # Emitted here (replay of the WINNING plan), never from
@@ -450,24 +413,20 @@ class FilterOrIndexRule:
                 emit(
                     HyperspaceEvent(
                         kind="or_branch",
-                        index_name=entry.name,
+                        index_name=win.entry.name,
                         detail=(
-                            f"branch {i}: ({dsql}) -> {entry.name}, "
-                            f"reads {len(files)}/{len(entry.content_files)} index files"
+                            f"branch {i}: ({dsql}) -> {win.entry.name}, "
+                            f"reads {len(files)}/{len(win.entry.content_files)} index files"
                         ),
                     )
                 )
-                f = index_scan_df(spark, entry, _cols, deleted=deleted, files=files, cache=_c)
-                guard = f"({dsql})"
-                for j in range(i):
-                    guard += f" AND (NOT coalesce(({_branches[j][0]}), false))"
-                frames.append(f.filter(guard))
-            out = frames[0]
-            for f in frames[1:]:
-                out = out.unionByName(f)
+                guard = f"({dsql})" + "".join(f" AND (NOT coalesce(({b[0]}), false))" for b in _branches[:i])
+                f = read(spark).filter(guard)
+                out = f if out is None else out.unionByName(f)
             return out
 
-        new_node = _substitute_scan(node, scan, replacement, "+".join(used))
+        coverage = min(w.coverage for _, w, _, _ in branches)
+        new_node = _substitute_scans(node, {id(scan): (replacement, "+".join(used))})
         return Applied(new_node, self.base_score * coverage, sorted(set(used)))
 
 
@@ -522,12 +481,16 @@ class AggBucketedIndexRule:
 
     Pattern: Aggregate <- [Project] <- [Filter] <- Scan with every
     indexed (bucket) column present in the grouping keys and all
-    required columns covered.  Candidates with appended source files are
-    left to FilterIndexRule — the hybrid union erases the bucketing, so
-    the score advantage would be unearned.  Spark's native bucket
-    pruning still applies on top for equality/IN predicates on the key.
-    Score 55·coverage: above FilterIndexRule's 50 (strictly more work
-    eliminated), below ZOrder's 60 and the join rule's 70 ladder.
+    required columns covered; a partial index only under a subtree
+    filter that implies its predicate (an unfiltered aggregate over a
+    row subset would silently drop rows).  Candidates with appended
+    source files are left to FilterIndexRule — the hybrid union erases
+    the bucketing, so the score advantage would be unearned — and so
+    are indexes not registrable as a single bucketed location.  Spark's
+    native bucket pruning still applies on top for equality/IN
+    predicates on the key.  Score 55·coverage: above FilterIndexRule's
+    50 (strictly more work eliminated), below ZOrder's 60 and the join
+    rule's 70 ladder.
     """
 
     def apply(self, node: ir.Node, ctx: RuleContext) -> Applied | None:
@@ -554,56 +517,18 @@ class AggBucketedIndexRule:
             required = ir.required_columns(node)
         except ValueError:
             return None
-
-        eligible: list[Candidate] = []
-        for c in cands:
-            p = c.entry.derived_properties
-            indexed = p.get("indexedColumns", [])
-            covered = set(indexed) | set(p.get("includedColumns", []))
-            if not indexed or not {i.lower() for i in indexed} <= key_cols:
-                continue
-            if not required.issubset(covered):
-                ctx.tag(c.entry.name, MISSING_REQUIRED_COL, f"missing {sorted(required - covered)}")
-                continue
-            if c.appended:
-                continue  # hybrid union erases bucketing; FilterIndexRule's turf
-            if not p.get("tableName") or len(c.entry.index_data_dirs) != 1:
-                continue  # not registrable as a single bucketed location
-            pred = _entry_predicate(c.entry)
-            if pred is not None:
-                # Partial index: usable only when the subtree's own
-                # filter provably implies the predicate (the filter
-                # replays on top of the index scan, so every aggregated
-                # row is in the index); an unfiltered aggregate over a
-                # row subset would silently drop rows.
-                side_cond = linear_side_filter(node.child)
-                ok = False
-                if side_cond is not None:
-                    from hyperspace_spark.planner.implication import implies
-
-                    ok = implies(side_cond, pred)
-                if not ok:
-                    ctx.tag(c.entry.name, PREDICATE_NOT_IMPLIED, "agg/window subtree filter does not imply index predicate")
-                    continue
-            eligible.append(c)
-        if not eligible:
-            return None
-        ranked = _rank_smallest(eligible)
-        winner = ranked[0]
-        for c in ranked[1:]:
-            ctx.tag(c.entry.name, ANOTHER_INDEX_APPLIED, f"lost to {winner.entry.name}")
-
-        out_cols = [c for c in scan.output if c in required] + sorted(
-            c for c in required if "." in c
+        served = _gate(
+            ctx, cands, required, linear_side_filter(node.child),
+            lambda ix: bool(ix) and {i.lower() for i in ix} <= key_cols,
         )
-
-        def replacement(spark, _e=winner.entry, _cols=out_cols, _d=winner.deleted):
-            from hyperspace_spark.indexes.covering import index_scan_df
-
-            return index_scan_df(spark, _e, _cols, deleted=_d, bucketed=True)
-
-        new_node = _substitute_scan(node, scan, replacement, winner.entry.name)
-        return Applied(new_node, 55.0 * winner.coverage, [winner.entry.name])
+        winner = _pick(ctx, [
+            c for c in served
+            if not c.appended and c.entry.derived_properties.get("tableName") and len(c.entry.index_data_dirs) == 1
+        ])
+        if winner is None:
+            return None
+        leaf = _index_leaf(ctx, scan, required, winner, bucketed=True)
+        return Applied(_substitute_scans(node, {id(scan): leaf}), 55.0 * winner.coverage, [winner.entry.name])
 
 
 class WindowBucketedIndexRule(AggBucketedIndexRule):
@@ -632,7 +557,9 @@ class WindowBucketedIndexRule(AggBucketedIndexRule):
 class JoinIndexRule:
     """Equi-join CNF over linear children -> read both sides from covering
     indexes bucketed on the join keys; Spark's planner then drops the
-    Exchange (reference: covering/JoinIndexRule.scala:635-720).
+    Exchange (reference: covering/JoinIndexRule.scala:635-720).  A
+    partial index serves a side only when that side's own filter implies
+    its predicate (otherwise a row-subset index silently drops matches).
 
     Hybrid scan: deleted files are free — the lineage anti-filter
     preserves the bucketed partitioning.  Appended files union a direct
@@ -657,91 +584,46 @@ class JoinIndexRule:
     """
 
     SERVED_JOIN_TYPES = ("inner", "left_semi", "left_anti")
+    base_score = 70.0
 
     def apply(self, node: ir.Node, ctx: RuleContext) -> Applied | None:
         if not isinstance(node, ir.JoinN) or node.join_type not in self.SERVED_JOIN_TYPES:
             return None
         if not node.equi_keys:
             return None
-        lm = match_linear_side(node.left)
-        rm = match_linear_side(node.right)
-        if lm is None or rm is None:
+        sides = [match_linear_side(node.left), match_linear_side(node.right)]
+        if None in sides:
             return None
-        lscan, lreq = lm
-        rscan, rreq = rm
-        lkeys = [a for a, _ in node.equi_keys]
-        rkeys = [b for _, b in node.equi_keys]
-
-        lc = self._eligible(ctx, lscan, lkeys, lreq, node.left)
-        rc = self._eligible(ctx, rscan, rkeys, rreq, node.right)
+        lc, rc = (
+            # Reference: indexed columns must equal the join columns
+            # (JoinColumnFilter, JoinIndexRule.scala:451).
+            _gate(
+                ctx, ctx.for_scan(scan, "CI"), required, linear_side_filter(side),
+                lambda ix, k=keys: set(ix) == set(k)
+                or (NOT_ALL_JOIN_COL_INDEXED, f"indexed {ix} != join keys {sorted(set(k))}"),
+            )
+            for (scan, required), side, keys in zip(sides, (node.left, node.right), zip(*node.equi_keys))
+        )
         if not lc or not rc:
             # One side has eligible indexes but the other has none: tag
             # the orphans (reference FilterReason NO_AVAIL_JOIN_INDEX_PAIR,
             # FilterReason.scala) so whyNot explains the miss.
             for c in lc or rc:
-                ctx.tag(
-                    c.entry.name,
-                    NO_AVAIL_JOIN_INDEX_PAIR,
-                    "no eligible index on the other join side",
-                )
+                ctx.tag(c.entry.name, NO_AVAIL_JOIN_INDEX_PAIR, "no eligible index on the other join side")
             return None
-
         pair = self._best_pair(node, lc, rc)
         if pair is None:
             for c in lc + rc:
                 ctx.tag(c.entry.name, NO_COMPATIBLE_JOIN_INDEX_PAIR, "")
             return None
-        lwin, rwin = pair
-        coverage = min(lwin.coverage, rwin.coverage)
-
-        subs = {}
-        for scan, win, req in ((lscan, lwin, lreq), (rscan, rwin, rreq)):
-            out_cols = [c for c in scan.output if c in req] + sorted(
-                c for c in req if "." in c
-            )
-
-            def replacement(spark, _e=win.entry, _cols=out_cols, _a=win.appended, _d=win.deleted):
-                from hyperspace_spark.indexes.covering import index_scan_df
-
-                return index_scan_df(
-                    spark, _e, _cols, appended=_a, deleted=_d, bucketed=not _a
-                )
-
-            subs[id(scan)] = (replacement, win.entry.name)
-        new_node = _substitute_scans(node, subs)
-        return Applied(new_node, 70.0 + 70.0 * coverage, [lwin.entry.name, rwin.entry.name])
-
-    def _eligible(self, ctx, scan, keys, required, side_node=None):
-        side_cond = linear_side_filter(side_node) if side_node is not None else None
-        out = []
-        for c in ctx.for_scan(scan, "CI"):
-            p = c.entry.derived_properties
-            indexed = p.get("indexedColumns", [])
-            # Reference: indexed columns must equal the join columns
-            # (JoinColumnFilter, JoinIndexRule.scala:451).
-            if set(indexed) != set(keys):
-                ctx.tag(c.entry.name, NOT_ALL_JOIN_COL_INDEXED, f"indexed {indexed} != join keys {sorted(set(keys))}")
-                continue
-            covered = set(indexed) | set(p.get("includedColumns", []))
-            if not required.issubset(covered):
-                ctx.tag(c.entry.name, MISSING_REQUIRED_COL, f"missing {sorted(required - covered)}")
-                continue
-            pred = _entry_predicate(c.entry)
-            if pred is not None:
-                # Partial index: usable only when THIS side's own filter
-                # provably implies the predicate (the filter replays on
-                # top of the index scan); otherwise a row-subset index
-                # silently drops join matches.
-                ok = False
-                if side_cond is not None:
-                    from hyperspace_spark.planner.implication import implies
-
-                    ok = implies(side_cond, pred)
-                if not ok:
-                    ctx.tag(c.entry.name, PREDICATE_NOT_IMPLIED, "join-side filter does not imply index predicate")
-                    continue
-            out.append(c)
-        return out
+        subs = {
+            id(scan): _index_leaf(ctx, scan, required, win, bucketed=not win.appended)
+            for (scan, required), win in zip(sides, pair)
+        }
+        coverage = min(w.coverage for w in pair)
+        return Applied(
+            _substitute_scans(node, subs), self.base_score + 70.0 * coverage, [w.entry.name for w in pair]
+        )
 
     def _best_pair(self, node: ir.JoinN, lc: list[Candidate], rc: list[Candidate]):
         """Compatibility: the indexed-column ORDER must agree with the join
@@ -796,14 +678,17 @@ class BandExistsAggRule(JoinIndexRule):
     rows (an all-NULL group aggregates to NULL, the comparison is NULL,
     no match — exactly the raw rows' behavior).
 
-    Serving mirrors JoinIndexRule: both sides read the covering index
+    Serving is JoinIndexRule's: both sides read the covering index
     co-bucketed on K, so the pre-aggregate (grouped on the bucket key)
-    AND the semi/anti SMJ run Exchange-free.  Scores 80 + 70·cov — above
+    AND the semi/anti SMJ run Exchange-free; this rule only adds the
+    per-key aggregate on the served pair.  Scores 80 + 70·cov — above
     the plain join serving (70 + 70·cov): the aggregate shape strictly
     dominates at any scale.  No reference counterpart
     (covering/JoinIndexRule.scala serves the join as written); this is a
     rewrite the 100 TB target demands.
     """
+
+    base_score = 80.0
 
     def apply(self, node: ir.Node, ctx: RuleContext) -> Applied | None:
         if (
@@ -822,43 +707,13 @@ class BandExistsAggRule(JoinIndexRule):
             # — never wrong rows, but a new runtime error.  Decline; the
             # plain semi/anti serving still applies.
             return None
-        lm = match_linear_side(node.left)
-        rm = match_linear_side(node.right)
-        if lm is None or rm is None:
+        served = super().apply(node, ctx)
+        if served is None:
             return None
-        lscan, lreq = lm
-        rscan, rreq = rm
-        lkeys = [a for a, _ in node.equi_keys]
-        rkeys = [b for _, b in node.equi_keys]
-        lc = self._eligible(ctx, lscan, lkeys, lreq, node.left)
-        rc = self._eligible(ctx, rscan, rkeys, rreq, node.right)
-        if not lc or not rc:
-            return None  # JoinIndexRule's own pass does the whyNot tagging
-        pair = self._best_pair(node, lc, rc)
-        if pair is None:
-            return None
-        lwin, rwin = pair
-        coverage = min(lwin.coverage, rwin.coverage)
-
-        subs = {}
-        for scan, win, req in ((lscan, lwin, lreq), (rscan, rwin, rreq)):
-            out_cols = [c for c in scan.output if c in req] + sorted(
-                c for c in req if "." in c
-            )
-
-            def replacement(spark, _e=win.entry, _cols=out_cols, _a=win.appended, _d=win.deleted):
-                from hyperspace_spark.indexes.covering import index_scan_df
-
-                return index_scan_df(
-                    spark, _e, _cols, appended=_a, deleted=_d, bucketed=not _a
-                )
-
-            subs[id(scan)] = (replacement, win.entry.name)
-        new_node = _substitute_scans(node, subs)
 
         from hyperspace_spark.planner.expr import _quote_if_needed
 
-        gkeys = list(dict.fromkeys(rkeys))
+        gkeys = list(dict.fromkeys(b for _, b in node.equi_keys))
         gcols = [_quote_if_needed(k) for k in gkeys]
         if op == "<>":
             # 'another row with a DIFFERENT value' (the TPC-DS q16/q94
@@ -879,18 +734,17 @@ class BandExistsAggRule(JoinIndexRule):
             aggs = gcols + [f"{agg_fn}({r_expr}) AS __hs_band"]
             out_names = gkeys + ["__hs_band"]
             residual = f"(__hs_r.`__hs_band` {op} {l_expr})"
-        new_node.right = ir.AggregateN(
-            child=new_node.right,
+        join = served.node
+        join.right = ir.AggregateN(
+            child=join.right,
             grouping=gcols,
             aggs=aggs,
             output=out_names,
             references=frozenset(gkeys) | r_refs,
         )
-        new_node.residual_sql = residual
-        new_node.band = None
-        return Applied(
-            new_node, 80.0 + 70.0 * coverage, [lwin.entry.name, rwin.entry.name]
-        )
+        join.residual_sql = residual
+        join.band = None
+        return served
 
 
 # ---------------------------------------------------------------------------
@@ -975,7 +829,7 @@ class DataSkippingIndexRule:
             schema = StructType.fromJson(_json.loads(_scan.data_schema_json))
             return spark.createDataFrame([], schema).select(*_scan.output)
 
-        new_node = _substitute_scan(node, scan, replacement, "+".join(contributors))
+        new_node = _substitute_scans(node, {id(scan): (replacement, "+".join(contributors))})
         return Applied(new_node, 1.0, sorted(contributors))
 
 

@@ -122,14 +122,51 @@ def test_filter_rewrite_with_bucket_spec(spark, hs):
         )
     assert rows_equal(df, fast)
 
-    # And with pruning disabled the rewrite still applies (full read).
-    spark.conf.set("spark.hyperspace.index.filterRule.useBucketSpec", "false")
+    # Two 8-bucket indexes: a point probe on o_orderkey, and an OR of
+    # two point probes that FilterOrIndexRule serves as a union of
+    # bucket-pruned branch reads, one per index.
+    o = table(spark, "orders")
+    for name, key, inc in (
+        ("o_cust8", "o_custkey", "o_orderkey"),
+        ("o_key8", "o_orderkey", "o_custkey"),
+    ):
+        hs.create_index(o, CoveringIndexConfig(name, [key], [inc, "o_totalprice"], num_buckets=8))
+
+    def files_of(name):
+        return len(next(e for e in hs._active_entries(hs.conf()) if e.name == name).content_files)
+
     try:
-        used2, fast2 = accelerated_plan_uses_index(hs, df, "o_cust_idx")
-        assert used2
-        assert rows_equal(df, fast2)
+        point = o.filter(F.col("o_orderkey") == 2).select("o_custkey", "o_totalprice")
+        q_or = o.filter((F.col("o_custkey") == 85) | (F.col("o_orderkey") == 2)).select(
+            "o_orderkey", "o_totalprice"
+        )
+        fast_p, used_p = hs._apply_with_info(point)
+        assert used_p == ["o_key8"], hs.why_not(point)
+        assert 0 < len(set(fast_p.inputFiles())) < files_of("o_key8")
+        fast_or, used_or = hs._apply_with_info(q_or)
+        assert used_or == ["o_cust8", "o_key8"], hs.why_not(q_or)
+        assert rows_equal(q_or, fast_or) and fast_or.count() > 0
+
+        # With pruning disabled every point lookup still rewrites but
+        # reads every file of its index, and no bucket-pruned branch
+        # union serves the OR: one index serves it with a full read.
+        spark.conf.set("spark.hyperspace.index.filterRule.useBucketSpec", "false")
+        try:
+            for q, idx in ((df, "o_cust_idx"), (point, "o_key8")):
+                fast2, used2 = hs._apply_with_info(q)
+                assert used2 == [idx], hs.why_not(q)
+                assert len(set(fast2.inputFiles())) == files_of(idx)
+                assert rows_equal(q, fast2)
+            fast_or2, used_or2 = hs._apply_with_info(q_or)
+            assert len(used_or2) == 1, hs.why_not(q_or)
+            assert len(set(fast_or2.inputFiles())) == files_of(used_or2[0])
+            assert rows_equal(q_or, fast_or2)
+        finally:
+            spark.conf.unset("spark.hyperspace.index.filterRule.useBucketSpec")
     finally:
-        spark.conf.unset("spark.hyperspace.index.filterRule.useBucketSpec")
+        for name in ("o_cust8", "o_key8"):
+            hs.delete_index(name)
+            hs.vacuum_index(name)
 
 
 def test_index_applies_inside_union(spark, hs):

@@ -129,3 +129,17 @@ def test_dataskipping_nested_minmax(spark, tmp_path):
     assert used == ["nds"], hs.why_not(q)
     assert sorted(map(tuple, q.collect())) == sorted(map(tuple, fast.collect()))
     assert len(fast.inputFiles()) < len(df.inputFiles())
+
+
+def test_or_union_carries_nested_leaves(spark, nested_src, tmp_path):
+    """The index-OR union reads each branch through the shared index
+    leaf, which rebuilds projected nested leaves: a nested column above
+    the disjunction is served by the union instead of failing replay."""
+    src = spark.read.parquet(nested_src)
+    hs2 = Hyperspace(spark, system_path=str(tmp_path / "idx"))
+    hs2.create_index(src, CoveringIndexConfig("or_a", ["c1"], ["c2", "nested.id"], num_buckets=4))
+    hs2.create_index(src, CoveringIndexConfig("or_b", ["c2"], ["c1", "nested.id"], num_buckets=4))
+    q = src.filter((F.col("c1") == 5) | (F.col("c2") == "guid0007")).select("c1", "nested.id")
+    fast, used = hs2._apply_with_info(q)
+    assert used == ["or_a", "or_b"], hs2.why_not(q)
+    assert rows_equal(q, fast)

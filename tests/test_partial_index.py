@@ -457,3 +457,44 @@ def test_partial_index_serves_join_and_agg_when_side_filter_implies(spark, tmp_p
     plan = out3._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     assert "Exchange" not in final, final  # bucketed read: shuffle-free agg
+    # window partitioned on the bucket column: served under an implying
+    # filter, declined without one
+    from pyspark.sql import Window
+
+    def latest(frame):
+        w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc())
+        return frame.select("o_custkey", "o_totalprice", F.row_number().over(w).alias("rn"))
+
+    w1 = latest(o.filter("o_orderpriority = '1-URGENT'"))
+    out4, used4 = hs._apply_with_info(w1)
+    assert used4 == ["pa_o"], hs.why_not(w1)
+    assert rows_equal(w1, out4)
+    w2 = latest(o)
+    out5, used5 = hs._apply_with_info(w2)
+    assert "pa_o" not in used5
+    assert "PREDICATE_NOT_IMPLIED" in hs.why_not(w2)
+    assert rows_equal(w2, out5)
+
+    # band EXISTS self-join on the bucket column: the per-key aggregate
+    # rewrite serves both sides when each side's filter implies the
+    # predicate; an unfiltered probe side declines
+    def dwarfed(probe):
+        a = o.filter("o_orderpriority = '1-URGENT'").alias("a")
+        return a.join(
+            probe.alias("b"),
+            (F.col("a.o_custkey") == F.col("b.o_custkey"))
+            & (F.col("b.o_totalprice") > F.col("a.o_totalprice") * 1.5),
+            "left_semi",
+        ).select(F.col("a.o_custkey").alias("c"), F.col("a.o_totalprice").alias("t"))
+
+    b1 = dwarfed(o.filter("o_orderpriority = '1-URGENT'"))
+    out6, used6 = hs._apply_with_info(b1)
+    assert used6 == ["pa_o", "pa_o"], hs.why_not(b1)
+    assert "__hs_band" in out6._jdf.queryExecution().analyzed().toString()
+    assert rows_equal(b1, out6) and out6.count() > 0
+    b2 = dwarfed(o)
+    out7, used7 = hs._apply_with_info(b2)
+    assert used7.count("pa_o") <= 1, used7  # only the filtered side may read it
+    assert "__hs_band" not in out7._jdf.queryExecution().analyzed().toString()
+    assert "PREDICATE_NOT_IMPLIED" in hs.why_not(b2)
+    assert rows_equal(b2, out7)

@@ -406,6 +406,37 @@ def test_internal_frames_are_not_planned_as_user_queries(spark, tmp_path, monkey
         spark.conf.unset("spark.hyperspace.apply.cacheTtlSeconds")
 
 
+def test_hs_sql_plans_once(indexed, spark, monkeypatch):
+    """``hs.sql`` plans its query exactly once, on an enabled session
+    (where ``spark.sql`` is itself routed) and on a disabled one."""
+    hs, src = indexed
+    calls = []
+    orig = Hyperspace._apply_with_info
+
+    def counting(self, df, *args, **kwargs):
+        calls.append(df)
+        return orig(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(Hyperspace, "_apply_with_info", counting)
+    spark.read.parquet(src).createOrReplaceTempView("sql_once_t")
+    q = "SELECT k, v FROM sql_once_t WHERE g = 5"
+    want = sorted((k, k * 2.5) for k in range(5, 2000, 97))
+    spark.conf.set("spark.hyperspace.apply.cacheTtlSeconds", "0")
+    try:
+        for enabled in (True, False):
+            if enabled:
+                hs.enable()
+            calls.clear()
+            with apply_events() as used:
+                rows = hs.sql(q).collect()
+            hs.disable()
+            assert sorted(map(tuple, rows)) == want
+            assert used == [["sess_idx"]], (enabled, used)
+            assert len(calls) == 1, (enabled, len(calls))
+    finally:
+        spark.conf.unset("spark.hyperspace.apply.cacheTtlSeconds")
+
+
 def test_disable_restores_every_patched_attribute(indexed, spark):
     """enable() then disable() puts back every class attribute the
     routing replaced and un-shadows the session's ``sql``/``newSession``."""
